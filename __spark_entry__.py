@@ -43,14 +43,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries
 # ---------------------------------------------------------------------------
 
-_IVF_CACHE: dict[str, str] = {}
-
-
 def _ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = _IVF_CACHE.setdefault(sf_dir, tempfile.mkdtemp(prefix="oasys_ivf_entry_"))
-    return vec.ivf_knn(spark, sf_dir, work_dir=work)
+    return vec.ivf_knn(spark, sf_dir)
 
 
 def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:

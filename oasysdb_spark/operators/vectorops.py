@@ -17,11 +17,18 @@ Plan shapes (why these scale):
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from oasysdb_spark.sources.tables import read_parquet_cached
+from oasysdb_spark.sources.tables import (
+    memo,
+    prepared_plan,
+    read_parquet_cached,
+    spread_scan,
+)
 
 from oasysdb_spark.functions.vectors import (
     const_distance,
@@ -52,84 +59,60 @@ def round_dist(c, scale: int = 6):
     return F.round(F.round(c * unit).cast("bigint") / unit, scale) + F.lit(0.0)
 
 
-_EMB_PROBE_MEMO: dict = {}
-# bound for the probe memo (r16, r15 ADVICE): a serving workload issuing
-# many DISTINCT query-input fetches must not grow the memo without limit;
-# simple FIFO eviction — the working set is a handful of fixture vectors.
-_EMB_PROBE_MEMO_MAX = 256
-
-
-def _emb_memo_put(key, value) -> None:
-    if len(_EMB_PROBE_MEMO) >= _EMB_PROBE_MEMO_MAX:
-        _EMB_PROBE_MEMO.pop(next(iter(_EMB_PROBE_MEMO)))
-    _EMB_PROBE_MEMO[key] = value
-
-
-def _embeddings_sig(sf_dir: str):
-    """Best-effort signature of the local embeddings fixture (shared
-    ``_local_files_sig`` machinery); ``None`` disables memoization for
-    non-local or unreadable paths, so callers fall back to a fresh
-    probe. A rewritten fixture at the same path changes mtime/size and
-    misses the memo — the guard that keeps the in-process memo safe for
-    tests that overwrite tmp fixtures."""
-    import os
-
-    from oasysdb_spark.sources.tables import _local_files_sig
-
-    return _local_files_sig(os.path.join(sf_dir, "embeddings.parquet"))
-
-
 def query_embedding(
     spark: SparkSession, sf_dir: str, query_vec_id: int
 ) -> "list[float] | None":
     """One fixture embedding as a Python list (or ``None`` if the id is
     absent), fetched driver-side — the moral equivalent of the reference
-    receiving the query vector in the RPC. Memoized per (fixture file
-    signature, vec_id): every ANN serving entry pays a full-scan
-    ``first()`` for its query INPUT per invocation (~0.1 s of driver +
-    job cost each, r15 gap profiling), and a resident serving system
-    holds the query batch in memory — the same amortization bench.py's
-    ``_ANN_STATE`` already applies to its query vectors. The timed
-    serving path still computes every distance from the parquet inputs;
-    only this input fetch is amortized, and the mtime+size signature
-    makes a rewritten fixture miss."""
-    sig = _embeddings_sig(sf_dir)
-    if sig is not None:
-        # abspath-keyed, signature in the value (rewrites replace, not
-        # accumulate); stored as a TUPLE and returned as a fresh list
-        # so a caller that mutates its query vector in place cannot
-        # corrupt the memo (r15 review)
-        key = (sig[0], int(query_vec_id))
-        hit = _EMB_PROBE_MEMO.get(key)
-        if hit is not None and hit[0] == sig:
-            return None if hit[1] is None else list(hit[1])
-    row = (
-        load_embeddings(spark, sf_dir)
-        .where(F.col("vec_id") == query_vec_id)
-        .select("embedding")
-        .first()
+    receiving the query vector in the RPC. Memoized: every ANN serving
+    entry pays a full-scan ``first()`` for its query INPUT per invocation
+    (~0.1 s of driver + job cost each, r15 gap profiling), and a resident
+    serving system holds the query batch in memory — the same
+    amortization bench.py's ``_ANN_STATE`` already applies to its query
+    vectors. The timed serving path still computes every distance from
+    the parquet inputs; only this input fetch is amortized."""
+
+    def fetch():
+        row = (
+            load_embeddings(spark, sf_dir)
+            .where(F.col("vec_id") == query_vec_id)
+            .select("embedding")
+            .first()
+        )
+        return None if row is None else tuple(float(x) for x in row["embedding"])
+
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    # stored as a TUPLE and returned as a fresh list so a caller that
+    # mutates its query vector in place cannot corrupt the memo
+    val = memo(
+        spark, "embedding", (os.path.abspath(path), int(query_vec_id)),
+        (path,), fetch,
     )
-    val = None if row is None else tuple(float(x) for x in row["embedding"])
-    if sig is not None:
-        _emb_memo_put(key, (sig, val))
     return None if val is None else list(val)
 
 
 def embedding_dim(spark: SparkSession, sf_dir: str) -> int:
-    """Dimension of the embeddings fixture (any row), memoized with the
-    same file-signature guard as :func:`query_embedding`."""
-    sig = _embeddings_sig(sf_dir)
-    if sig is not None:
-        key = (sig[0], "__dim__")
-        hit = _EMB_PROBE_MEMO.get(key)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-    dim = len(
-        load_embeddings(spark, sf_dir).select("embedding").first()["embedding"]
+    """Dimension of the embeddings fixture (any row), memoized like
+    :func:`query_embedding`."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    return memo(
+        spark, "embedding", (os.path.abspath(path), "dim"), (path,),
+        lambda: len(
+            load_embeddings(spark, sf_dir).select("embedding").first()["embedding"]
+        ),
     )
-    if sig is not None:
-        _emb_memo_put(key, (sig, dim))
-    return dim
+
+
+def _default_work_dir(spark: SparkSession, sf_dir: str, prefix: str, params) -> str:
+    """The session's temp work dir for an index over ``sf_dir``'s
+    embeddings with layout ``params``, one per embeddings signature."""
+    import tempfile
+
+    return memo(
+        spark, "workdir", (prefix, os.path.abspath(sf_dir), params),
+        (os.path.join(sf_dir, "embeddings.parquet"),),
+        lambda: tempfile.mkdtemp(prefix=prefix),
+    )
 
 
 def _query_vec_list(
@@ -243,8 +226,6 @@ def knn_batched(
     retrieve their top-k neighbors (excluding self). Broadcast queries ×
     window top-k — the distributed analog of running the reference's query
     loop once per request, amortized into one job."""
-    from oasysdb_spark.sources.tables import spread_scan
-
     embs = load_embeddings(spark, sf_dir)
     # the tiny query side reads the raw scan; the corpus side of the
     # broadcast fan-out is spread (r15, guide §2.1): the distance stage
@@ -280,8 +261,6 @@ def hard_negative_mining(
     ``(query_id, vec_id, distance, rn)``."""
     from oasysdb_spark.functions.vectors import distance_expr
     from oasysdb_spark.operators.vectorops import load_embeddings, round_dist
-
-    from oasysdb_spark.sources.tables import spread_scan
 
     embs = load_embeddings(spark, sf_dir)
     # same shape as knn_batched (r15): tiny query side off the raw
@@ -350,19 +329,16 @@ def ivf_knn(
     demonstrating the partitioned-index plumbing; small ``probes`` is the
     approximate scale path benchmarked separately.
 
-    Prepared-plan ledger (r16, judge task 3): the serving body is
+    ``work_dir=None`` builds the index once per session into a temp dir.
+    A rewrite of the embeddings builds into a fresh dir and leaves the
+    replaced one on disk, because frames built on it may still run.
+
+    The serving body is a prepared plan (r16, judge task 3): it is
     pure-lazy (the index tables are parquet reads; the query vector is
     the memoized input fetch), so a repeat query over an unchanged index
-    reuses the constructed frame — ~0.33 s of Database.open +
-    py4j construction per call, measured warm. The index/records/
-    centroids signatures guard staleness; every action still scans the
-    index parquet."""
-    import os
-    import tempfile
-
-    from oasysdb_spark.sources.tables import prepared_plan
-
-    work_dir = work_dir or tempfile.mkdtemp(prefix="oasys_ivf_")
+    skips ~0.33 s of Database.open + py4j construction per call,
+    measured warm."""
+    work_dir = work_dir or _default_work_dir(spark, sf_dir, "oasys_ivf_", ())
     return prepared_plan(
         spark,
         "ivf_knn",
@@ -386,8 +362,6 @@ def _ivf_knn_build(
 ) -> DataFrame:
     # work_dir is always resolved by the ivf_knn wrapper (it is part of
     # the ledger key and signature paths)
-    import os
-
     from oasysdb_spark.core.database import Database, RECORD_SCHEMA
     from oasysdb_spark.index.ivf import build_index
 
@@ -581,8 +555,6 @@ def build_lsh_layout(
     write); at 100 TB this is the train-free analog of the IVF build.
     Multiple salted tables trade disk for recall: candidates are the
     union across tables."""
-    import os
-
     for t in range(num_tables):
         path = os.path.join(work_dir, f"t{t}")
         if os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -619,19 +591,17 @@ def lsh_knn_indexed(
     paths; more tables raise recall (union of independent candidate
     sets) at proportional disk/probe cost.
 
-    Prepared-plan ledger (r16, judge task 3): pure-lazy serving body
-    (bucket-pruned parquet reads + the memoized query-input fetch), so a
-    repeat query over an unchanged layout reuses the constructed frame
-    (~0.26 s of per-table schema inference + py4j construction, measured
-    warm). The layout directory's signature guards staleness."""
-    import tempfile
+    ``work_dir=None`` builds the layout once per session into a temp dir.
+    A rewrite of the embeddings builds into a fresh dir and leaves the
+    replaced one on disk, because frames built on it may still run.
 
-    from oasysdb_spark.sources.tables import prepared_plan
-
+    The serving body is a prepared plan (r16, judge task 3): bucket-pruned
+    parquet reads + the memoized query-input fetch, so a repeat query
+    over an unchanged layout skips ~0.26 s of per-table schema inference
+    + py4j construction, measured warm."""
     if work_dir is None:
-        key = (sf_dir, num_planes, scale, num_tables)
-        work_dir = _LSH_LAYOUT_CACHE.setdefault(
-            key, tempfile.mkdtemp(prefix="oasys_lsh_")
+        work_dir = _default_work_dir(
+            spark, sf_dir, "oasys_lsh_", (num_planes, scale, num_tables)
         )
     return prepared_plan(
         spark,
@@ -656,9 +626,6 @@ def _lsh_knn_indexed_build(
     num_tables: int,
     work_dir: str,
 ) -> DataFrame:
-    import os
-    import tempfile
-
     embs = load_embeddings(spark, sf_dir)
     qvec = query_embedding(spark, sf_dir, query_vec_id)
     if qvec is None:
@@ -688,9 +655,6 @@ def _lsh_knn_indexed_build(
         .orderBy("distance", "vec_id")
         .limit(k)
     )
-
-
-_LSH_LAYOUT_CACHE: dict = {}
 
 
 def sq_reconstruction_stats(

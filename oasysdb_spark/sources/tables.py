@@ -10,75 +10,114 @@ identical values.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 NANO_TS_TABLES = {"events": "ts"}
 
 
-_READ_MEMO: dict = {}
+_MEMO: dict = {}  # (session, kind, key) -> (signatures, value), FIFO order
+_MEMO_STATS: dict = {}  # kind -> {"hits": n, "misses": n}
+_MEMO_MAX = 256
+
+
+def memo(spark, kind: str, key, sig_paths, compute):
+    """The one in-process session memo: ``compute()`` once per
+    ``(spark, kind, key)`` while the files under ``sig_paths`` keep their
+    signature. Serves repeated calls in one interactive session from state
+    the session already holds, with explicit invalidation (the reuse
+    contract of "Incremental Based Framework for Efficient Top-K Similarity
+    Search in Interactive Data Analysis Sessions", EDBT 2020).
+
+    - It holds plans, file-derived metadata and work dirs only, never data:
+      every action over a memoized plan still scans its inputs.
+    - Entries are session-scoped: a frame is bound to the session that
+      made it, and ``newSession()`` carries its own confs. Conf-sensitive
+      callers put those confs in ``key``.
+    - The ``_local_files_sig`` signatures are read AFTER ``compute``
+      returns, so a compute that writes its own inputs (an index build
+      into a work dir) is stored against what it wrote. A ``None``
+      signature (non-local or unreadable path) means no memoization.
+    - At most ``_MEMO_MAX`` entries across all kinds, evicted FIFO.
+    - A session's entries are dropped when that session is positively
+      stopped; a session that cannot be probed (Spark Connect) is kept.
+    """
+    full = (spark, kind, key)
+    stats = _MEMO_STATS.setdefault(kind, {"hits": 0, "misses": 0})
+    hit = _MEMO.get(full)
+    if hit is not None and hit[0] == _sigs(sig_paths):
+        stats["hits"] += 1
+        return hit[1]
+    stats["misses"] += 1
+    _purge_stopped_sessions()
+    value = compute()
+    sigs = _sigs(sig_paths)
+    _MEMO.pop(full, None)
+    if sigs is not None:
+        while len(_MEMO) >= _MEMO_MAX:
+            _MEMO.pop(next(iter(_MEMO)), None)
+        _MEMO[full] = (sigs, value)
+    return value
+
+
+def memo_stats() -> dict:
+    """Per-kind hit/miss counters of :func:`memo`, as a copy."""
+    return {kind: dict(c) for kind, c in _MEMO_STATS.items()}
+
+
+def _sigs(paths):
+    sigs = tuple(_local_files_sig(p) for p in paths)
+    return None if any(s is None for s in sigs) else sigs
+
+
+def _purge_stopped_sessions() -> None:
+    """Drop the entries of positively stopped sessions (runs on misses)."""
+    for s in {k[0] for k in list(_MEMO)}:
+        try:
+            jsc = s._sc._jsc
+        except Exception:  # no classic context to probe (Spark Connect)
+            continue
+        try:
+            stopped = jsc is None or jsc.sc().isStopped()
+        except Exception:
+            stopped = False
+        if stopped:
+            for k in [k for k in list(_MEMO) if k[0] is s]:
+                _MEMO.pop(k, None)
 
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     """Memoized ``spark.read.parquet``: every call re-infers the schema
     from parquet footers, ~90-115 ms of driver time (r15 gap profiling
     — the q-series queries load 5-6 tables each, so this was the single
-    largest per-query driver cost in the bench). DataFrames are
-    immutable and reusable within a SparkContext, so the loaded frame
-    is memoized per (application id, mtime_ns+size file signature): a
-    rewritten or appended path changes the signature and re-reads;
-    non-local paths skip memoization. This caches a PLAN, never data —
-    every action over the frame still scans the parquet inputs."""
-    sig = _local_files_sig(path)
-    if sig is None:
-        return spark.read.parquet(path)
-    # keyed by the SESSION object, not the applicationId (r15 review: a
-    # newSession() shares the appId but carries its own confs, and a
-    # frame is bound to the session that created it), and by abspath
-    # with the signature stored in the VALUE — a rewritten path
-    # replaces its entry instead of accumulating one per version.
-    # The one READ-time conf a caller flips per table
-    # (nanosAsLong for the events fixture) is part of the key (r16,
-    # r15 ADVICE): whichever caller reads a conf-sensitive path first
-    # must not pin its frame shape for every later caller.
+    largest per-query driver cost in the bench). The one read-time conf
+    a caller flips per table (nanosAsLong for the events fixture) is in
+    the key, so whichever caller reads that path first does not pin its
+    frame shape for every later caller."""
     try:
         nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
     except Exception:
         nanos = None
-    key = (spark, sig[0], nanos)
-    hit = _READ_MEMO.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    _purge_stopped_sessions()
-    df = spark.read.parquet(path)
-    _READ_MEMO[key] = (sig, df)
-    return df
-
-
-_PLAN_MEMO: dict = {}
-# FIFO bound (r16 review): parameter-keyed serving entries (ivf/lsh knn)
-# would otherwise pin one analyzed plan per distinct query forever in a
-# many-distinct-query serving session.
-_PLAN_MEMO_MAX = 64
+    return memo(
+        spark, "read", (os.path.abspath(path), nanos), (path,),
+        lambda: spark.read.parquet(path),
+    )
 
 
 def prepared_plan(spark, name, params, sig_paths, builder):
     """Prepared-statement ledger for PURE-LAZY query plans (r16, judge
-    task 3): memoize the constructed DataFrame per (session, name,
-    params) with the involved parquet paths' mtime+size signatures as
-    the staleness guard. A repeat invocation in a long-lived serving
-    session skips the py4j Column-construction chatter (~0.25-0.65 s per
-    query at 128-expression plan sizes — the dominant per-query driver
-    cost once table loads were memoized in r15) and returns the SAME
-    immutable lazy frame; every action over it still scans the parquet
-    inputs, so this caches a PLAN, never data — the read_parquet_cached
-    class.
+    task 3), a :func:`memo` of kind ``plan`` keyed by (name, params). A
+    repeat invocation in a long-lived serving session skips the py4j
+    Column-construction chatter (~0.25-0.65 s per query at 128-expression
+    plan sizes — the dominant per-query driver cost once table loads were
+    memoized in r15).
 
     ONLY register plans with no cache()/localCheckpoint/eager collects
     inside: memoizing a cache-bearing plan would let a second invocation
     reuse blocks the first one populated, which is cross-call result
-    caching, not plan preparation. A rewritten input path changes its
-    signature and rebuilds.
+    caching, not plan preparation.
 
     What is stored is the ANALYZED LOGICAL plan, and every hit wraps it
     in a FRESH Dataset (~0.5 ms): physical planning re-runs per
@@ -88,9 +127,6 @@ def prepared_plan(spark, name, params, sig_paths, builder):
     memoized the DataFrame object itself; its once-materialized
     QueryExecution then served stale physical-plan snapshots to
     conf-flipping callers — caught by the plan-shape tests.)"""
-    sigs = tuple(_local_files_sig(p) for p in sig_paths)
-    if any(s is None for s in sigs):
-        return builder()
     # analysis-RESOLVED confs are baked into the stored plan (the
     # analyzer resolves type coercion / timestamp semantics), so the
     # two that could plausibly flip mid-session are part of the key
@@ -103,20 +139,20 @@ def prepared_plan(spark, name, params, sig_paths, builder):
         )
     except Exception:
         aconf = None
-    key = (spark, name, params, aconf)
-    hit = _PLAN_MEMO.get(key)
-    if hit is not None and hit[0] == sigs:
-        jplan = hit[1]
-    else:
-        df = builder()
-        try:
-            jplan = df._jdf.queryExecution().analyzed()
-        except Exception:  # Connect or exotic frames: no ledger
-            return df
-        if len(_PLAN_MEMO) >= _PLAN_MEMO_MAX:
-            _PLAN_MEMO.pop(next(iter(_PLAN_MEMO)))
-        _PLAN_MEMO[key] = (sigs, jplan)
-        return df
+    built = []
+
+    def compute():
+        built.append(builder())
+        return built[0]._jdf.queryExecution().analyzed()
+
+    try:
+        jplan = memo(spark, "plan", (name, params, aconf), sig_paths, compute)
+    except Exception:
+        if not built:  # the builder itself failed
+            raise
+        return built[0]  # Connect or exotic frames: no ledger
+    if built:
+        return built[0]
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         spark._jsparkSession, jplan
     )
@@ -151,23 +187,6 @@ def prepared(name: str):
     return deco
 
 
-def _purge_stopped_sessions() -> None:
-    """Drop memo buckets owned by stopped sessions (r16, r15 ADVICE:
-    the memo held strong references to stopped sessions' JVM-backed
-    plans forever in long-lived multi-session processes). Runs on memo
-    misses only — the memo is small (one entry per fixture table per
-    live session), so the sweep is a few attribute probes."""
-    for memo in (_READ_MEMO, _PLAN_MEMO):
-        for key in list(memo):
-            s = key[0]
-            try:
-                dead = s._sc._jsc is None or s._sc._jsc.sc().isStopped()
-            except Exception:
-                dead = True
-            if dead:
-                memo.pop(key, None)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Date extraction/rendering must agree with the DuckDB oracle (which is
     # timezone-naive); pin the session to UTC regardless of who built it.
@@ -182,9 +201,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_SPREAD_MEMO: dict = {}
-
-
 def _local_files_sig(path: str):
     """mtime_ns+size signature of a local parquet file/dir, or None
     (non-local/unreadable → memoization disabled). Directories are
@@ -192,8 +208,6 @@ def _local_files_sig(path: str):
     updates only the leaf directory's mtime, so a top-level-only scan
     would return a stale signature and serve a memoized frame over a
     changed dataset)."""
-    import os
-
     try:
         if os.path.isfile(path):
             # st_ino tightens the bare-file guard (r16, r15 ADVICE): on
@@ -299,10 +313,8 @@ def spread_scan(
     analysis+planning ``df.rdd`` probe, ~40-70 ms, on every memo miss).
     Split planning depends only on the files, the reader split confs
     and the parallelism floor, never on the projected columns or pushed
-    filters, so the count is memoized per (abspath, parallelism, split
-    confs) — the conf values are IN the key (r15 ADVICE: a session with
-    different reader confs must not be served a stale count) and the
-    mtime_ns+size signature in the value makes a rewritten path miss.
+    filters. The count is recomputed per call: the file listing it needs
+    is the whole cost, so memoizing the arithmetic would save nothing.
     Paths without ``key_path`` (non-scan frames, e.g. a checkpointed
     hub) keep the ``df.rdd`` probe fallback.
 
@@ -321,71 +333,40 @@ def spread_scan(
     no-ops at real corpus split counts."""
     par = spark.sparkContext.defaultParallelism
     want = max(1, par // 4) if rescue_only else par
-    if key_path is not None:
-        sig = _local_files_sig(key_path)
-        if sig is not None:
-            max_part = _conf_bytes(
-                spark, "spark.sql.files.maxPartitionBytes", 128 << 20
-            )
-            open_cost = _conf_bytes(
-                spark, "spark.sql.files.openCostInBytes", 4 << 20
-            )
-            min_pn = _conf_bytes(spark, "spark.sql.files.minPartitionNum", 0)
-            if min_pn <= 0:
-                min_pn = _conf_bytes(
-                    spark, "spark.sql.leafNodeDefaultParallelism", 0
-                )
-            if min_pn <= 0:
-                min_pn = par
-            # abspath-keyed with the signature in the value (r15
-            # review): a rewritten path replaces its entry rather than
-            # growing the memo one entry per version
-            memo_key = (sig[0], par, max_part, open_cost, min_pn)
-            hit = _SPREAD_MEMO.get(memo_key)
-            if hit is not None and hit[0] == sig:
-                n = hit[1]
-            else:
-                if isinstance(sig[1], tuple):  # directory listing
-                    # mirror InMemoryFileIndex: skip a file when ANY
-                    # path component is _/. -prefixed (staging dirs,
-                    # _SUCCESS, .crc), keep every other DATA file
-                    # regardless of suffix (r16 review: a suffix filter
-                    # dropped non-Spark part files and counted files
-                    # under _temporary/)
-                    import os as _os
-
-                    sizes = []
-                    for e in sig[1]:
-                        parts = [
-                            c
-                            for c in (e[0].split(_os.sep) + [e[1]])
-                            if c and c != "."
-                        ]
-                        if any(c.startswith(("_", ".")) for c in parts):
-                            continue
-                        sizes.append(e[3])
-                else:  # bare file: (abspath, mtime_ns, size, ino)
-                    sizes = [sig[2]]
-                if not sizes:
-                    # nothing visible to estimate from: fall back to
-                    # the real probe rather than guessing 0 splits
-                    sizes = None
-                if sizes is not None:
-                    n = _estimate_splits(sizes, max_part, open_cost, min_pn)
-                    _SPREAD_MEMO[memo_key] = (sig, n)
-                else:
-                    try:
-                        n = df.rdd.getNumPartitions()
-                    except Exception:
-                        return df
-            return df.repartition(par) if n < want else df
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if n < want:
-        return df.repartition(par)
-    return df
+    sig = None if key_path is None else _local_files_sig(key_path)
+    n = None
+    if sig is not None:
+        max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+        open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20)
+        min_pn = _conf_bytes(spark, "spark.sql.files.minPartitionNum", 0)
+        if min_pn <= 0:
+            min_pn = _conf_bytes(spark, "spark.sql.leafNodeDefaultParallelism", 0)
+        if min_pn <= 0:
+            min_pn = par
+        if isinstance(sig[1], tuple):  # directory listing
+            # mirror InMemoryFileIndex: skip a file when ANY path
+            # component is _/. -prefixed (staging dirs, _SUCCESS, .crc),
+            # keep every other DATA file regardless of suffix (r16
+            # review: a suffix filter dropped non-Spark part files and
+            # counted files under _temporary/)
+            sizes = []
+            for e in sig[1]:
+                parts = [c for c in (e[0].split(os.sep) + [e[1]]) if c and c != "."]
+                if any(c.startswith(("_", ".")) for c in parts):
+                    continue
+                sizes.append(e[3])
+        else:  # bare file: (abspath, mtime_ns, size, ino)
+            sizes = [sig[2]]
+        # nothing visible to estimate from: fall back to the real probe
+        # rather than guessing 0 splits
+        if sizes:
+            n = _estimate_splits(sizes, max_part, open_cost, min_pn)
+    if n is None:
+        try:
+            n = df.rdd.getNumPartitions()
+        except Exception:
+            return df
+    return df.repartition(par) if n < want else df
 
 
 FORMATS = ("parquet", "csv", "json", "orc")

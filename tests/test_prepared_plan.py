@@ -24,11 +24,16 @@ def test_prepared_plan_hit_returns_equal_results_and_fresh_planning(
             .agg(F.sum("id").alias("s"))
         )
 
+    def plan_hits():
+        return tables_mod.memo_stats().get("plan", {}).get("hits", 0)
+
     a = tables_mod.prepared_plan(spark, "t_hit", (path,), (path,), build)
     rows_a = sorted(map(tuple, a.collect()))
+    hits = plan_hits()
     b = tables_mod.prepared_plan(spark, "t_hit", (path,), (path,), build)
     rows_b = sorted(map(tuple, b.collect()))
     assert calls["n"] == 1, "second call must be a ledger hit"
+    assert plan_hits() == hits + 1
     assert rows_a == rows_b
     # the hit is a FRESH Dataset over the stored analyzed plan, so a
     # physical-planning conf flip is honored (the first-cut bug served
@@ -38,6 +43,7 @@ def test_prepared_plan_hit_returns_equal_results_and_fresh_planning(
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         c = tables_mod.prepared_plan(spark, "t_hit", (path,), (path,), build)
         assert calls["n"] == 1
+        assert plan_hits() == hits + 2
         plan = c._jdf.queryExecution().executedPlan().toString()
         assert "AdaptiveSparkPlan" not in plan
     finally:
@@ -79,12 +85,12 @@ def test_plan_memo_is_bounded(spark, tmp_path):
 
     path = str(tmp_path / "t3")
     spark.range(5).write.parquet(path)
-    for i in range(tables_mod._PLAN_MEMO_MAX + 10):
+    for i in range(tables_mod._MEMO_MAX + 10):
         tables_mod.prepared_plan(
             spark,
             "t_bound",
             (path, i),
             (path,),
-            lambda: spark.read.parquet(path),
+            lambda: tables_mod.read_parquet_cached(spark, path),
         )
-    assert len(tables_mod._PLAN_MEMO) <= tables_mod._PLAN_MEMO_MAX
+    assert len(tables_mod._MEMO) <= tables_mod._MEMO_MAX

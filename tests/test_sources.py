@@ -2161,11 +2161,10 @@ def test_split_estimator_matches_spark_planning(spark, tmp_path):
 
 
 def test_spread_scan_memo_tracks_file_signature(spark, tmp_path):
-    """spread_scan's key_path memo (r15): the split-count probe is
-    memoized per (file signature, parallelism), the memoized decision
-    matches a fresh probe, and REWRITING the path invalidates the memo
-    (mtime/size change) so a stale count can never misroute the
-    conditional repartition."""
+    """spread_scan's key_path decision (r15): the split count computed
+    from the file signature matches a fresh probe, and REWRITING the path
+    is seen on the next call (mtime/size change) so a stale count can
+    never misroute the conditional repartition."""
     from pyspark.sql import functions as F
 
     from oasysdb_spark.sources import tables as tables_mod
@@ -2179,36 +2178,24 @@ def test_spread_scan_memo_tracks_file_signature(spark, tmp_path):
     df = spark.read.parquet(path)
     fresh = tables_mod.spread_scan(spark, df)
     sig = tables_mod._local_files_sig(path)
-    # r16: the split confs are part of the key (a session with different
-    # reader confs must never be served a stale count — r15 ADVICE)
-    key = (
-        sig[0],
-        par,
-        tables_mod._conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20),
-        tables_mod._conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20),
-        par,
-    )
-    assert sig is not None and key not in tables_mod._SPREAD_MEMO
+    assert sig is not None
 
     keyed = tables_mod.spread_scan(spark, df, key_path=path)
-    assert tables_mod._SPREAD_MEMO[key][0] == sig
-    # memoized decision == fresh probe decision (both spread a 1-split
+    # keyed decision == fresh probe decision (both spread a 1-split
     # local file when the session has more cores)
     assert keyed.rdd.getNumPartitions() == fresh.rdd.getNumPartitions()
-    # second call hits the memo and still returns the same shape
+    # a second call returns the same shape
     again = tables_mod.spread_scan(spark, df, key_path=path)
     assert again.rdd.getNumPartitions() == keyed.rdd.getNumPartitions()
 
-    # rewrite the path with MORE files than cores: the signature changes,
-    # the memo misses, and the fresh probe sees the new layout (no
-    # repartition -> partition count stays at the new file count)
+    # rewrite the path with MORE files than cores: the signature changes
+    # and the count sees the new layout (no repartition -> partition
+    # count stays at the new file count)
     spark.range(10000).select(
         F.col("id").alias("doc_id"), F.lit("y").alias("text")
     ).repartition(par + 8).write.mode("overwrite").parquet(path)
     sig2 = tables_mod._local_files_sig(path)
     assert sig2 != sig
-    # same abspath -> the rewrite REPLACES the entry (bounded memo)
     df2 = spark.read.parquet(path)
     spread2 = tables_mod.spread_scan(spark, df2, key_path=path)
-    assert tables_mod._SPREAD_MEMO[key][0] == sig2
     assert spread2.rdd.getNumPartitions() == df2.rdd.getNumPartitions()
