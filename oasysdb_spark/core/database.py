@@ -1239,6 +1239,10 @@ class Database:
     def is_indexed(self) -> bool:
         return self.centroids.exists() and "cluster_id" in self.records_df().columns
 
+    def _indexed(self, recs: DataFrame) -> bool:
+        """:meth:`is_indexed` for a records frame the caller already read."""
+        return "cluster_id" in recs.columns and self.centroids.exists()
+
     def get(self, record_id: str) -> dict[str, Any]:
         """Point lookup returning the full record including the vector
         (/root/reference/src/cores/database.rs:256-268)."""
@@ -1385,7 +1389,8 @@ class Database:
             load_codebooks_meta,
         )
 
-        if self.is_indexed():
+        indexed = self._indexed(self.records_df())
+        if indexed:
             from oasysdb_spark.index.ivf import assign_clusters
 
             # assignment BEFORE encoding: a residual PQ layout quantizes
@@ -1402,7 +1407,7 @@ class Database:
                 )
             else:
                 df = encode(df, books, rotation=pq_rot)
-        if self.is_indexed():
+        if indexed:
             self.records.append(df, partition_by=["cluster_id"])
         else:
             self.records.append(df)
@@ -1425,7 +1430,7 @@ class Database:
                 return
             ids_df = tiny_df(self.spark, [(i,) for i in ids], "id string")
         current = self.records_df()
-        if self.is_indexed():
+        if self._indexed(current):
             # IO is scoped to the clusters that actually hold the ids: find
             # them (semi-join over a column-pruned scan of id+cluster_id),
             # rewrite ONLY those partitions copy-on-write, hardlink the
@@ -1474,7 +1479,7 @@ class Database:
                 )
             )
 
-        if self.is_indexed():
+        if self._indexed(current):
             # locate the record's cluster and rewrite ONLY that partition
             # (copy-on-write; every other partition is hardlinked)
             rows = current.where(hit).select("cluster_id").take(1)
@@ -1513,7 +1518,7 @@ class Database:
             F.col("m_bool").alias("_ub"),
         ).cache()
         current = self.records_df()
-        indexed = self.is_indexed()
+        indexed = self._indexed(current)
         probe_cols = ["id", "cluster_id"] if indexed else ["id"]
         aggs = [
             F.count("*").alias("n_rows"),
@@ -1602,8 +1607,8 @@ class Database:
     def _track_serving_broadcast(self, bc) -> None:
         """Retain the newest HNSW query-batch broadcast and unpersist
         the previous one: a long-lived serving session otherwise grows
-        executor broadcast memory without bound (one batch per query —
-        r8 ADVICE). ``unpersist`` — never ``destroy`` — so a caller
+        executor broadcast memory without bound (one batch per query).
+        ``unpersist`` — never ``destroy`` — so a caller
         still holding an earlier query's lazy DataFrame re-fetches from
         the driver on re-execution instead of failing."""
         prev = getattr(self, "_serving_bcs", None)
@@ -1621,6 +1626,225 @@ class Database:
         own)."""
         self._track_serving_broadcast(None)
 
+    def _plan(self, queries, k, filter, probes, radius, approx, rerank) -> DataFrame:
+        """The one serving plan behind :meth:`query_df` and
+        :meth:`query_many_df`: each query's candidates as ``(query_id,
+        id, m_text, m_num, m_bool, distance, ...)`` rows, with the exact
+        double ``distance``, the radius and the metadata pre-filter
+        applied. The wrappers add only the final top-k, so a batch's
+        list for a vector equals that vector's standalone query.
+
+        ``queries`` is a list of vectors (numbered 0..n-1) or a
+        ``(query_id, qvec)`` DataFrame, collected once: batches are
+        broadcast-sized by contract. Every vector passes
+        :meth:`_validate_dim`, so a wrong-dimension or null ``qvec``
+        raises instead of silently matching nothing.
+
+        Plan shape. The records table is read once. When it is IVF
+        indexed (``cluster_id`` partitions plus centroids),
+        :meth:`_probe_cluster_ids` ranks each query's ``probes`` nearest
+        centroids driver-side and the scan keeps ``cluster_id IN (union
+        of probed ids)``, a static PartitionFilter, so unprobed
+        partitions are never read (reference ``src/cores/index.rs:176-182``).
+        Batch size changes only how the query attaches:
+
+        - one query attaches as plan literals (``const_distance``,
+          ``adc_score_expr``) with no join, and its top-k cuts are
+          ``ORDER BY … LIMIT`` (TakeOrderedAndProject, the distributed
+          bounded max-heap of reference ``src/cores/index.rs:201-213``);
+        - several queries attach as a broadcast frame with one
+          ``(query_id, qvec[, cluster_id][, qtable])`` row per query and
+          probed cluster, equi-joined on ``cluster_id`` (crossed when
+          unindexed), and their cuts are per-``query_id`` ``row_number``
+          windows.
+
+        The filter applies before any top-k cut (pre-filtering,
+        reference ``src/cores/index.rs:195-199``); the radius bounds
+        the exact distance.
+
+        Tiers (``approx``):
+
+        - ``None``: exact distance over the probed scan.
+        - ``"pq"`` (after ``index.pq.build_pq``; euclidean only): the
+          candidate scan reads the ``pq_code`` column and the filter's
+          maps, never raw vectors. ADC scores it against one lookup table
+          per query, or per query and probed cluster for a residual
+          layout (codes quantize ``embedding − centroid``, so those
+          tables always ride the frame). The best ``max(rerank, k)`` per
+          query survive, and a second, equally pruned scan fetches the
+          embeddings of only those rows for the exact distance.
+        - ``"hnsw"`` (after ``index.hnsw.build_hnsw``; euclidean or
+          cosine): the batch is broadcast into the resident shard tasks
+          (decoded graphs are memoized per worker by graph version).
+          Each query beams ``max(rerank, k)`` plus the tombstone count
+          candidates; cosine beams the unit-normalized query through the
+          unit-vector graph. Only those ids re-rank exactly, so shared
+          ids bit-match the exact tier. ``probes`` is moot. A graph
+          cannot apply a predicate mid-beam, so a filtered query starts
+          at ``4k``, post-filters, and quadruples ef until every query
+          has k matches or ef covers the graph (live plus tombstoned
+          nodes), where the answer is exact: a selective filter degrades
+          toward brute force instead of under-filling k. A graph older
+          than the records is refused as stale
+          (``index.hnsw.load_hnsw_graph``)."""
+        if k <= 0:
+            raise errors.InvalidArgumentError(
+                "k must be > 0 (/root/reference/src/cores/database.rs:321-325)"
+            )
+        metric = self.params.metric
+        if approx not in (None, "pq", "hnsw"):
+            raise errors.InvalidArgumentError(
+                f"unknown approx mode {approx!r}; supported: 'pq', 'hnsw'"
+            )
+        if approx == "pq" and metric != "euclidean":
+            raise errors.InvalidArgumentError(
+                "approx='pq' supports the euclidean metric only"
+            )
+        if approx == "hnsw" and metric not in ("euclidean", "cosine"):
+            raise errors.InvalidArgumentError(
+                "approx='hnsw' supports the euclidean and cosine metrics only"
+            )
+        if isinstance(queries, DataFrame):
+            queries = queries.select(
+                F.col("query_id").cast("bigint"), F.col("qvec").cast("array<double>")
+            ).collect()
+        else:
+            queries = enumerate(queries)
+        qs = [
+            (qid, self._validate_dim(() if vec is None else vec))
+            for qid, vec in queries
+        ]
+        qp = QueryParameters(
+            probes=probes if probes is not None else 32,
+            radius=radius if radius is not None else self._default_radius(),
+        )
+        pred = compile_filter(filter, MapLayout())
+        recs = self.records_df()
+        indexed = self._indexed(recs)
+        single = len(qs) == 1
+
+        # the broadcast frame's rows, built only when something attaches it;
+        # qvec stays double so frame distances bit-match the literal path's
+        fields, rows = ["query_id bigint", "qvec array<double>"], list(qs)
+        pruned = indexed and approx != "hnsw"
+        if pruned:
+            probed = self._probe_cluster_ids([v for _, v in qs], qp.probes)
+            recs = recs.where(
+                F.col("cluster_id").isin(sorted({c for p in probed for c in p}))
+            )
+            fields.append("cluster_id int")
+            rows = [(q, v, c) for (q, v), cids in zip(qs, probed) for c in cids]
+        key = "cluster_id" if pruned else None
+
+        def attach(df: DataFrame, on: str | None) -> DataFrame:
+            frame = F.broadcast(tiny_df(self.spark, rows, ", ".join(fields)))
+            return df.join(frame, on) if on else df.crossJoin(frame)
+
+        if approx == "pq":
+            import numpy as np
+
+            from oasysdb_spark.index.pq import (
+                adc_score_col,
+                adc_score_expr,
+                adc_table,
+                load_codebooks_meta,
+            )
+
+            meta = load_codebooks_meta(self)
+            if meta is None or "pq_code" not in recs.columns:
+                raise errors.InvalidArgumentError(
+                    "PQ tier not built: call oasysdb_spark.index.pq.build_pq first"
+                )
+            books, residual, rot = meta
+            if residual and not indexed:
+                raise errors.InvalidArgumentError(
+                    "residual PQ layout requires the IVF index it was "
+                    "built with: build_index before querying"
+                )
+            cents = dict(self.centroid_rows()) if residual else {}
+
+            def table(vec, cluster):
+                q = np.asarray(vec, dtype=np.float64)
+                if residual:
+                    q = q - np.asarray(cents[cluster], dtype=np.float64)
+                return adc_table(q if rot is None else q @ rot, books)
+
+            codes = recs.drop("embedding").where(pred)
+            if single and not residual:
+                cand = codes.withColumn("__adc", adc_score_expr(table(qs[0][1], None)))
+            else:
+                fields.append("qtable array<double>")
+                rows = [
+                    (*r, [float(x) for x in table(r[1], r[2] if residual else None).ravel()])
+                    for r in rows
+                ]
+                cand = attach(codes, key).withColumn(
+                    "__adc", adc_score_col(F.col("qtable"), int(books.shape[1]))
+                )
+            cand = _top(cand, "__adc", max(rerank, k), per_query=not single)
+            keys = ["cluster_id", "id"] if pruned else ["id"]
+            pairs = recs.select(*keys, "embedding").join(
+                F.broadcast(cand.drop("__adc", "qtable")), keys
+            )
+        elif approx == "hnsw":
+            from oasysdb_spark.index.hnsw import (
+                broadcast_queries,
+                hnsw_serving_state,
+                resident_candidates,
+            )
+
+            gpath, gshards, gtoken, gmeta = hnsw_serving_state(self)
+            if gmeta.get("metric", "euclidean") != metric:
+                raise errors.InvalidArgumentError(
+                    "HNSW graph was built for metric "
+                    f"{gmeta.get('metric', 'euclidean')!r}; run build_hnsw "
+                    f"to rebuild it for {metric!r}"
+                )
+            beam = []
+            for qid, vec in qs:
+                norm = math.sqrt(sum(x * x for x in vec)) if metric == "cosine" else 0.0
+                beam.append((qid, [x / norm for x in vec] if norm > 0 else vec))
+            # tombstoned ids drop at the records join: widen ef by their
+            # count so a beam full of dead ids cannot under-fill k
+            n_tomb = len(gmeta.get("tombstones", []))
+            ef = max(rerank, k) + n_tomb
+            if filter is not None:
+                ef = max(ef, 4 * k)
+                n_graph = recs.count() + n_tomb
+            # one broadcast shared by every ladder rung; the previous
+            # call's broadcast is unpersisted
+            qb = broadcast_queries(self.spark, beam)
+            self._track_serving_broadcast(qb)
+            while True:
+                cand = resident_candidates(
+                    self.spark, gpath, gshards, gtoken,
+                    ef_search=ef, id_type="string", qb=qb,
+                ).select("query_id", F.col("vec_id").alias("id"))
+                if not single:
+                    cand = attach(cand, "query_id")
+                pairs = recs.join(F.broadcast(cand), "id")
+                if filter is None or ef >= n_graph:
+                    break
+                got = dict(pairs.where(pred).groupBy("query_id").count().collect())
+                if all(got.get(qid, 0) >= k for qid, _ in qs):
+                    break
+                ef = min(n_graph, ef * 4)
+        else:
+            pairs = recs if single else attach(recs, key)
+
+        if single:
+            dist = const_distance(metric, qs[0][1])
+        else:
+            dist = distance_expr(metric, F.col("qvec"), F.col("embedding"))
+        out = pairs.where(pred).withColumn("distance", dist)
+        if math.isfinite(qp.radius):
+            out = out.where(F.col("distance") <= F.lit(qp.radius))
+        else:
+            out = out.where(F.col("distance").isNotNull())
+        if single:
+            out = out.withColumn("query_id", F.lit(qs[0][0]).cast("bigint"))
+        return out
+
     def query_df(
         self,
         vector: Iterable[float],
@@ -1631,255 +1855,14 @@ class Database:
         approx: str | None = None,
         rerank: int = 128,
     ) -> DataFrame:
-        """ANN top-k as a DataFrame ``(id, m_text, m_num, m_bool, distance)``
-        — the vector is excluded, like QueryResult
-        (/root/reference/src/cores/index.rs:8-18).
-
-        Plan shape (SURVEY.md §3.1): [partition-pruned] scan → distance
-        column (native zip_with/aggregate exprs) → radius + filter
-        predicates → ``ORDER BY distance LIMIT k`` which Catalyst executes
-        as TakeOrderedAndProject — the distributed equivalent of the
-        reference's bounded max-heap (/root/reference/src/cores/index.rs:201-213).
-        Filter is applied **before** top-k (pre-filtering semantics,
-        /root/reference/src/cores/index.rs:195-199).
-
-        ``approx="pq"`` (after ``index.pq.build_pq``) swaps the candidate
-        stage for ADC over the 4-byte ``pq_code`` column — the scan never
-        touches raw vectors — then exact-re-ranks the best ``rerank``
-        rows; pre-filter, radius, and probe-pruning semantics are
-        unchanged (the filter applies before the ADC cut, the radius to
-        the exact distances). Euclidean metric only.
-
-        ``approx="hnsw"`` (after ``index.hnsw.build_hnsw``) serves from
-        the persisted graph tier: every shard's graph beams
-        ``max(rerank, k)`` candidates (ef_search), then ONLY those ids
-        re-rank through the exact JVM distance path — output values
-        bit-match the exact query for shared ids. Serving is RESIDENT
-        (r8): the job fans out over shard ids and each worker memoizes
-        its decoded shard graphs keyed by the graph version, so
-        steady-state queries read no graph rows at all (first touch per
-        worker loads just that shard's parquet row groups). Euclidean
-        and cosine metrics (cosine via a unit-normalized graph — same
-        candidate order, exact re-rank unchanged). Radius applies to the
-        exact distances; ``probes`` is moot (candidates come from graph
-        edges, not cluster pruning). Metadata FILTERS compose via
-        post-filtering with DOUBLING expansion: graph traversal cannot
-        apply a predicate mid-beam, so a filtered query over-fetches
-        (4k), post-filters, and quadruples ef_search until k rows match
-        or the candidate set covers the whole graph — at which point
-        the answer is EXACT; a selective filter therefore degrades
-        toward brute force instead of silently under-filling k (the
-        reference's pre-filter contract holds at every stop). A graph
-        built before any record mutation
-        is refused as stale (see ``index.hnsw.load_hnsw_graph``)."""
-        vec = self._validate_dim(vector)
-        if k <= 0:
-            raise errors.InvalidArgumentError(
-                "k must be > 0 (/root/reference/src/cores/database.rs:321-325)"
-            )
-        qp = QueryParameters(
-            probes=probes if probes is not None else 32,
-            radius=radius if radius is not None else self._default_radius(),
+        """ANN top-k as a DataFrame ``(id, m_text, m_num, m_bool,
+        distance)`` in ascending distance; the vector is excluded, like
+        QueryResult (reference ``src/cores/index.rs:8-18``). Plan shape
+        and the ``approx`` tiers are described in :meth:`_plan`."""
+        out = self._plan([vector], k, filter, probes, radius, approx, rerank)
+        return _top(out, "distance", k, per_query=False).select(
+            "id", "m_text", "m_num", "m_bool", to_f32(F.col("distance")).alias("distance")
         )
-        pred = compile_filter(filter, MapLayout())
-
-        if approx == "hnsw":
-            if self.params.metric not in ("euclidean", "cosine"):
-                raise errors.InvalidArgumentError(
-                    "approx='hnsw' supports the euclidean and cosine "
-                    "metrics only"
-                )
-            from oasysdb_spark.index.hnsw import (
-                broadcast_queries,
-                hnsw_serving_state,
-                resident_candidates,
-            )
-
-            gpath, gshards, gtoken, gmeta = hnsw_serving_state(self)
-            if gmeta.get("metric", "euclidean") != self.params.metric:
-                raise errors.InvalidArgumentError(
-                    "HNSW graph was built for metric "
-                    f"{gmeta.get('metric', 'euclidean')!r}; run build_hnsw "
-                    f"to rebuild it for {self.params.metric!r}"
-                )
-            recs = self.records_df()
-            # cosine serves from a unit-normalized graph (build_hnsw):
-            # beam the NORMALIZED query (euclidean order ≡ cosine order
-            # on unit vectors); the exact re-rank below still runs the
-            # true metric expression on the raw records
-            qbeam = vec
-            if self.params.metric == "cosine":
-                qn = math.sqrt(sum(x * x for x in vec))
-                if qn > 0:
-                    qbeam = [float(x) / qn for x in vec]
-            # Filters compose with the graph tier via POST-filtering
-            # with DOUBLING expansion (r7): graph traversal can't honor
-            # a predicate, so a filtered query over-fetches (4k to
-            # start), post-filters, and quadruples ef until k rows
-            # match or ef covers the whole graph — at which point the
-            # candidate set is exhaustive and the answer EXACT. Bounded:
-            # ≤ log₄(n/k) re-searches — and with the r8 resident cache
-            # each rung re-beams WARM worker-local graphs instead of
-            # re-scanning the table; selective filters degrade toward
-            # brute force instead of silently under-filling k (the
-            # failure mode this branch used to refuse with an error).
-            # Tombstoned ids (tombstone_hnsw) drop at the records join;
-            # widening ef by their count keeps k fillable even if every
-            # dead id lands in the beam.
-            n_tomb = len(gmeta.get("tombstones", []))
-            ef = max(rerank, k) + n_tomb
-            n_total = None
-            if filter is not None:
-                ef = max(ef, 4 * k)
-                # the exhaustive-exact termination bound is over GRAPH
-                # nodes — live records PLUS tombstoned nodes still in
-                # the graph (capping at the live count could truncate
-                # the final beam below the shard's node count and break
-                # the "ef covers the graph ⇒ EXACT" guarantee — r8
-                # review finding); live+tombs over-approximates under
-                # cosine (zero-norm rows never enter the graph), which
-                # only means one extra rung, never a truncated one
-                n_total = recs.count() + n_tomb
-            # ONE broadcast per query, shared across every ladder rung
-            # (not one per rung), and the PREVIOUS query's broadcast is
-            # unpersisted — executor copies don't accumulate over a
-            # long-lived serving session (r8 ADVICE)
-            qb = broadcast_queries(self.spark, [(0, qbeam)])
-            self._track_serving_broadcast(qb)
-            while True:
-                cand = resident_candidates(
-                    self.spark,
-                    gpath,
-                    gshards,
-                    gtoken,
-                    ef_search=ef,
-                    id_type="string",
-                    qb=qb,
-                ).select(F.col("vec_id").alias("id"))
-                df = recs.join(F.broadcast(cand), "id")
-                if filter is None:
-                    break
-                df = df.where(pred)
-                if ef >= n_total or df.count() >= k:
-                    break
-                ef = min(n_total, ef * 4)
-            dist = const_distance(self.params.metric, vec)
-            out = df.withColumn("distance", dist)
-            if math.isfinite(qp.radius):
-                out = out.where(F.col("distance") <= F.lit(qp.radius))
-            else:
-                out = out.where(F.col("distance").isNotNull())
-            return (
-                out.orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-                .limit(k)
-                .select(
-                    "id",
-                    "m_text",
-                    "m_num",
-                    "m_bool",
-                    to_f32(F.col("distance")).alias("distance"),
-                )
-            )
-
-        df = self.records_df()
-        if self.is_indexed():
-            probe_ids = self._probe_cluster_ids(vec, qp.probes)
-            df = df.where(F.col("cluster_id").isin(probe_ids))
-
-        if approx is not None:
-            if approx != "pq":
-                raise errors.InvalidArgumentError(
-                    f"unknown approx mode {approx!r}; supported: 'pq', 'hnsw'"
-                )
-            if self.params.metric != "euclidean":
-                raise errors.InvalidArgumentError(
-                    "approx='pq' supports the euclidean metric only"
-                )
-            from oasysdb_spark.index.pq import (
-                adc_score_col,
-                adc_score_expr,
-                adc_table,
-                load_codebooks_meta,
-            )
-
-            meta = load_codebooks_meta(self)
-            if meta is None or "pq_code" not in df.columns:
-                raise errors.InvalidArgumentError(
-                    "PQ tier not built: call oasysdb_spark.index.pq.build_pq first"
-                )
-            books, residual, pq_rot = meta
-            # candidate stage reads CODES, never raw vectors: the scan
-            # schema is the row minus `embedding` (4-byte codes + the
-            # filter's metadata maps), so the top-`rerank` heap carries
-            # no vector payload; raw embeddings are fetched by a second
-            # id-equi-join scan for ONLY the rerank winners (broadcast —
-            # `rerank` rows by construction). Cluster pruning from the
-            # probe stage applies to both scans.
-            cand = df.drop("embedding").where(pred)
-            if residual:
-                # IVFADC: codes quantize embedding − centroid, so each
-                # probed cluster gets its own ADC table on q − centroid_c,
-                # shipped as a probes-row broadcast frame
-                if not self.is_indexed():
-                    raise errors.InvalidArgumentError(
-                        "residual PQ layout requires the IVF index it was "
-                        "built with: build_index before querying"
-                    )
-                import numpy as np
-
-                cmap = {c: np.asarray(v, dtype=np.float64) for c, v in self.centroid_rows()}
-                qarr = np.asarray(vec, dtype=np.float64)
-
-                def _resid_q(c):
-                    r = qarr - cmap[c]
-                    return r if pq_rot is None else r @ pq_rot
-
-                tab_df = tiny_df(
-                    self.spark,
-                    [
-                        (
-                            int(c),
-                            [float(x) for x in adc_table(_resid_q(c), books).ravel()],
-                        )
-                        for c in probe_ids
-                    ],
-                    "cluster_id int, __qtable array<double>",
-                )
-                cand = (
-                    cand.join(F.broadcast(tab_df), "cluster_id")
-                    .withColumn(
-                        "__adc", adc_score_col(F.col("__qtable"), int(books.shape[1]))
-                    )
-                    .drop("__qtable")
-                )
-            else:
-                import numpy as np
-
-                qv = np.asarray(vec, dtype=np.float64)
-                if pq_rot is not None:
-                    qv = qv @ pq_rot
-                cand = cand.withColumn("__adc", adc_score_expr(adc_table(qv, books)))
-            cand = (
-                cand.orderBy(F.col("__adc").asc_nulls_last(), F.col("id"))
-                .limit(max(rerank, k))
-                .drop("__adc")
-            )
-            df = df.select("id", "embedding").join(F.broadcast(cand), "id")
-            pred = F.lit(True)  # already applied before the ADC cut
-
-        dist = const_distance(self.params.metric, vec)
-        out = df.withColumn("distance", dist)
-        if math.isfinite(qp.radius):
-            out = out.where(F.col("distance") <= F.lit(qp.radius))
-        else:
-            out = out.where(F.col("distance").isNotNull())
-        out = (
-            out.where(pred)
-            .orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-            .limit(k)
-            .select("id", "m_text", "m_num", "m_bool", to_f32(F.col("distance")).alias("distance"))
-        )
-        return out
 
     def query(
         self,
@@ -1912,373 +1895,20 @@ class Database:
         approx: str | None = None,
         rerank: int = 128,
     ) -> DataFrame:
-        """Batched multi-query ANN as ONE job — the amortized form of
-        :meth:`query_df` (the reference RPC is single-vector,
-        /root/reference/protos/database.proto:27; a client with a query
-        batch would loop it, paying per-query scan cost — here the whole
-        batch shares one scan).
+        """Batched ANN as one plan: the whole batch shares one scan
+        instead of one per query (the reference RPC is single-vector,
+        reference ``protos/database.proto:27``).
 
         ``queries`` is either a ``(query_id bigint, qvec array<float>)``
-        DataFrame or a plain list of vectors (auto-numbered 0..n-1).
-        Returns ``(query_id, id, m_text, m_num, m_bool, distance)`` rows,
-        top-``k`` per query by ascending distance.
-
-        Plan shape: broadcast the (small) query batch; when indexed, each
-        query explodes to its ``probes`` nearest clusters (the same
-        Arrow-batched assigner the similarity join uses) and the
-        candidate set is an EQUI-join on cluster_id against the
-        cluster-partitioned records table — Spark's dynamic partition
-        pruning skips unprobed partitions at scan time, the batched
-        analog of query_df's static ``isin`` pruning. Unindexed falls
-        back to scan × broadcast. Per-query top-k is one window over the
-        broadcast-joined candidates — no per-query jobs, no driver loop.
-
-        ``approx="pq"`` (after ``index.pq.build_pq``) batches the
-        memory-bounded tier too: each query row broadcasts with its own
-        flattened ADC table, the candidate stage scans codes without the
-        embedding column, a per-query window keeps the ``rerank`` best
-        by ADC, and one id-join fetches raw vectors for only those
-        winners before the exact top-k. Each query's result list equals
-        its standalone ``query(..., approx='pq')`` call.
-
-        ``approx="hnsw"`` (after ``index.hnsw.build_hnsw``) batches the
-        graph tier: the query batch BROADCASTS into the resident shard
-        tasks (r8 — decoded graphs memoized per worker by graph
-        version, no graph-table scan in steady state), every query
-        beams through each shard's adjacency, and the candidates
-        re-rank exactly. Same contract as the single-query hnsw path:
-        filters via batch-global doubling expansion (every query fills
-        k or the search goes exhaustive-exact), euclidean and cosine
-        metrics, stale graphs refused; each query's list equals its
-        standalone ``query(..., approx='hnsw')`` call."""
-        if k <= 0:
-            raise errors.InvalidArgumentError(
-                "k must be > 0 (/root/reference/src/cores/database.rs:321-325)"
-            )
-        # qvec stays DOUBLE on both input paths so the batched distance
-        # arithmetic is bit-identical to query_df's double literals —
-        # an f32-cast query can swap near-tie results vs N single calls
-        qvec_rows: "list[tuple[int, list[float]]] | None" = None
-        if not isinstance(queries, DataFrame):
-            vecs = [self._validate_dim(v) for v in queries]
-            qvec_rows = list(enumerate(vecs))
-            # one slice, not defaultParallelism pickled slices (r16,
-            # guide §5 — the batch is broadcast-sized by contract)
-            queries = tiny_df(
-                self.spark, qvec_rows, "query_id bigint, qvec array<double>"
-            )
-        else:
-            queries = queries.select(
-                F.col("query_id").cast("bigint").alias("query_id"),
-                F.col("qvec").cast("array<double>").alias("qvec"),
-            )
-            # same dimension contract as the list branch / single query
-            # (/root/reference/src/cores/database.rs:189-199) — without
-            # this, a wrong-dim qvec row nulls out of zip_with and
-            # silently returns zero hits. The batch is broadcast-sized
-            # by contract, so the probe count() is cheap.
-            n_bad = queries.where(
-                F.col("qvec").isNull()
-                | (F.size("qvec") != F.lit(self.params.dimension))
-            ).count()
-            if n_bad:
-                raise errors.InvalidArgumentError(
-                    f"{n_bad} query vector(s) missing or not of dimension "
-                    f"{self.params.dimension}"
-                )
-        n_probes = probes if probes is not None else 32
-        qp = QueryParameters(
-            probes=n_probes,
-            radius=radius if radius is not None else self._default_radius(),
-        )
-        pred = compile_filter(filter, MapLayout())
-
-        recs = self.records_df()
-
-        if approx == "hnsw":
-            # batched graph tier: the broadcast query batch beams
-            # through each shard's RESIDENT adjacency (worker-memoized
-            # by graph version — no graph scan in steady state), then
-            # the candidate (query_id, id) rows join back for the exact
-            # re-rank — same contract as the single-query hnsw branch
-            # (euclidean/cosine, stale graph refused; filters compose via
-            # the same post-filter + doubling expansion, batch-global:
-            # ef quadruples until EVERY query has ≥ k matched rows or
-            # the whole graph is candidates, so a selective filter
-            # degrades to exact instead of under-filling any query)
-            if self.params.metric not in ("euclidean", "cosine"):
-                raise errors.InvalidArgumentError(
-                    "approx='hnsw' supports the euclidean and cosine "
-                    "metrics only"
-                )
-            from oasysdb_spark.index.hnsw import (
-                broadcast_queries,
-                hnsw_serving_state,
-                resident_candidates,
-            )
-
-            gpath, gshards, gtoken, gmeta = hnsw_serving_state(self)
-            if gmeta.get("metric", "euclidean") != self.params.metric:
-                raise errors.InvalidArgumentError(
-                    "HNSW graph was built for metric "
-                    f"{gmeta.get('metric', 'euclidean')!r}; run build_hnsw "
-                    f"to rebuild it for {self.params.metric!r}"
-                )
-            if qvec_rows is None:  # DataFrame input: one collect (tiny batch)
-                qvec_rows = [
-                    (r["query_id"], list(r["qvec"])) for r in queries.collect()
-                ]
-            # cosine: beam NORMALIZED queries through the unit-vector
-            # graph; the exact re-rank keeps the raw qvec column
-            beam_rows = qvec_rows
-            if self.params.metric == "cosine":
-                beam_rows = []
-                for qid, qv in qvec_rows:
-                    qn = math.sqrt(sum(x * x for x in qv))
-                    beam_rows.append(
-                        (qid, [float(x) / qn for x in qv])
-                        if qn > 0
-                        else (qid, list(qv))
-                    )
-            # tombstoned ids drop at the records join — widen ef so a
-            # beam full of dead ids can never under-fill any query's k
-            n_tomb = len(gmeta.get("tombstones", []))
-            ef = max(rerank, k) + n_tomb
-            n_total = None
-            if filter is not None:
-                ef = max(ef, 4 * k)
-                # exhaustiveness bound = GRAPH nodes (live + tombstoned),
-                # not live records — see query_df's hnsw branch
-                n_total = recs.count() + n_tomb
-            # one broadcast for the whole batch, shared across ladder
-            # rungs; the previous batch's broadcast unpersists (r8 ADVICE)
-            qb = broadcast_queries(self.spark, beam_rows)
-            self._track_serving_broadcast(qb)
-            while True:
-                cand = resident_candidates(
-                    self.spark,
-                    gpath,
-                    gshards,
-                    gtoken,
-                    ef_search=ef,
-                    id_type="string",
-                    qb=qb,
-                ).select("query_id", F.col("vec_id").alias("id"))
-                cand = cand.join(F.broadcast(queries), "query_id")
-                pairs = recs.join(F.broadcast(cand), "id")
-                if filter is None:
-                    break
-                pairs = pairs.where(pred)
-                if ef >= n_total:
-                    break
-                matched = pairs.groupBy("query_id").count().collect()
-                got = {r["query_id"]: r["count"] for r in matched}
-                if all(got.get(qid, 0) >= k for qid, _ in qvec_rows):
-                    break
-                ef = min(n_total, ef * 4)
-            dist = distance_expr(
-                self.params.metric, F.col("qvec"), F.col("embedding")
-            )
-            out = pairs.withColumn("distance", dist)
-            if math.isfinite(qp.radius):
-                out = out.where(F.col("distance") <= F.lit(qp.radius))
-            else:
-                out = out.where(F.col("distance").isNotNull())
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("distance").asc_nulls_last(), F.col("id")
-            )
-            return (
-                out.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= k)
-                .select(
-                    "query_id",
-                    "id",
-                    "m_text",
-                    "m_num",
-                    "m_bool",
-                    to_f32(F.col("distance")).alias("distance"),
-                )
-            )
-
-        adc_k = None
-        pq_residual = False
-        if approx is not None:
-            # batched PQ: each query row carries its own flattened ADC
-            # table (computed driver-side — the batch is broadcast-sized
-            # by contract, like the single query's table)
-            if approx != "pq":
-                raise errors.InvalidArgumentError(
-                    f"unknown approx mode {approx!r}; supported: 'pq', 'hnsw'"
-                )
-            if self.params.metric != "euclidean":
-                raise errors.InvalidArgumentError(
-                    "approx='pq' supports the euclidean metric only"
-                )
-            from oasysdb_spark.index.pq import adc_table, load_codebooks_meta
-
-            meta = load_codebooks_meta(self)
-            if meta is None or "pq_code" not in recs.columns:
-                raise errors.InvalidArgumentError(
-                    "PQ tier not built: call oasysdb_spark.index.pq.build_pq first"
-                )
-            books, pq_residual, pq_rot = meta
-            adc_k = int(books.shape[1])
-            if qvec_rows is None:  # DataFrame input: one collect (tiny batch)
-                qvec_rows = [
-                    (r["query_id"], list(r["qvec"])) for r in queries.collect()
-                ]
-            if pq_residual:
-                # IVFADC: the ADC table depends on the probed cluster, so
-                # the probe selection happens driver-side (the query batch
-                # is already driver-side by contract) and the broadcast
-                # frame carries one row per (query, probed cluster) with
-                # that pair's table on q − centroid_c
-                if not self.is_indexed():
-                    raise errors.InvalidArgumentError(
-                        "residual PQ layout requires the IVF index it was "
-                        "built with: build_index before querying"
-                    )
-                import numpy as np
-
-                cents = self.centroid_rows()
-                pair_rows = []
-                # no centroids (e.g. every cluster emptied by deletes):
-                # zero probe rows → empty result, matching the single-
-                # query path's _probe_cluster_ids returning []
-                if cents:
-                    carr = np.asarray([v for _, v in cents], dtype=np.float64)
-                    cids = [int(c) for c, _ in cents]
-                    p = max(1, min(qp.probes, len(cents)))
-                    for qid, qv in qvec_rows:
-                        qarr = np.asarray(qv, dtype=np.float64)
-                        d = ((carr - qarr[None, :]) ** 2).sum(axis=1)
-                        order = np.argsort(
-                            np.where(np.isnan(d), np.inf, d), kind="stable"
-                        )[:p]
-                        for pos in order:
-                            rq = qarr - carr[int(pos)]
-                            if pq_rot is not None:
-                                rq = rq @ pq_rot
-                            pair_rows.append(
-                                (
-                                    qid,
-                                    qv,
-                                    cids[int(pos)],
-                                    [float(x) for x in adc_table(rq, books).ravel()],
-                                )
-                            )
-                queries = tiny_df(
-                    self.spark,
-                    pair_rows,
-                    "query_id bigint, qvec array<double>, "
-                    "cluster_id int, qtable array<double>",
-                )
-            else:
-                import numpy as np
-
-                def _rotq(qv):
-                    if pq_rot is None:
-                        return np.asarray(qv, dtype=np.float64)
-                    return np.asarray(qv, dtype=np.float64) @ pq_rot
-
-                tabled = [
-                    (qid, qv, [float(x) for x in adc_table(_rotq(qv), books).ravel()])
-                    for qid, qv in qvec_rows
-                ]
-                queries = tiny_df(
-                    self.spark,
-                    tabled,
-                    "query_id bigint, qvec array<double>, qtable array<double>",
-                )
-
-        if adc_k is not None and pq_residual:
-            # probing already resolved driver-side above
-            qside, join_on = queries, "cluster_id"
-        elif self.is_indexed():
-            from oasysdb_spark.index.ivf import topk_cluster_assigner
-
-            cents = self.centroid_rows()
-            assigner = topk_cluster_assigner(
-                self.spark,
-                [v for _, v in cents],
-                self.params.metric,
-                max(1, min(qp.probes, len(cents))),
-            )
-            # assigner emits positions into the centroid list; map them to
-            # (possibly non-contiguous) cluster ids in-plan
-            idmap = F.array(*[F.lit(int(c)) for c, _ in cents])
-            qcols = ["query_id", "qvec", "cluster_id"] + (
-                ["qtable"] if adc_k is not None else []
-            )
-            qprobe = (
-                queries.withColumn("__pos", F.explode(assigner(F.col("qvec"))))
-                .withColumn("cluster_id", F.element_at(idmap, F.col("__pos") + 1))
-                .select(*qcols)
-            )
-            qside, join_on = qprobe, "cluster_id"
-        else:
-            qside, join_on = queries, None
-
-        if adc_k is not None:
-            # code-only candidate stage (the batched analog of query_df's
-            # PQ path): the scan carries codes + filter maps, never raw
-            # vectors; per-query top-rerank by ADC, then ONE id-join
-            # fetches embeddings for the winners (Q×rerank rows —
-            # broadcast-sized for serving batches)
-            from oasysdb_spark.index.pq import adc_score_col
-
-            recs_codes = recs.drop("embedding")
-            cand = (
-                recs_codes.join(F.broadcast(qside), join_on)
-                if join_on
-                else recs_codes.crossJoin(F.broadcast(qside))
-            )
-            w_adc = Window.partitionBy("query_id").orderBy(
-                F.col("__adc").asc_nulls_last(), F.col("id")
-            )
-            cand = (
-                cand.where(pred)
-                .withColumn("__adc", adc_score_col(F.col("qtable"), adc_k))
-                .withColumn("__arn", F.row_number().over(w_adc))
-                .where(F.col("__arn") <= max(rerank, k))
-                .drop("__adc", "__arn", "qtable")
-            )
-            # rerank fetch joins on (cluster_id, id) when indexed so the
-            # broadcast side drives dynamic partition pruning — the same
-            # cluster pruning the single-query PQ path keeps on both scans
-            if join_on:
-                pairs = recs.select("cluster_id", "id", "embedding").join(
-                    F.broadcast(cand), ["cluster_id", "id"]
-                )
-            else:
-                pairs = recs.select("id", "embedding").join(F.broadcast(cand), "id")
-            pred = F.lit(True)  # already applied before the ADC cut
-        elif join_on:
-            pairs = recs.join(F.broadcast(qside), join_on)
-        else:
-            pairs = recs.crossJoin(F.broadcast(qside))
-
-        dist = distance_expr(self.params.metric, F.col("qvec"), F.col("embedding"))
-        out = pairs.withColumn("distance", dist)
-        if math.isfinite(qp.radius):
-            out = out.where(F.col("distance") <= F.lit(qp.radius))
-        else:
-            out = out.where(F.col("distance").isNotNull())
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc_nulls_last(), F.col("id")
-        )
-        return (
-            out.where(pred)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k)
-            .select(
-                "query_id",
-                "id",
-                "m_text",
-                "m_num",
-                "m_bool",
-                to_f32(F.col("distance")).alias("distance"),
-            )
+        DataFrame or a plain list of vectors (numbered 0..n-1). Returns
+        ``(query_id, id, m_text, m_num, m_bool, distance)`` rows, the
+        top-``k`` per query by ascending distance; each query's rows equal
+        its standalone :meth:`query_df`. Plan shape and the ``approx``
+        tiers are described in :meth:`_plan`."""
+        out = self._plan(queries, k, filter, probes, radius, approx, rerank)
+        return _top(out, "distance", k, per_query=True).select(
+            "query_id", "id", "m_text", "m_num", "m_bool",
+            to_f32(F.col("distance")).alias("distance"),
         )
 
     def query_many(
@@ -2318,26 +1948,48 @@ class Database:
     def invalidate_centroid_cache(self) -> None:
         self._centroid_cache = None
 
-    def _probe_cluster_ids(self, vec: list[float], probes: int) -> list[int]:
-        """Rank centroids by distance driver-side and keep the closest
-        ``min(probes, #centroids)`` (/root/reference/src/cores/index.rs:176-177,
-        255-275). NaN distances sort last (:269-272)."""
+    def _probe_cluster_ids(self, vecs: list[list[float]], probes: int) -> list[list[int]]:
+        """For each query vector, rank the centroids by distance
+        driver-side and keep the closest ``min(probes, #centroids)``
+        (reference ``src/cores/index.rs:176-177, 255-275``). NaN
+        distances sort last (:269-272). Every serving tier probes through
+        this one function, so a batch probes exactly as its queries would
+        alone."""
         import numpy as np
 
         rows = self.centroid_rows()
         if not rows:
-            return []
+            return [[] for _ in vecs]
         ids = np.array([c for c, _ in rows])
         mat = np.array([v for _, v in rows], dtype=np.float64)
-        q = np.array(vec, dtype=np.float64)
-        if self.params.metric == "euclidean":
-            d = ((mat - q) ** 2).sum(axis=1)
-        else:
-            norms = np.linalg.norm(mat, axis=1) * np.linalg.norm(q)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                d = 1.0 - (mat @ q) / norms
-        order = np.argsort(np.where(np.isnan(d), np.inf, d), kind="stable")
-        return [int(i) for i in ids[order][: max(1, min(probes, len(rows)))]]
+        mat_norms = np.linalg.norm(mat, axis=1)
+        keep = max(1, min(probes, len(rows)))
+        out = []
+        for vec in vecs:
+            q = np.array(vec, dtype=np.float64)
+            if self.params.metric == "euclidean":
+                d = ((mat - q) ** 2).sum(axis=1)
+            else:
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    d = 1.0 - (mat @ q) / (mat_norms * np.linalg.norm(q))
+            order = np.argsort(np.where(np.isnan(d), np.inf, d), kind="stable")
+            out.append([int(i) for i in ids[order][:keep]])
+        return out
+
+
+def _top(df: DataFrame, col: str, n: int, per_query: bool) -> DataFrame:
+    """The ``n`` rows with the smallest ``col`` (ties broken by id):
+    overall as ``ORDER BY … LIMIT``, or per ``query_id`` through a
+    ``row_number`` window."""
+    order = [F.col(col).asc_nulls_last(), F.col("id")]
+    if not per_query:
+        return df.orderBy(*order).limit(n)
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= n)
+        .drop("__rn")
+    )
 
 
 def _map_expr(mapping: dict, value_type: str):

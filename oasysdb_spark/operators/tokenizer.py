@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from oasysdb_spark.sources.tables import read_parquet_cached
 
 from oasysdb_spark.functions.text import TOKEN_RE
-from oasysdb_spark.session import free_local_checkpoint, tiny_df
+from oasysdb_spark.session import free_local_checkpoint
 
 END_OF_WORD = "</w>"
 # compiled from the SAME constant functions/text.tokens splits on the
@@ -377,16 +377,6 @@ def bpe_train(
         return _bpe_train_distributed(floored, n_merges, min_pair_count)
     finally:
         floored.unpersist()
-
-
-def merges_df(spark: SparkSession, merges: list[tuple[str, str, int]]) -> DataFrame:
-    """The learned merge table as a (rank, left, right, pair_count)
-    frame — tiny by construction (≤ n_merges rows)."""
-    return tiny_df(
-        spark,
-        [(i, l, r, c) for i, (l, r, c) in enumerate(merges)],
-        "rank int, left string, right string, pair_count bigint",
-    )
 
 
 def encode_pretoken(

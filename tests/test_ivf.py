@@ -98,12 +98,105 @@ def test_query_many_indexed_agrees_with_single(indexed_db):
         )
 
 
+def test_query_many_cosine_and_dataframe_input_agree_with_single(spark, tmp_path):
+    """The batch agrees with N single queries on a cosine IVF collection
+    too, a (query_id, qvec) DataFrame batch answers exactly like the same
+    list batch, and a zero-norm query (no defined cosine) comes back
+    empty on both paths instead of breaking the batch."""
+    db = Database.configure(spark, str(tmp_path / "cos"), dimension=DIM,
+                            metric="cosine", density=16)
+    rows = [
+        (f"c{i:04d}", [float((i * (j + 3)) % 11) - 5.0 for j in range(DIM)],
+         {}, {"number": float(i)}, {})
+        for i in range(120)
+    ]
+    db.insert_batch(spark.createDataFrame(rows, RECORD_SCHEMA))
+    build_index(db, seed=7)
+    qs = [[1.0] * DIM, [0.0] * DIM, [float(j) - 3.5 for j in range(DIM)]]
+    batched = db.query_many(qs, k=5, probes=2)
+    for i, q in enumerate(qs):
+        assert batched.get(i, []) == db.query(q, k=5, probes=2)
+    assert batched.get(1, []) == [] and len(batched[0]) == 5
+    df = spark.createDataFrame(
+        [(10 * i, q) for i, q in enumerate(qs)], "query_id bigint, qvec array<double>"
+    )
+    assert db.query_many(df, k=5, probes=2) == {10 * i: v for i, v in batched.items()}
+
+
+def test_query_equals_query_many_on_probe_near_tie(spark, tmp_path):
+    """A query whose two nearest centroids are a floating-point near-tie
+    probes the same cluster alone and in a batch: both paths rank
+    centroids with one formula, so query(q) == query_many([q])[0]
+    (and the same inside a larger batch)."""
+    c = [-0.5874276757240295, 0.37970173358917236, -0.016804279759526253,
+         1.615681767463684]
+    db = Database.configure(spark, str(tmp_path / "tie"), dimension=4, density=1)
+    db.insert(c[::-1], record_id="a")
+    db.insert(c, record_id="b")
+    build_index(db, seed=42)
+    q = [0.73] * 4
+    single = db.query(q, k=1, probes=1)
+    assert db.query_many([q], k=1, probes=1)[0] == single
+    assert db.query_many([q, [0.0, 1.0, 2.0, 3.0]], k=1, probes=1)[0] == single
+
+
+def test_one_records_read_per_call(spark, tmp_path, monkeypatch):
+    """Serving and the read-modify-write verbs read the records table once
+    per call: whether the table is indexed comes from the frame the call
+    already read, not from a second is_indexed() read."""
+    from oasysdb_spark.core.tables import VersionedTable
+
+    db = Database.configure(spark, str(tmp_path / "reads"), dimension=DIM, density=16)
+    rows = [(f"r{i:03d}", [float(i)] * DIM, {}, {"number": float(i)}, {})
+            for i in range(64)]
+    db.insert_batch(spark.createDataFrame(rows, RECORD_SCHEMA))
+    build_index(db, seed=3)
+    db.centroid_rows()  # warm the centroid cache: count records reads only
+    calls = []
+    orig = VersionedTable.read
+    monkeypatch.setattr(
+        VersionedTable, "read", lambda self, s: calls.append(self.root) or orig(self, s)
+    )
+    qdf = spark.createDataFrame([(0, [1.0] * DIM), (1, [9.0] * DIM)],
+                                "query_id bigint, qvec array<double>")
+    upd = spark.createDataFrame([("r010", {"t": "x"}, {}, {})],
+                                "id string, m_text map<string,string>, "
+                                "m_num map<string,double>, m_bool map<string,boolean>")
+    for name, call in [
+        ("query", lambda: db.query([1.0] * DIM, k=3, probes=2)),
+        ("query_many list", lambda: db.query_many([[1.0] * DIM, [9.0] * DIM], k=3)),
+        ("query_many frame", lambda: db.query_many(qdf, k=3)),
+        ("delete", lambda: db.delete(["r020", "r021"])),
+        ("update_metadata_batch", lambda: db.update_metadata_batch(upd)),
+        ("update_metadata", lambda: db.update_metadata("r011", {"t": "y"})),
+    ]:
+        calls.clear()
+        call()
+        assert calls == [db.records.root], (name, calls)
+
+
 def test_partition_pruning_in_plan(indexed_db):
     """The probed scan must prune cluster partitions: the parquet scan's
     PartitionFilters should carry the cluster_id IN (...) predicate."""
     df = indexed_db.query_df([5.0] * DIM, k=10, probes=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "cluster_id" in plan and ("PartitionFilters" in plan or "partition" in plan.lower())
+
+
+def test_serving_plan_shapes(indexed_db):
+    """One query attaches as plan literals: no broadcast join, and the
+    plan ends in TakeOrderedAndProject (the bounded heap). A batch is
+    pruned by the static cluster_id partition filter and probes on the
+    driver, so its plan runs no Arrow Python UDF."""
+    single = indexed_db.query_df([5.0] * DIM, k=10, probes=2)._jdf.queryExecution()
+    plan = single.executedPlan()
+    assert "BroadcastHashJoin" not in plan.toString()
+    assert plan.nodeName() == "TakeOrderedAndProject"
+    batch = indexed_db.query_many_df([[5.0] * DIM, [100.0] * DIM], k=10, probes=2)
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    pf = plan.split("PartitionFilters")[1][:300]
+    assert "cluster_id" in pf and "IN (" in pf.upper()
+    assert "ArrowEvalPython" not in plan
 
 
 def test_split_oversized(spark, tmp_path):
