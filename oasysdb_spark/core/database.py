@@ -37,6 +37,7 @@ import uuid
 from contextlib import contextmanager
 from typing import Any, Iterable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -785,9 +786,7 @@ class Database:
                 final = batch
             n_ingested = final.count()
             if n_ingested > 0:
-                guarded = self._with_dim_guard(final)
-                with self._dim_guard_boundary():
-                    self._insert_batch_body(guarded)
+                self.insert_batch(final)
         finally:
             for df in pins:
                 df.unpersist()
@@ -1039,11 +1038,6 @@ class Database:
                     )
                     return _read_source().join(right, "id", "left_semi")
 
-                def _apply(batch):
-                    guarded = self._with_dim_guard(batch)
-                    with self._dim_guard_boundary():
-                        self._insert_batch_body(guarded)
-
                 if large_source:
                     typed = None
                     if n_incoming <= int(apply_pushdown_limit):
@@ -1102,14 +1096,14 @@ class Database:
                             )
                             pushed_ok = False
                         if pushed_ok:
-                            _apply(batch)
+                            self.insert_batch(batch)
                         else:
                             # the failed read wrote nothing, so the
                             # fallback is a clean first attempt — no
                             # partially-committed rows to collide with
-                            _apply(_fallback_batch())
+                            self.insert_batch(_fallback_batch())
                     else:
-                        _apply(_fallback_batch())
+                        self.insert_batch(_fallback_batch())
                 else:
                     if n_incoming <= int(apply_broadcast_limit):
                         batch = source.join(
@@ -1117,7 +1111,7 @@ class Database:
                         )
                     else:
                         batch = source.join(ins_ids, "id", "left_semi")
-                    _apply(batch)
+                    self.insert_batch(batch)
         finally:
             for p in pins:
                 p.unpersist()
@@ -1589,17 +1583,6 @@ class Database:
         self.centroids.write(cents.where(~F.col("cluster_id").isin(cluster_ids)))
         self._centroid_cache = None
 
-    def _cleanup_empty_clusters(self) -> None:
-        """Drop centroids whose cluster lost its last member, derived from
-        a full liveness scan (used by paths that rewrote the whole table)."""
-        if not self.centroids.exists():
-            return
-        live = self.records_df().select("cluster_id").distinct()
-        cents = self.centroids.read(self.spark)
-        kept = cents.join(live, "cluster_id", "left_semi")
-        self.centroids.write(kept)
-        self._centroid_cache = None
-
     # ------------------------------------------------------------------
     # query
     # ------------------------------------------------------------------
@@ -1741,8 +1724,6 @@ class Database:
             return df.join(frame, on) if on else df.crossJoin(frame)
 
         if approx == "pq":
-            import numpy as np
-
             from oasysdb_spark.index.pq import (
                 adc_score_col,
                 adc_score_expr,
@@ -1940,41 +1921,31 @@ class Database:
     # ------------------------------------------------------------------
 
     def centroid_rows(self) -> list[tuple[int, list[float]]]:
+        """``(cluster_id, centroid)`` pairs sorted by ``cluster_id`` — the
+        one centroid order, so position ties rank the same everywhere."""
         if self._centroid_cache is None:
             rows = self.centroids.read(self.spark).select("cluster_id", "centroid").collect()
-            self._centroid_cache = [(r["cluster_id"], list(r["centroid"])) for r in rows]
+            self._centroid_cache = sorted((r["cluster_id"], list(r["centroid"])) for r in rows)
         return self._centroid_cache
 
     def invalidate_centroid_cache(self) -> None:
         self._centroid_cache = None
 
     def _probe_cluster_ids(self, vecs: list[list[float]], probes: int) -> list[list[int]]:
-        """For each query vector, rank the centroids by distance
-        driver-side and keep the closest ``min(probes, #centroids)``
-        (reference ``src/cores/index.rs:176-177, 255-275``). NaN
-        distances sort last (:269-272). Every serving tier probes through
-        this one function, so a batch probes exactly as its queries would
-        alone."""
-        import numpy as np
+        """For each query vector, the ids of its ``min(probes,
+        #centroids)`` nearest clusters, nearest first (reference
+        ``src/cores/index.rs:176-177, 255-275``). Every serving tier
+        probes through this one function, and it ranks with the same
+        :func:`~oasysdb_spark.index.ivf.nearest_centroids` that assigned
+        each record its cluster."""
+        from oasysdb_spark.index.ivf import nearest_centroids
 
         rows = self.centroid_rows()
         if not rows:
             return [[] for _ in vecs]
         ids = np.array([c for c, _ in rows])
-        mat = np.array([v for _, v in rows], dtype=np.float64)
-        mat_norms = np.linalg.norm(mat, axis=1)
-        keep = max(1, min(probes, len(rows)))
-        out = []
-        for vec in vecs:
-            q = np.array(vec, dtype=np.float64)
-            if self.params.metric == "euclidean":
-                d = ((mat - q) ** 2).sum(axis=1)
-            else:
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    d = 1.0 - (mat @ q) / (mat_norms * np.linalg.norm(q))
-            order = np.argsort(np.where(np.isnan(d), np.inf, d), kind="stable")
-            out.append([int(i) for i in ids[order][:keep]])
-        return out
+        pos = nearest_centroids(vecs, [v for _, v in rows], self.params.metric, probes)
+        return ids[pos].tolist()
 
 
 def _top(df: DataFrame, col: str, n: int, per_query: bool) -> DataFrame:

@@ -109,10 +109,10 @@ def build_index(
         n=n,
     )
 
-    assigned = records.withColumn(
-        "cluster_id",
-        _argmin_assigner(db.spark, centroids, db.params.metric)(F.col("embedding")),
+    assign = topk_cluster_assigner(
+        db.spark, list(enumerate(centroids)), db.params.metric, 1
     )
+    assigned = records.withColumn("cluster_id", assign(F.col("embedding"))[0])
     db.records.write(assigned, partition_by=["cluster_id"])
 
     # Centroids + sizes from the clustered table (one cheap agg; sizes feed
@@ -256,8 +256,9 @@ def fit_centroids(
 # index-build-sized fit on full k-means++ and routes only the large
 # blocking fits (big sample × many clusters) to the cheap path.
 KMEANSPP_WORK_BUDGET = 5_000_000
-# Row-chunk for the n×k distance matrix so a 100k-sample × many-k fit
-# stays bounded instead of materializing multi-GB arrays. The chunk
+# Row-chunk for nearest_centroids' n×k distance matrix, so a 100k-sample
+# × many-k fit or a large Arrow batch stays bounded instead of
+# materializing multi-GB arrays. The chunk
 # row count ADAPTS to k: the transient distance matrix is chunk × k
 # float64, so a fixed row chunk that is "a few hundred MB" at k=1000
 # becomes tens of GB at k=100k (the blocking tier scales k with corpus
@@ -266,13 +267,41 @@ _ASSIGN_BUDGET_ELEMS = 50_000_000
 _ASSIGN_CHUNK = 16_384  # upper bound; shrinks when k is large
 
 
-def _argmin_labels(mat: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
-    c2 = (c**2).sum(axis=1)[None, :]
-    out = np.empty(len(mat), dtype=np.int64)
-    step = max(64, min(_ASSIGN_CHUNK, _ASSIGN_BUDGET_ELEMS // max(len(c), 1)))
-    for s in range(0, len(mat), step):
-        chunk = mat[s : s + step]
-        out[s : s + step] = (-2.0 * (chunk @ c.T) + c2).argmin(axis=1)
+def nearest_centroids(x, cents, metric: str = "euclidean", keep: int = 1) -> "np.ndarray":
+    """Positions of the ``keep`` nearest rows of ``cents`` for each row of
+    ``x``, nearest first: an ``(n, min(keep, len(cents)))`` int64 array.
+    The one centroid ranking of the IVF stack — fit, build, insert, probe
+    and PQ encode all call it, so a record's own vector always probes the
+    cluster it was stored in first (reference
+    ``src/cores/index.rs:241-275``).
+
+    Euclidean ranks by ``|c|² − 2x·c`` (``|x|²`` is constant per row),
+    cosine by ``1 − x·c/(|x||c|)``. A NaN distance (a zero norm) ranks
+    last, as in the reference (``:269-272``), and ties go to the lower
+    position. Rows run in chunks sized to ``_ASSIGN_BUDGET_ELEMS``
+    distances, so the transient matrix stays bounded whatever k is."""
+    cents = np.asarray(cents, dtype=np.float64)
+    x = np.asarray(x, dtype=np.float64).reshape(-1, cents.shape[1])
+    keep = min(keep, len(cents))
+    if metric == "euclidean":
+        c2 = (cents**2).sum(axis=1)[None, :]
+    else:
+        cn = np.linalg.norm(cents, axis=1)[None, :]
+    out = np.empty((len(x), keep), dtype=np.int64)
+    step = max(64, min(_ASSIGN_CHUNK, _ASSIGN_BUDGET_ELEMS // max(len(cents), 1)))
+    for s in range(0, len(x), step):
+        chunk = x[s : s + step]
+        if metric == "euclidean":
+            d = -2.0 * (chunk @ cents.T) + c2
+        else:
+            with np.errstate(invalid="ignore", divide="ignore"):
+                xn = np.linalg.norm(chunk, axis=1, keepdims=True)
+                d = 1.0 - (chunk @ cents.T) / (xn * cn)
+        d[np.isnan(d)] = np.inf
+        if keep == 1:
+            out[s : s + step, 0] = d.argmin(axis=1)
+        else:
+            out[s : s + step] = np.argsort(d, axis=1, kind="stable")[:, :keep]
     return out
 
 
@@ -322,7 +351,7 @@ def _kmeans_fit_local(mat: "np.ndarray", k: int, seed: int, max_iter: int) -> li
 
     labels = np.full(n, -1)
     for _ in range(max_iter):
-        new_labels = _argmin_labels(mat, c)
+        new_labels = nearest_centroids(mat, c)[:, 0]
         if (new_labels == labels).all():
             break
         labels = new_labels
@@ -338,59 +367,28 @@ def _kmeans_fit_local(mat: "np.ndarray", k: int, seed: int, max_iter: int) -> li
     return [[float(x) for x in row] for row in c]
 
 
-def topk_cluster_assigner(spark, centroids: list[list[float]], metric: str, probes: int):
-    """Arrow-batched top-``probes`` nearest clusters per row (array<int>) —
-    the multi-probe analog of :func:`_argmin_assigner`, used by query-side
-    probing in similarity joins (/root/reference/src/cores/index.rs:176-182
-    semantics applied to a whole table of queries at once)."""
-    from pyspark.sql.functions import pandas_udf
-
-    bc = spark.sparkContext.broadcast((np.asarray(centroids, dtype=np.float64), metric))
-    p = probes
-
-    @pandas_udf("array<int>")
-    def _assign(emb: pd.Series) -> pd.Series:
-        cents, m = bc.value
-        x = np.asarray(emb.tolist(), dtype=np.float64)
-        if m == "euclidean":
-            d = -2.0 * (x @ cents.T) + (cents**2).sum(axis=1)[None, :]
-        else:
-            xn = np.linalg.norm(x, axis=1, keepdims=True)
-            cn = np.linalg.norm(cents, axis=1)[None, :]
-            denom = np.where(xn * cn == 0, 1.0, xn * cn)
-            d = 1.0 - (x @ cents.T) / denom
-        kk = min(p, d.shape[1])
-        idx = np.argsort(d, axis=1, kind="stable")[:, :kk]
-        return pd.Series([row.astype("int32").tolist() for row in idx])
-
-    return _assign
-
-
-def _argmin_assigner(spark, centroids: list[list[float]], metric: str):
-    """Arrow-batched nearest-centroid argmin (the 'SIMD analog' of
-    /root/reference/src/cores/index.rs:241-253): one ``X @ C.T`` per batch
-    via BLAS. Linear in rows — never materializes the N×k pair explosion a
-    crossJoin-based argmin would — and the centroid matrix ships once per
-    executor via broadcast."""
+def topk_cluster_assigner(spark, rows: list[tuple[int, list[float]]], metric: str, probes: int):
+    """Pandas UDF factory: the ids of the ``probes`` nearest clusters per
+    row (array<int>, nearest first), ranked by :func:`nearest_centroids`
+    one Arrow batch at a time. ``rows`` are ``(cluster_id, centroid)``
+    pairs; the centroid matrix ships once per executor via broadcast, and
+    the work stays linear in rows — no N×k crossJoin. Build and insert
+    take element 0; similarity joins explode the list."""
     from pyspark.sql.functions import pandas_udf
 
     bc = spark.sparkContext.broadcast(
-        (np.asarray(centroids, dtype=np.float64), metric)
+        (
+            np.asarray([c for c, _ in rows], dtype=np.int32),
+            np.asarray([v for _, v in rows], dtype=np.float64),
+            metric,
+        )
     )
 
-    @pandas_udf("int")
+    @pandas_udf("array<int>")
     def _assign(emb: pd.Series) -> pd.Series:
-        cents, m = bc.value
-        x = np.asarray(emb.tolist(), dtype=np.float64)
-        if m == "euclidean":
-            # |x|^2 - 2 x·c + |c|^2; |x|^2 constant per row for argmin
-            d = -2.0 * (x @ cents.T) + (cents**2).sum(axis=1)[None, :]
-        else:
-            xn = np.linalg.norm(x, axis=1, keepdims=True)
-            cn = np.linalg.norm(cents, axis=1)[None, :]
-            denom = np.where(xn * cn == 0, 1.0, xn * cn)
-            d = 1.0 - (x @ cents.T) / denom
-        return pd.Series(d.argmin(axis=1).astype("int32"))
+        ids, cents, m = bc.value
+        pos = nearest_centroids(emb.tolist(), cents, m, keep=probes)
+        return pd.Series(ids[pos].tolist())
 
     return _assign
 
@@ -405,16 +403,9 @@ def _write_centroids(db, rows: list[tuple[int, list[float], int]]) -> None:
 
 def assign_clusters(db, df: DataFrame) -> DataFrame:
     """Assign each row of ``df`` (record schema) to its nearest existing
-    centroid (/root/reference/src/cores/index.rs:241-253) via the
-    Arrow-batched BLAS argmin — linear in rows, no N×k pair explosion."""
-    rows = db.centroid_rows()
-    ordered = sorted(rows)  # centroid matrix indexed by position
-    ids = [c for c, _ in ordered]
-    mat = [v for _, v in ordered]
-    assigner = _argmin_assigner(db.spark, mat, db.params.metric)
-    idx = assigner(F.col("embedding"))
-    id_map = F.array(*[F.lit(i) for i in ids])
-    return df.withColumn("cluster_id", F.element_at(id_map, idx + 1))
+    centroid (/root/reference/src/cores/index.rs:241-253)."""
+    assign = topk_cluster_assigner(db.spark, db.centroid_rows(), db.params.metric, 1)
+    return df.withColumn("cluster_id", assign(F.col("embedding"))[0])
 
 
 def refresh_centroids(db) -> None:
@@ -516,8 +507,7 @@ def _two_means(mat, seed: int = 42, max_iter: int = 25):
     centers = mat[[first, second]].copy()
     labels = np.zeros(n, dtype=np.int64)
     for _ in range(max_iter):
-        d = ((mat[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        new_labels = d.argmin(axis=1)
+        new_labels = nearest_centroids(mat, centers)[:, 0]
         if (new_labels == labels).all():
             break
         labels = new_labels

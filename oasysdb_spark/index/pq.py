@@ -32,6 +32,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oasysdb_spark.errors import InvalidArgumentError
+from oasysdb_spark.index.ivf import (
+    _kmeans_fit_local,
+    fit_centroids,
+    nearest_centroids,
+    topk_cluster_assigner,
+)
 from oasysdb_spark.session import tiny_df
 
 
@@ -49,8 +55,6 @@ def fit_codebooks(
     ``df`` must expose an ``embedding`` array column whose dimension is
     divisible by ``m``. Each subspace is quantized with the same seeded
     local k-means the IVF tier uses (small k — k-means++ always)."""
-    from oasysdb_spark.index.ivf import _kmeans_fit_local
-
     if n is None:
         n = df.count()
     if n == 0:
@@ -68,8 +72,6 @@ def _fit_codebooks_local(
 ) -> np.ndarray:
     """Driver-side per-subspace codebook fit over an (n, dim) sample
     matrix — shared by the plain PQ fit and the OPQ alternation."""
-    from oasysdb_spark.index.ivf import _kmeans_fit_local
-
     dim = mat.shape[1]
     if dim % m != 0:
         raise InvalidArgumentError(f"dimension {dim} not divisible by m={m}")
@@ -87,16 +89,14 @@ def _fit_codebooks_local(
 
 
 def _encode_local(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
-    """Driver-side encode of an (n, dim) matrix: per-subspace argmin
-    codeword indices, shape (n, m) int32 — the same BLAS shape the
-    distributed ``encode`` UDF runs per Arrow batch."""
+    """Encode an (n, dim) matrix: each subspace's nearest codeword
+    (:func:`~oasysdb_spark.index.ivf.nearest_centroids`), shape (n, m)
+    int32. The OPQ fit calls it driver-side and the ``encode`` UDF once
+    per Arrow batch."""
     m, k, dsub = books.shape
     codes = np.empty((len(mat), m), dtype=np.int32)
     for j in range(m):
-        sub = mat[:, j * dsub : (j + 1) * dsub]
-        c = books[j]
-        d = -2.0 * (sub @ c.T) + (c**2).sum(axis=1)[None, :]
-        codes[:, j] = d.argmin(axis=1)
+        codes[:, j] = nearest_centroids(mat[:, j * dsub : (j + 1) * dsub], books[j])[:, 0]
     return codes
 
 
@@ -188,17 +188,10 @@ def encode(
     @F.pandas_udf("array<int>")
     def _enc(emb: pd.Series) -> pd.Series:
         books, rot = bc.value
-        m, k, dsub = books.shape
         x = np.asarray(emb.tolist(), dtype=np.float64)
         if rot is not None:
             x = x @ rot
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
-            sub = x[:, j * dsub : (j + 1) * dsub]
-            c = books[j]
-            d = -2.0 * (sub @ c.T) + (c**2).sum(axis=1)[None, :]
-            codes[:, j] = d.argmin(axis=1)
-        return pd.Series([row.tolist() for row in codes])
+        return pd.Series(_encode_local(x, books).tolist())
 
     return df.withColumn("pq_code", _enc(F.col(col)))
 
@@ -588,19 +581,18 @@ def build_ivfpq(
     computed JVM-side (``zip_with`` against the broadcast-joined
     centroid), so the only Python in the build is the Arrow-batched
     assign/encode pair that already powers the IVF and PQ tiers."""
-    from oasysdb_spark.index.ivf import _argmin_assigner, fit_centroids
     from oasysdb_spark.operators.vectorops import load_embeddings
 
     embs = load_embeddings(spark, sf_dir)
     cents = fit_centroids(embs, k=n_clusters, seed=seed)
-    assign = _argmin_assigner(spark, cents, "euclidean")
+    assign = topk_cluster_assigner(spark, list(enumerate(cents)), "euclidean", 1)
     cent_df = tiny_df(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cluster_id int, centroid array<double>",
     )
     resid = (
-        embs.withColumn("cluster_id", assign(F.col("embedding")))
+        embs.withColumn("cluster_id", assign(F.col("embedding"))[0])
         .join(F.broadcast(cent_df), "cluster_id")
         .select(
             "vec_id",
@@ -683,8 +675,7 @@ def ivfpq_knn(
     qvec = np.asarray(_q, dtype=np.float64)
 
     carr = np.asarray(centroids, dtype=np.float64)
-    coarse = ((carr - qvec[None, :]) ** 2).sum(axis=1)
-    probe_ids = [int(c) for c in np.argsort(coarse, kind="stable")[:probes]]
+    probe_ids = nearest_centroids(qvec, carr, keep=probes)[0].tolist()
     tab_df = tiny_df(
         spark,
         [

@@ -1600,7 +1600,7 @@ def embedding_near_pairs_ivf(
     # 100k sample, k == n//64 overtakes the sample around n ≈ 6.4M and
     # the fit degenerates to one centroid per sample row. Past
     # fit_centroids' local_fit_limit the grown sample routes to MLlib
-    # k-means|| automatically; _argmin_labels' chunking is k-adaptive so
+    # k-means|| automatically; nearest_centroids' chunking is k-adaptive so
     # the local path's transient distance matrix stays ~400 MB whatever
     # k is.
     n = embs.count()

@@ -450,15 +450,15 @@ def cluster_balanced_sample(
     move). Same deterministic keep rule as the label twin; no SQL oracle
     by nature (learned clustering) — the twin carries the oracle row,
     and tests gate determinism + proportion convergence."""
-    from oasysdb_spark.index.ivf import _argmin_assigner, fit_centroids
+    from oasysdb_spark.index.ivf import fit_centroids, topk_cluster_assigner
 
     embs = read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
     n = embs.count()
     k = min(n_clusters, n)
     C = fit_centroids(embs.select("embedding"), k=k, seed=seed, max_iter=10, n=n)
-    assigner = _argmin_assigner(spark, C, "euclidean")
+    assigner = topk_cluster_assigner(spark, list(enumerate(C)), "euclidean", 1)
     labeled = embs.select(
-        "vec_id", assigner(F.col("embedding")).alias("cluster_id")
+        "vec_id", assigner(F.col("embedding"))[0].alias("cluster_id")
     )
     return _balanced_sample_summary(labeled, "cluster_id")
 

@@ -92,14 +92,10 @@ def knn_join_ivf(
         F.col("m_num")["label"].cast("int").alias("label"),
         "cluster_id",
     )
-    ordered = sorted(db.centroid_rows())
-    id_map = F.array(*[F.lit(c) for c, _ in ordered])
-    top_p = topk_cluster_assigner(spark, [v for _, v in ordered], db.params.metric, probes)
+    top_p = topk_cluster_assigner(spark, db.centroid_rows(), db.params.metric, probes)
     left = (
         rec.where(F.col("vec_id") < max_left)
-        .drop("cluster_id")
-        .withColumn("__probe", F.explode(top_p(F.col("embedding"))))
-        .withColumn("cluster_id", F.element_at(id_map, F.col("__probe") + 1))
+        .withColumn("cluster_id", F.explode(top_p(F.col("embedding"))))
         .alias("a")
     )
     right = rec.alias("b")

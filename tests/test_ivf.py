@@ -10,6 +10,9 @@
   (test_delete, /root/reference/src/cores/index.rs:334-366).
 """
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -138,6 +141,89 @@ def test_query_equals_query_many_on_probe_near_tie(spark, tmp_path):
     single = db.query(q, k=1, probes=1)
     assert db.query_many([q], k=1, probes=1)[0] == single
     assert db.query_many([q, [0.0, 1.0, 2.0, 3.0]], k=1, probes=1)[0] == single
+
+
+@pytest.mark.parametrize("c, qv", [
+    ([0.001606382429599762, -0.12731382250785828, -1.4105581045150757,
+      0.15059097111225128], 1.8119990825653076),
+    ([-0.8454467058181763, -0.03200168535113335, -0.25857844948768616,
+      1.181558609008789], 0.9582732915878296),
+])
+def test_insert_is_stored_in_its_first_probed_cluster(spark, tmp_path, c, qv):
+    """A vector inserted after the build lands in the cluster its own
+    query probes first, even when its two nearest centroids are a
+    floating-point near-tie: insert and probe rank with one formula."""
+    db = Database.configure(spark, str(tmp_path / "tie"), dimension=4, density=1)
+    db.insert(c[::-1], record_id="a")
+    db.insert(c, record_id="b")
+    build_index(db, seed=42)
+    q = [qv] * 4
+    db.insert(q, record_id="r")
+    assert [r["id"] for r in db.query(q, k=1, probes=1)] == ["r"]
+
+
+def test_exact_tie_split_insert_probes_its_cluster(spark, tmp_path):
+    """Splitting a cluster of identical vectors leaves several equal
+    centroids. centroid_rows() lists them by cluster_id, so insert and
+    probe both break the exact tie toward the lowest id."""
+    v = [1.0, 2.0, 3.0, 4.0]
+    db = Database.configure(spark, str(tmp_path / "same"), dimension=4, density=2)
+    rows = [(f"s{i}", v, {}, {}, {}) for i in range(8)]
+    db.insert_batch(spark.createDataFrame(rows, RECORD_SCHEMA))
+    build_index(db, k=1, seed=42)
+    split_oversized_clusters(db, seed=42)
+    split_oversized_clusters(db, seed=42)
+    ids = [cid for cid, _ in db.centroid_rows()]
+    assert len(ids) == 4 and ids == sorted(ids)
+    db.insert(v, record_id="fresh")
+    stored = db.records_df().where(F.col("id") == "fresh").first()["cluster_id"]
+    assert stored == db._probe_cluster_ids([v], 1)[0][0] == ids[0]
+
+
+def _nearest_reference(x, cents, metric, keep):
+    """Per-pair loop: Σ(c−x)² or 1 − x·c/(|x||c|), NaN last, ties by position."""
+    out = []
+    for row in x:
+        d = []
+        for c in cents:
+            with np.errstate(all="ignore"):
+                if metric == "euclidean":
+                    d.append(float(((row - c) ** 2).sum()))
+                else:
+                    d.append(float(1.0 - (row @ c) / (np.linalg.norm(row) * np.linalg.norm(c))))
+        order = sorted(range(len(cents)),
+                       key=lambda j: (math.isnan(d[j]), 0.0 if math.isnan(d[j]) else d[j], j))
+        out.append(order[:keep])
+    return out
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "cosine"])
+@pytest.mark.parametrize("keep", [1, 3, 10])
+def test_nearest_centroids_matches_reference(monkeypatch, metric, keep):
+    """nearest_centroids against a per-pair loop on small-integer data,
+    where every dot product is exact: exact ties (a duplicated centroid,
+    a scaled one under cosine) go to the lower position, a zero-norm
+    cosine centroid ranks last and a zero-norm cosine query keeps
+    position order, keep > #centroids clamps, and a tiny row budget
+    forces several chunks without changing the answer."""
+    from oasysdb_spark.index import ivf
+
+    rng = np.random.default_rng(5)
+    cents = rng.integers(-3, 4, size=(7, 4)).astype(np.float64)
+    cents[4] = cents[1]
+    cents[5] = 2 * cents[2]
+    cents[6] = 0.0
+    x = rng.integers(-3, 4, size=(300, 4)).astype(np.float64)
+    x[7] = 0.0
+    want = _nearest_reference(x, cents, metric, keep)
+    got = ivf.nearest_centroids(x, cents, metric, keep)
+    assert got.shape == (300, min(keep, 7)) and got.tolist() == want
+    monkeypatch.setattr(ivf, "_ASSIGN_BUDGET_ELEMS", 1)  # 64-row chunks
+    assert ivf.nearest_centroids(x, cents, metric, keep).tolist() == want
+    if metric == "cosine":  # zero-norm query: every distance NaN
+        assert want[7] == list(range(min(keep, 7)))
+    if metric == "cosine" and keep >= 7:  # zero-norm centroid ranks last
+        assert all(r[-1] == 6 for i, r in enumerate(want) if i != 7)
 
 
 def test_one_records_read_per_call(spark, tmp_path, monkeypatch):
