@@ -46,6 +46,141 @@ def _emit(obj, default=None) -> None:
     print(json.dumps(obj, sort_keys=True, default=default))
 
 
+# ---- JDBC verbs: each declares its flags once, for the directory verb
+# and its catalog- twin alike; every flag's dest names the Database
+# keyword it feeds (see _jdbc_kwargs) ----
+
+def _jdbc_source_flags(sp, metadata_help: str | None = None) -> None:
+    sp.add_argument("--url", required=True, help="JDBC url")
+    sp.add_argument("--table", required=True)
+    sp.add_argument("--id-col", default="id")
+    sp.add_argument("--vector-col", default="embedding",
+                    help="SQL array column or JSON-array text column")
+    sp.add_argument("--metadata-cols", default=None, help=metadata_help)
+    sp.add_argument("--driver", default=None, help="JDBC driver class")
+    sp.add_argument("--where", default=None,
+                    help="metadata pre-filter, compiled into the "
+                    "connector's WHERE clause")
+
+
+def _jdbc_range_flags(sp) -> None:
+    sp.add_argument("--partition-column", default=None,
+                    help="issue the read as parallel range queries")
+    sp.add_argument("--lower-bound", default=None)
+    sp.add_argument("--upper-bound", default=None)
+    sp.add_argument("--num-partitions", type=int, default=None)
+
+
+def _from_jdbc_flags(sp) -> None:
+    _jdbc_source_flags(
+        sp, "comma-separated metadata columns to carry (default: every "
+        "non-id/vector column — tables with timestamp/binary columns "
+        "must restrict, since the record metadata enum is "
+        "text|number|boolean)")
+    sp.add_argument("--dimension", type=int, default=None,
+                    help="omit to infer from one probed row")
+    sp.add_argument("--metric", default="euclidean")
+    sp.add_argument("--density", type=int, default=256)
+    sp.add_argument("--relevancy", type=float, default=-1.0)
+    _jdbc_range_flags(sp)
+    sp.add_argument("--watermark-col", default=None,
+                    help="declare the column a later sync-jdbc will "
+                    "watermark on: excluded from default metadata and "
+                    "the sync state seeds at the loaded max (scanned "
+                    "before a partitioned load), so the first sync "
+                    "reads only newer rows")
+    sp.add_argument("--no-index", action="store_true",
+                    help="load without building the IVF tier")
+    sp.add_argument("--seed", type=int, default=42)
+    sp.add_argument("--overwrite", action="store_true")
+
+
+def _sync_jdbc_flags(sp) -> None:
+    _jdbc_source_flags(sp)
+    sp.add_argument("--watermark-col", required=True,
+                    help="monotonic column (autoincrement id / "
+                    "inserted_at) the sync filters on")
+    sp.add_argument("--no-dedup-ids", action="store_true",
+                    help="skip the crash-replay anti-join (at-least-"
+                    "once instead of exactly-once ingest; also "
+                    "hardens the contract to a strictly increasing "
+                    "watermark — tied late arrivals are invisible)")
+    sp.add_argument("--dedup-broadcast-limit", type=int, default=100_000,
+                    help="incoming batches above this row count dedup "
+                    "via a shuffled anti-join instead of broadcasting "
+                    "the id set")
+    sp.add_argument("--num-partitions", type=int, default=None,
+                    help="read the batch as N parallel range queries "
+                    "over the watermark window (numeric/date/timestamp "
+                    "marks) — the backfill scale path")
+
+
+def _reconcile_jdbc_flags(sp) -> None:
+    _jdbc_source_flags(
+        sp, "default: every non-id/vector column, minus the sync "
+        "stream's watermark column when jdbc_sync.json tracks this table")
+    _jdbc_range_flags(sp)
+    sp.add_argument("--large-source", action="store_true",
+                    help="pin only the (id, fingerprint) classify "
+                    "projection instead of the whole source, and "
+                    "re-read just the changed rows through pushed-down "
+                    "id predicates — for sources too big to cache")
+    sp.add_argument("--apply-pushdown-limit", type=int, default=10_000,
+                    help="max changed rows fetched via pushed-down id "
+                    "IN predicates before falling back to a full "
+                    "re-scan + semi-join (large-source mode only)")
+
+
+_JDBC_VERBS = ("from-jdbc", "sync-jdbc", "reconcile-jdbc")
+
+
+def _jdbc_kwargs(args) -> dict:
+    """The keyword arguments of a JDBC verb's Database call, from its
+    parsed flags: every flag dest is a keyword except the target
+    (``--dir``/``--root``/``--name``), the positional ``--url``/
+    ``--table``, and the three flags translated here."""
+    kw = {k: v for k, v in vars(args).items()
+          if k not in ("cmd", "dir", "root", "name", "url", "table", "driver")}
+    kw["metadata_cols"] = _csv_cols(kw["metadata_cols"])
+    kw["properties"] = _jdbc_props(args)
+    if "no_index" in kw:
+        kw["build_index"] = not kw.pop("no_index")
+    if "no_dedup_ids" in kw:
+        kw["dedup_ids"] = not kw.pop("no_dedup_ids")
+    return kw
+
+
+def _run_jdbc(spark, args) -> None:
+    """Run a JDBC verb against a database directory, or against a named
+    collection for its ``catalog-`` twin."""
+    from oasysdb_spark.core.catalog import Catalog
+    from oasysdb_spark.core.database import Database
+
+    verb = args.cmd.removeprefix("catalog-")
+    named = verb != args.cmd
+    target = {"root": args.root, "name": args.name} if named else {}
+    kw = _jdbc_kwargs(args)
+    if verb == "from-jdbc":
+        if named:
+            db = Catalog.open(spark, args.root).create_collection_from_jdbc(
+                args.name, args.url, args.table, **kw
+            )
+        else:
+            db = Database.from_jdbc(spark, args.dir, args.url, args.table, **kw)
+            target = {"dir": args.dir}
+        out = {"count": db.count(), "dimension": db.params.dimension,
+               "indexed": db.is_indexed()}
+    else:
+        db = (Catalog.open(spark, args.root).open_collection(args.name)
+              if named else Database.open(spark, args.dir))
+        if verb == "sync-jdbc":
+            out = {"ingested": db.sync_jdbc(args.url, args.table, **kw)}
+        else:
+            out = db.reconcile_jdbc(args.url, args.table, **kw)
+        out["count"] = db.count()
+    _emit({"ok": True, **target, **out})
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="oasysdb_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -129,99 +264,22 @@ def build_parser() -> argparse.ArgumentParser:
     b.add_argument("--seed", type=int, default=42)
     b.add_argument("--k", type=int, default=None)
 
-    fj = add("from-jdbc",
-             help="configure + bulk-load records from a SQL database "
-             "via JDBC (the v0.7 SQL storage lineage): read, validate "
-             "dimensions in-task, build the IVF tier in one pass")
-    fj.add_argument("--url", required=True, help="JDBC url")
-    fj.add_argument("--table", required=True)
-    fj.add_argument("--id-col", default="id")
-    fj.add_argument("--vector-col", default="embedding",
-                    help="SQL array column or JSON-array text column")
-    fj.add_argument("--dimension", type=int, default=None,
-                    help="omit to infer from one probed row")
-    fj.add_argument("--metric", default="euclidean")
-    fj.add_argument("--density", type=int, default=256)
-    fj.add_argument("--relevancy", type=float, default=-1.0)
-    fj.add_argument("--driver", default=None, help="JDBC driver class")
-    fj.add_argument("--where", default=None,
-                    help="metadata pre-filter, compiled into the "
-                    "connector's WHERE clause")
-    fj.add_argument("--metadata-cols", default=None,
-                    help="comma-separated metadata columns to carry "
-                    "(default: every non-id/vector column — tables with "
-                    "timestamp/binary columns must restrict, since the "
-                    "record metadata enum is text|number|boolean)")
-    fj.add_argument("--partition-column", default=None)
-    fj.add_argument("--lower-bound", default=None)
-    fj.add_argument("--upper-bound", default=None)
-    fj.add_argument("--num-partitions", type=int, default=None)
-    fj.add_argument("--watermark-col", default=None,
-                    help="declare the column a later sync-jdbc will "
-                    "watermark on: excluded from default metadata and "
-                    "the sync state seeds at the loaded max, so the "
-                    "first sync reads only newer rows")
-    fj.add_argument("--no-index", action="store_true",
-                    help="load without building the IVF tier")
-    fj.add_argument("--seed", type=int, default=42)
-    fj.add_argument("--overwrite", action="store_true")
-
-    sj_ = add("sync-jdbc",
-              help="incremental watermark pull from the SQL system of "
-              "record into an existing database (append-only; advances "
-              "the persisted high-water mark after the append commits)")
-    sj_.add_argument("--url", required=True)
-    sj_.add_argument("--table", required=True)
-    sj_.add_argument("--watermark-col", required=True,
-                     help="monotonic column (autoincrement id / "
-                     "inserted_at) the sync filters on")
-    sj_.add_argument("--id-col", default="id")
-    sj_.add_argument("--vector-col", default="embedding")
-    sj_.add_argument("--metadata-cols", default=None)
-    sj_.add_argument("--driver", default=None)
-    sj_.add_argument("--where", default=None)
-    sj_.add_argument("--no-dedup-ids", action="store_true",
-                     help="skip the crash-replay anti-join (at-least-"
-                     "once instead of exactly-once ingest; also "
-                     "hardens the contract to a strictly increasing "
-                     "watermark — tied late arrivals are invisible)")
-    sj_.add_argument("--dedup-broadcast-limit", type=int, default=100_000,
-                     help="incoming batches above this row count dedup "
-                     "via a shuffled anti-join instead of broadcasting "
-                     "the id set")
-    sj_.add_argument("--num-partitions", type=int, default=None,
-                     help="read the batch as N parallel range queries "
-                     "over the watermark window (numeric/date/timestamp "
-                     "marks) — the backfill scale path")
-
-    rj = add("reconcile-jdbc",
-             help="make the records table content-equal to the SQL "
-             "system of record: inserts adds, deletes removals, "
-             "replaces rows whose content fingerprint changed — the "
-             "mutation-propagating complement of append-only sync-jdbc")
-    rj.add_argument("--url", required=True)
-    rj.add_argument("--table", required=True)
-    rj.add_argument("--id-col", default="id")
-    rj.add_argument("--vector-col", default="embedding")
-    rj.add_argument("--metadata-cols", default=None,
-                    help="default: every non-id/vector column, minus "
-                    "the sync stream's watermark column when "
-                    "jdbc_sync.json tracks this table")
-    rj.add_argument("--driver", default=None)
-    rj.add_argument("--where", default=None)
-    rj.add_argument("--partition-column", default=None)
-    rj.add_argument("--lower-bound", default=None)
-    rj.add_argument("--upper-bound", default=None)
-    rj.add_argument("--num-partitions", type=int, default=None)
-    rj.add_argument("--large-source", action="store_true",
-                    help="pin only the (id, fingerprint) classify "
-                    "projection instead of the whole source, and "
-                    "re-read just the changed rows through pushed-down "
-                    "id predicates — for sources too big to cache")
-    rj.add_argument("--apply-pushdown-limit", type=int, default=10_000,
-                    help="max changed rows fetched via pushed-down id "
-                    "IN predicates before falling back to a full "
-                    "re-scan + semi-join (large-source mode only)")
+    _from_jdbc_flags(add(
+        "from-jdbc",
+        help="configure + bulk-load records from a SQL database "
+        "via JDBC (the v0.7 SQL storage lineage): read, validate "
+        "dimensions in-task, build the IVF tier in one pass"))
+    _sync_jdbc_flags(add(
+        "sync-jdbc",
+        help="incremental watermark pull from the SQL system of "
+        "record into an existing database (append-only; advances "
+        "the persisted high-water mark after the append commits)"))
+    _reconcile_jdbc_flags(add(
+        "reconcile-jdbc",
+        help="make the records table content-equal to the SQL "
+        "system of record: inserts adds, deletes removals, "
+        "replaces rows whose content fingerprint changed — the "
+        "mutation-propagating complement of append-only sync-jdbc"))
 
     bp = add("build-pq", help="build/rebuild the PQ compression tier")
     bp.add_argument("--m", type=int, default=8)
@@ -411,17 +469,18 @@ def build_parser() -> argparse.ArgumentParser:
     # ---- catalog family: named collections under one root ----
     # (the reference's v0.3-v0.6 multi-collection lineage,
     # /root/reference/docs/changelog.md:350-368)
-    def add_cat(name, **kw):
+    def add_cat(name, named=False, **kw):
         sp = sub.add_parser(name, **kw)
         sp.add_argument("--root", required=True, help="catalog root directory")
+        if named:
+            sp.add_argument("--name", required=True)
         return sp
 
     ci = add_cat("catalog-init", help="create an empty collection catalog")
     ci.add_argument("--overwrite", action="store_true")
 
-    cc = add_cat("catalog-create",
+    cc = add_cat("catalog-create", named=True,
                  help="create a named collection with its own parameters")
-    cc.add_argument("--name", required=True)
     cc.add_argument("--dimension", type=int, required=True)
     cc.add_argument("--metric", default="euclidean")
     cc.add_argument("--density", type=int, default=256)
@@ -430,80 +489,30 @@ def build_parser() -> argparse.ArgumentParser:
                     "pass no --radius (<=0 disables)")
     cc.add_argument("--overwrite", action="store_true")
 
-    cj = add_cat("catalog-from-jdbc",
-                 help="bulk-load a named collection from a SQL table "
-                 "(the blue-green SQL-rebuild composition: load under a "
-                 "staging name, then catalog-swap)")
-    cj.add_argument("--name", required=True)
-    cj.add_argument("--url", required=True)
-    cj.add_argument("--table", required=True)
-    cj.add_argument("--id-col", default="id")
-    cj.add_argument("--vector-col", default="embedding")
-    cj.add_argument("--metadata-cols", default=None)
-    cj.add_argument("--dimension", type=int, default=None)
-    cj.add_argument("--metric", default="euclidean")
-    cj.add_argument("--density", type=int, default=256)
-    cj.add_argument("--relevancy", type=float, default=-1.0)
-    cj.add_argument("--driver", default=None)
-    cj.add_argument("--where", default=None)
-    cj.add_argument("--partition-column", default=None,
-                    help="issue the bulk read as parallel range queries")
-    cj.add_argument("--lower-bound", default=None)
-    cj.add_argument("--upper-bound", default=None)
-    cj.add_argument("--num-partitions", type=int, default=None)
-    cj.add_argument("--watermark-col", default=None,
-                    help="declare the later sync watermark: excluded "
-                    "from default metadata, sync state seeded pre-load")
-    cj.add_argument("--no-index", action="store_true")
-    cj.add_argument("--seed", type=int, default=42)
-    cj.add_argument("--overwrite", action="store_true")
-
-    cs = add_cat("catalog-sync-jdbc",
-                 help="incremental watermark pull into a NAMED "
-                 "collection (sync-jdbc resolved through the catalog)")
-    cs.add_argument("--name", required=True)
-    cs.add_argument("--url", required=True)
-    cs.add_argument("--table", required=True)
-    cs.add_argument("--watermark-col", required=True)
-    cs.add_argument("--id-col", default="id")
-    cs.add_argument("--vector-col", default="embedding")
-    cs.add_argument("--metadata-cols", default=None)
-    cs.add_argument("--driver", default=None)
-    cs.add_argument("--where", default=None)
-    cs.add_argument("--no-dedup-ids", action="store_true")
-    cs.add_argument("--dedup-broadcast-limit", type=int, default=100_000)
-    cs.add_argument("--num-partitions", type=int, default=None)
-
-    crj = add_cat("catalog-reconcile-jdbc",
-                  help="content reconciliation of a NAMED collection "
-                  "against its SQL system of record (reconcile-jdbc "
-                  "resolved through the catalog)")
-    crj.add_argument("--name", required=True)
-    crj.add_argument("--url", required=True)
-    crj.add_argument("--table", required=True)
-    crj.add_argument("--id-col", default="id")
-    crj.add_argument("--vector-col", default="embedding")
-    crj.add_argument("--metadata-cols", default=None)
-    crj.add_argument("--driver", default=None)
-    crj.add_argument("--where", default=None)
-    crj.add_argument("--partition-column", default=None)
-    crj.add_argument("--large-source", action="store_true")
-    crj.add_argument("--apply-pushdown-limit", type=int, default=10_000)
-    crj.add_argument("--lower-bound", default=None)
-    crj.add_argument("--upper-bound", default=None)
-    crj.add_argument("--num-partitions", type=int, default=None)
+    _from_jdbc_flags(add_cat(
+        "catalog-from-jdbc", named=True,
+        help="bulk-load a named collection from a SQL table "
+        "(the blue-green SQL-rebuild composition: load under a "
+        "staging name, then catalog-swap)"))
+    _sync_jdbc_flags(add_cat(
+        "catalog-sync-jdbc", named=True,
+        help="incremental watermark pull into a NAMED "
+        "collection (sync-jdbc resolved through the catalog)"))
+    _reconcile_jdbc_flags(add_cat(
+        "catalog-reconcile-jdbc", named=True,
+        help="content reconciliation of a NAMED collection "
+        "against its SQL system of record (reconcile-jdbc "
+        "resolved through the catalog)"))
 
     cl = add_cat("catalog-list", help="list collections (name + parameters)")
     cl.add_argument("--counts", action="store_true",
                     help="also count records per collection (a job each)")
 
-    cd = add_cat("catalog-drop", help="drop a named collection")
-    cd.add_argument("--name", required=True)
+    add_cat("catalog-drop", named=True, help="drop a named collection")
 
-    cr = add_cat("catalog-rename",
+    cr = add_cat("catalog-rename", named=True,
                  help="atomically rename a collection (one manifest "
                  "write, no data movement)")
-    cr.add_argument("--name", required=True)
     cr.add_argument("--to", required=True)
 
     cx = add_cat("catalog-swap",
@@ -559,26 +568,8 @@ def main(argv: list[str] | None = None) -> int:
         _emit({"ok": True, "dir": args.dir})
         return 0
 
-    if args.cmd == "from-jdbc":
-        db = Database.from_jdbc(
-            spark, args.dir, args.url, args.table,
-            dimension=args.dimension, id_col=args.id_col,
-            vector_col=args.vector_col,
-            metadata_cols=_csv_cols(args.metadata_cols),
-            metric=args.metric,
-            density=args.density, relevancy=args.relevancy,
-            properties=_jdbc_props(args),
-            where=args.where, partition_column=args.partition_column,
-            lower_bound=args.lower_bound, upper_bound=args.upper_bound,
-            num_partitions=args.num_partitions,
-            watermark_col=args.watermark_col,
-            build_index=not args.no_index, seed=args.seed,
-            overwrite=args.overwrite,
-        )
-        _emit({
-            "ok": True, "dir": args.dir, "count": db.count(),
-            "dimension": db.params.dimension, "indexed": db.is_indexed(),
-        })
+    if args.cmd.removeprefix("catalog-") in _JDBC_VERBS:
+        _run_jdbc(spark, args)
         return 0
 
     if args.cmd == "corpus-to-shards":
@@ -761,57 +752,6 @@ def main(argv: list[str] | None = None) -> int:
                 overwrite=args.overwrite,
             )
             _emit({"ok": True, "root": args.root, "name": args.name})
-        elif args.cmd == "catalog-from-jdbc":
-            db = Catalog.open(spark, args.root).create_collection_from_jdbc(
-                args.name, args.url, args.table,
-                overwrite=args.overwrite,
-                dimension=args.dimension, id_col=args.id_col,
-                vector_col=args.vector_col,
-                metadata_cols=_csv_cols(args.metadata_cols),
-                metric=args.metric, density=args.density,
-                relevancy=args.relevancy,
-                properties=_jdbc_props(args),
-                where=args.where,
-                partition_column=args.partition_column,
-                lower_bound=args.lower_bound,
-                upper_bound=args.upper_bound,
-                num_partitions=args.num_partitions,
-                watermark_col=args.watermark_col,
-                build_index=not args.no_index,
-                seed=args.seed,
-            )
-            _emit({"ok": True, "root": args.root, "name": args.name,
-                   "count": db.count(), "dimension": db.params.dimension,
-                   "indexed": db.is_indexed()})
-        elif args.cmd == "catalog-sync-jdbc":
-            db = Catalog.open(spark, args.root).open_collection(args.name)
-            n = db.sync_jdbc(
-                args.url, args.table, watermark_col=args.watermark_col,
-                id_col=args.id_col, vector_col=args.vector_col,
-                metadata_cols=_csv_cols(args.metadata_cols),
-                properties=_jdbc_props(args), where=args.where,
-                dedup_ids=not args.no_dedup_ids,
-                dedup_broadcast_limit=args.dedup_broadcast_limit,
-                num_partitions=args.num_partitions,
-            )
-            _emit({"ok": True, "root": args.root, "name": args.name,
-                   "ingested": n, "count": db.count()})
-        elif args.cmd == "catalog-reconcile-jdbc":
-            db = Catalog.open(spark, args.root).open_collection(args.name)
-            res = db.reconcile_jdbc(
-                args.url, args.table,
-                id_col=args.id_col, vector_col=args.vector_col,
-                metadata_cols=_csv_cols(args.metadata_cols),
-                properties=_jdbc_props(args), where=args.where,
-                partition_column=args.partition_column,
-                lower_bound=args.lower_bound,
-                upper_bound=args.upper_bound,
-                num_partitions=args.num_partitions,
-                large_source=args.large_source,
-                apply_pushdown_limit=args.apply_pushdown_limit,
-            )
-            _emit({"ok": True, "root": args.root, "name": args.name,
-                   **res, "count": db.count()})
         elif args.cmd == "catalog-list":
             _emit({"collections": Catalog.open(spark, args.root)
                    .list_collections(counts=args.counts)})
@@ -921,30 +861,6 @@ def main(argv: list[str] | None = None) -> int:
 
         n = build_index(db, k=args.k, seed=args.seed)
         _emit({"ok": True, "n_clusters": n})
-    elif args.cmd == "sync-jdbc":
-        n = db.sync_jdbc(
-            args.url, args.table, watermark_col=args.watermark_col,
-            id_col=args.id_col, vector_col=args.vector_col,
-            metadata_cols=_csv_cols(args.metadata_cols),
-            properties=_jdbc_props(args),
-            where=args.where, dedup_ids=not args.no_dedup_ids,
-            dedup_broadcast_limit=args.dedup_broadcast_limit,
-            num_partitions=args.num_partitions,
-        )
-        _emit({"ok": True, "ingested": n, "count": db.count()})
-    elif args.cmd == "reconcile-jdbc":
-        res = db.reconcile_jdbc(
-            args.url, args.table,
-            id_col=args.id_col, vector_col=args.vector_col,
-            metadata_cols=_csv_cols(args.metadata_cols),
-            properties=_jdbc_props(args),
-            where=args.where, partition_column=args.partition_column,
-            lower_bound=args.lower_bound, upper_bound=args.upper_bound,
-            num_partitions=args.num_partitions,
-            large_source=args.large_source,
-            apply_pushdown_limit=args.apply_pushdown_limit,
-        )
-        _emit({"ok": True, **res, "count": db.count()})
     elif args.cmd == "build-pq":
         from oasysdb_spark.index.pq import build_pq
 

@@ -31,9 +31,11 @@ vector (/root/reference/src/cores/index.rs:8-18).
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import uuid
+import warnings
 from contextlib import contextmanager
 from typing import Any, Iterable
 
@@ -48,6 +50,16 @@ from oasysdb_spark.core.tables import VersionedTable
 from oasysdb_spark.filters import MapLayout, compile_filter
 from oasysdb_spark.functions.vectors import const_distance, distance_expr, to_f32
 from oasysdb_spark.session import tiny_df
+from oasysdb_spark.sources.jdbc import (
+    quote_sql_ident,
+    read_jdbc_raw,
+    read_jdbc_records,
+    records_from_df,
+    watermark_bounds,
+    watermark_literal,
+    watermark_range_predicates,
+    watermark_state,
+)
 
 RECORD_SCHEMA = T.StructType(
     [
@@ -61,6 +73,63 @@ RECORD_SCHEMA = T.StructType(
 
 _PARAMS_FILE = "params.json"
 _JDBC_SYNC_FILE = "jdbc_sync.json"
+
+
+def _load_sync_state(directory: str) -> dict:
+    """The JDBC sync-stream state persisted in ``jdbc_sync.json`` under
+    ``directory`` (``{}`` when there is none). State files that recorded
+    only a timestamp bit get their ``high_kind`` mapped onto the kind
+    enum here (non-timestamp marks persisted as native JSON, so the JSON
+    type disambiguates)."""
+    path = os.path.join(directory, _JDBC_SYNC_FILE)
+    if not os.path.exists(path):
+        return {}
+    with open(path, encoding="utf-8") as f:
+        state = json.load(f)
+    high = state.get("high")
+    if high is not None and state.get("high_kind") is None:
+        state["high_kind"] = (
+            "ts" if state.get("high_is_timestamp")
+            else ("str" if isinstance(high, str) else "num")
+        )
+    return state
+
+
+def _save_sync_state(directory: str, state: dict | None) -> None:
+    """Atomically replace ``jdbc_sync.json`` with ``state``; ``None``
+    deletes it."""
+    path = os.path.join(directory, _JDBC_SYNC_FILE)
+    if state is not None:
+        atomic_write_text(path, json.dumps(state, sort_keys=True))
+    elif os.path.exists(path):
+        os.remove(path)
+
+
+def _require_watermark_col(df: DataFrame, table: str, watermark_col: str) -> None:
+    """Fail a misspelled watermark column on the cheap schema read
+    instead of after an hours-long build (or, worse, via the
+    metadata-enum error when the real mark column falls into the default
+    metadata set)."""
+    if watermark_col not in df.columns:
+        raise errors.InvalidArgumentError(
+            f"JDBC table {table!r} has no watermark column {watermark_col!r}"
+        )
+
+
+def _max_mark(df: DataFrame, watermark_col: str):
+    """The largest watermark value in ``df`` (``None`` when empty)."""
+    return df.agg(F.max(watermark_col)).first()[0]
+
+
+def _bound_at_mark(df: DataFrame, watermark_col: str, high):
+    """Bound a pinned JDBC frame at the watermark mark ``high``
+    (``watermark_col <= mark``) and return ``(bounded frame, kind,
+    persisted mark)``. Without the bound, a cache eviction re-executes
+    the JDBC pull and can ingest rows committed after the mark was
+    fixed — rows the persisted mark says are still ahead."""
+    kind, out = watermark_state(high)
+    bounded = df.where(f"{watermark_col} <= {watermark_literal(out, kind)}")
+    return bounded, kind, out
 
 
 def _content_fingerprint(df: DataFrame) -> DataFrame:
@@ -211,9 +280,7 @@ class Database:
         # under dedup_ids=False, permanent gaps against a re-baselined
         # source). from_jdbc(watermark_col=...) writes its fresh seed
         # AFTER this, so the load-then-sync composition is unaffected.
-        stale_sync = os.path.join(directory, _JDBC_SYNC_FILE)
-        if os.path.exists(stale_sync):
-            os.remove(stale_sync)
+        _save_sync_state(directory, None)
         db = cls(spark, directory, params)
         empty = spark.createDataFrame([], RECORD_SCHEMA)
         db.records.write(empty)
@@ -300,18 +367,12 @@ class Database:
         range while a later range observes newer rows), so their seed
         scans BEFORE any load read — the one-row remote MIN/MAX
         pushdown when there is no ``where`` (no filter text, no
-        dialect hazard), else a column-pruned client-side max over a
-        Spark-parsed scan (one watermark-column transfer; the
+        dialect hazard), else a column-pruned client-side max over the
+        Spark-parsed range scans (one watermark-column transfer; the
         SPARK-dialect filter must not ship verbatim to a remote whose
         dialect could silently misread it). The first sync then reads
         only rows newer than the bulk load instead of re-pulling (and
         re-deduplicating) the whole table."""
-        from oasysdb_spark.sources.jdbc import (
-            read_jdbc_raw,
-            records_from_df,
-            watermark_state,
-        )
-
         if watermark_col is not None and predicates is not None:
             # predicates DROP rows matching none of them (unlike
             # partition bounds, which only shape the ranges); seeding
@@ -325,7 +386,6 @@ class Database:
                 "partition_column/bounds (range-shaping, not filtering) "
                 "or a where pre-filter instead"
             )
-        import json as _json
 
         # ONE-PULL: the whole load — dimension probe, seed-mark
         # derivation, the indexed build's k-sizing count, the k-means
@@ -334,120 +394,45 @@ class Database:
         # however many actions the build takes (un-persisted, a huge
         # table crossed it twice in full plus a whole-table count and
         # a separate seed scan). The pin also makes every stage see the
-        # SAME snapshot of a table that keeps receiving writes mid-load
-        # (the sync/reconcile one-pull discipline).
+        # SAME snapshot of a table that keeps receiving writes mid-load.
         raw = read_jdbc_raw(
             spark, url, table, properties=properties,
             predicates=predicates, where=where,
             partition_column=partition_column, lower_bound=lower_bound,
             upper_bound=upper_bound, num_partitions=num_partitions,
         )
-        if watermark_col is not None and watermark_col not in raw.columns:
-            # fail a misspelled column on the cheap schema read instead
-            # of after an hours-long build (or, worse, via the
-            # metadata-enum error when the real mark column falls into
-            # the default metadata set)
-            raise errors.InvalidArgumentError(
-                f"JDBC table {table!r} has no watermark column "
-                f"{watermark_col!r}"
-            )
-        seed_state: dict | None = None
         high = None
-        if watermark_col is not None and partition_column is not None:
-            # RAGGED-SNAPSHOT guard: a partitioned pull issues N
-            # independent range queries at different instants, so a row
-            # can commit into an already-scanned range while a later
-            # range still observes newer rows — a loaded-frame max
-            # would then exceed that skipped row's mark and the first
-            # sync would never read it (round-14 second-review find).
-            # The seed must therefore be scanned BEFORE any load read:
-            # every row missing from the load committed after this
-            # scan, so its mark is >= the seed by the monotonic
-            # contract and the first sync's window covers it. With no
-            # `where` the scan is the one-row remote MIN/MAX pushdown
-            # (no filter text, so no dialect hazard); with a `where`
-            # the filter is SPARK-dialect text that must not ship
-            # verbatim to the remote, so the max comes from a
-            # column-pruned client-side aggregate over a Spark-parsed
-            # scan — one watermark-column transfer, the documented
-            # price of filtered partitioned seeding.
-            seed_exc = None
-            if where is None:
-                from oasysdb_spark.sources.jdbc import (
-                    remote_watermark_minmax,
+        if watermark_col is not None:
+            _require_watermark_col(raw, table, watermark_col)
+            if partition_column is not None:
+                # RAGGED-SNAPSHOT guard: a loaded-frame max could exceed
+                # the mark of a row that committed into an
+                # already-scanned range, and the first sync would never
+                # read that row. Scanned BEFORE any load read, every row
+                # missing from the load committed after this scan, so
+                # its mark is >= the seed by the monotonic contract and
+                # the first sync's window covers it. A `where` is
+                # SPARK-dialect text that must not ship verbatim to the
+                # remote, so a filtered seed skips the pushdown.
+                _, high = watermark_bounds(
+                    spark, url, table, watermark_col, raw,
+                    properties=properties, pushdown=where is None,
                 )
-
-                try:
-                    _, high = remote_watermark_minmax(
-                        spark, url, table, watermark_col,
-                        properties=properties,
-                    )
-                except Exception as exc:  # noqa: BLE001 — dialect refusal
-                    import warnings
-
-                    warnings.warn(
-                        "remote MAX pushdown for the seed mark failed; "
-                        "falling back to a client-side aggregate: "
-                        f"{type(exc).__name__}: {str(exc)[:200]}",
-                        stacklevel=2,
-                    )
-                    high = None
-                    seed_exc = exc
-            if high is None:
-                pre = read_jdbc_raw(
-                    spark, url, table, properties=properties, where=where,
-                )
-                try:
-                    agg = pre.agg(F.max(watermark_col).alias("h")).first()
-                except Exception as fb_exc:
-                    if seed_exc is not None:
-                        # a genuine connectivity/auth failure fails BOTH
-                        # paths — chain the original remote error as the
-                        # cause so the pointed message survives instead
-                        # of only the fallback's generic scan failure
-                        # (r14 ADVICE; dialect refusals still fall back
-                        # cleanly because the client-side scan succeeds)
-                        raise fb_exc from seed_exc
-                    raise
-                high = agg["h"] if agg is not None else None
         pinned = raw.persist()
-        loaded = pinned
+        loaded, kind, mark = pinned, None, None
         try:
             if watermark_col is not None and partition_column is None:
-                # single-statement pull: one JDBC snapshot, so the max
-                # of the rows actually loaded IS a safe seed (anything
-                # absent committed after the snapshot, hence at or
-                # above it under the monotonic contract) and costs zero
+                # single-statement pull: one JDBC snapshot, so the max of
+                # the rows actually loaded IS a safe seed and costs zero
                 # extra scans — this agg is the action that fills the
                 # cache.
-                agg = pinned.agg(F.max(watermark_col).alias("h")).first()
-                high = agg["h"] if agg is not None else None
-            if watermark_col is not None:
-                seed_state = {
-                    "url": url, "table": table,
-                    "watermark_col": watermark_col, "where": where,
-                    "high": None, "high_kind": None,
-                }
-                if high is not None:
-                    kind, out = watermark_state(high)
-                    seed_state["high"] = out
-                    seed_state["high_kind"] = kind
-                    # bound the LOAD at the seeded mark — without it, a
-                    # cache eviction re-executes the JDBC pull and can
-                    # ingest rows committed mid-load ABOVE the persisted
-                    # mark (the round-13 sync determinism find, carried
-                    # over): dedup_ids=False syncs would re-ingest them
-                    # as duplicates. Rows past the bound are the first
-                    # sync's window. Late TIED commits (== the mark) are
-                    # the same boundary class sync documents: re-read
-                    # inclusively and collapsed by the id dedup.
-                    from oasysdb_spark.sources.jdbc import (
-                        watermark_literal,
-                    )
-
-                    loaded = pinned.where(
-                        f"{watermark_col} <= {watermark_literal(out, kind)}"
-                    )
+                high = _max_mark(pinned, watermark_col)
+            if high is not None:
+                # rows past the bound are the first sync's window; late
+                # TIED commits (== the mark) are the boundary class sync
+                # documents: re-read inclusively and collapsed by the id
+                # dedup
+                loaded, kind, mark = _bound_at_mark(pinned, watermark_col, high)
             records = records_from_df(
                 loaded, table,
                 id_col=id_col, vector_col=vector_col,
@@ -481,11 +466,11 @@ class Database:
                     db._insert_batch_body(guarded)
         finally:
             pinned.unpersist()
-        if seed_state is not None:
-            atomic_write_text(
-                os.path.join(db.dir, _JDBC_SYNC_FILE),
-                _json.dumps(seed_state, sort_keys=True),
-            )
+        if watermark_col is not None:
+            _save_sync_state(db.dir, {
+                "url": url, "table": table, "watermark_col": watermark_col,
+                "where": where, "high": mark, "high_kind": kind,
+            })
         return db
 
     def sync_jdbc(
@@ -555,45 +540,31 @@ class Database:
         state file to re-baseline deliberately).
 
         The window transfers from the SQL database exactly ONCE either
-        way. Steady state (no ``num_partitions``): the raw window reads
-        through one connection into the executor cache, and the next
-        mark derives from that SAME cached frame (max(batch) — no
-        separate max-only scan). ``num_partitions`` issues the BATCH
-        read as that many parallel range queries over the watermark
-        window itself (exact typed cut literals — numeric/date/
-        timestamp marks only), so a backfill window doesn't pull
-        through one socket; its bounds come from a one-row MIN/MAX
-        aggregate subquery pushed to the remote database (falling back
-        to a client-side aggregate when the remote can't parse the
-        filter). Steady-state increments don't need partitioning."""
-        import json as _json
-
-        from oasysdb_spark.sources.jdbc import (
-            quote_sql_ident,
-            read_jdbc_records,
-            records_from_df,
-            remote_watermark_minmax,
-            watermark_literal,
-            watermark_range_predicates,
-            watermark_state,
-        )
-
+        way: one raw read, pinned, bounded at the new mark and mapped
+        to records off the cache. Steady state (no ``num_partitions``):
+        the window reads through one connection and the next mark
+        derives from that SAME pinned frame (max(batch) — no separate
+        max-only scan). ``num_partitions`` issues the read as that many
+        parallel range queries over the watermark window itself (exact
+        typed cut literals — numeric/date/timestamp marks only), so a
+        backfill window doesn't pull through one socket; its bounds
+        come from a one-row MIN/MAX aggregate subquery pushed to the
+        remote database (falling back to a client-side aggregate when
+        the remote can't parse the filter). Steady-state increments
+        don't need partitioning."""
         state_path = os.path.join(self.dir, _JDBC_SYNC_FILE)
         stream_key = {"url": url, "table": table,
                       "watermark_col": watermark_col, "where": where}
-        state: dict = {}
-        if os.path.exists(state_path):
-            with open(state_path, encoding="utf-8") as f:
-                state = _json.load(f)
-            recorded = {k: state.get(k) for k in stream_key}
-            if recorded != stream_key:
-                raise errors.InvalidArgumentError(
-                    f"jdbc sync state at {state_path} tracks {recorded!r}; "
-                    f"refusing to mix with {stream_key!r} — one sync stream "
-                    "per database (a different url/table/watermark/filter "
-                    "under an advanced mark gaps or merges streams "
-                    "silently); delete the state file to re-baseline"
-                )
+        state = _load_sync_state(self.dir)
+        recorded = {k: state.get(k) for k in stream_key}
+        if state and recorded != stream_key:
+            raise errors.InvalidArgumentError(
+                f"jdbc sync state at {state_path} tracks {recorded!r}; "
+                f"refusing to mix with {stream_key!r} — one sync stream "
+                "per database (a different url/table/watermark/filter "
+                "under an advanced mark gaps or merges streams "
+                "silently); delete the state file to re-baseline"
+            )
         if not dedup_ids and state.get("reconciled"):
             raise errors.InvalidArgumentError(
                 f"jdbc sync state at {state_path} records a reconcile on "
@@ -605,16 +576,7 @@ class Database:
                 "that reconciles, or delete the state file to "
                 "re-baseline deliberately"
             )
-        high = state.get("high")
-        high_kind = state.get("high_kind")
-        if high is not None and high_kind is None:
-            # pre-r13 state files recorded only a timestamp bit; map it
-            # onto the kind enum (non-ts marks persisted as native JSON,
-            # so the JSON type disambiguates)
-            high_kind = (
-                "ts" if state.get("high_is_timestamp")
-                else ("str" if isinstance(high, str) else "num")
-            )
+        high, high_kind = state.get("high"), state.get("high_kind")
 
         # tied-mark discipline: under dedup_ids the lower bound is
         # INCLUSIVE, so rows committing late under the current max are
@@ -622,79 +584,40 @@ class Database:
         # re-read; without dedup the bound stays strict and the
         # contract requires a strictly increasing mark (docstring)
         low_op = ">=" if dedup_ids else ">"
-        mark_pred = (
-            f"{watermark_col} {low_op} {watermark_literal(high, high_kind)}"
-            if high is not None
-            else None
-        )
-        scan_where = (
-            f"({where}) AND ({mark_pred})"
-            if where and mark_pred
-            else (where or mark_pred)
-        )
 
-        src = self.spark.read.jdbc(
-            url, table, properties=dict(properties or {})
-        )
-        if watermark_col not in src.columns:
-            raise errors.InvalidArgumentError(
-                f"JDBC table {table!r} has no watermark column "
-                f"{watermark_col!r}"
+        def window(col: str, remote: bool) -> str | None:
+            # the pre-filter AND the mark bound, as Spark-parsed text or
+            # as text that ships verbatim to the remote
+            mark = (
+                f"{col} {low_op} "
+                f"{watermark_literal(high, high_kind, remote=remote)}"
+                if high is not None
+                else None
             )
-        if metadata_cols is None:
-            # the watermark is the sync mechanism, not metadata (and a
-            # temporal mark is outside the metadata type enum)
-            metadata_cols = [
-                c for c in src.columns
-                if c not in (id_col, vector_col, watermark_col)
-            ]
+            return f"({where}) AND ({mark})" if where and mark else (where or mark)
+
+        raw = read_jdbc_raw(self.spark, url, table, properties=properties)
+        _require_watermark_col(raw, table, watermark_col)
+        scan_where = window(watermark_col, remote=False)
+        if scan_where:
+            raw = raw.where(scan_where)
 
         pins: list = []  # persisted frames; released in the one finally
         try:
+            new_high = None
             if num_partitions is not None and int(num_partitions) > 1:
-                # parallel-range backfill. Bounds must exist BEFORE the
-                # read, so this path scans the window min/max first —
-                # pushed down as a one-row remote aggregate subquery
-                # when the remote can parse the filter (v1 JDBC never
-                # pushes aggregates, so the naive df.agg(max) would pull
-                # the whole backfill window through one socket just to
-                # find its edge), falling back to the client-side
-                # aggregate otherwise — with a warning, because the
-                # fallback re-pulls the window an extra time and an
-                # operator should see WHY a backfill got slow.
-                mark_pred_remote = (
-                    f"{quote_sql_ident(watermark_col)} {low_op} "
-                    f"{watermark_literal(high, high_kind, remote=True)}"
-                    if high is not None
-                    else None
+                # parallel-range backfill: the range bounds must exist
+                # BEFORE the read, so the window's min/max is scanned
+                # first (v1 JDBC never pushes aggregates, so the naive
+                # df.agg(max) would pull the whole backfill window
+                # through one socket just to find its edge)
+                lo_scan, new_high = watermark_bounds(
+                    self.spark, url, table, watermark_col, raw,
+                    properties=properties,
+                    where_remote=window(
+                        quote_sql_ident(watermark_col), remote=True
+                    ),
                 )
-                where_remote = (
-                    f"({where}) AND ({mark_pred_remote})"
-                    if where and mark_pred_remote
-                    else (where or mark_pred_remote)
-                )
-                try:
-                    lo_scan, new_high = remote_watermark_minmax(
-                        self.spark, url, table, watermark_col,
-                        properties=properties, where_remote=where_remote,
-                    )
-                except Exception as exc:  # noqa: BLE001 — dialect refusal
-                    import warnings
-
-                    warnings.warn(
-                        "remote MIN/MAX pushdown failed; falling back to "
-                        "a client-side aggregate (the window transfers "
-                        "an extra time through one socket): "
-                        f"{type(exc).__name__}: {str(exc)[:200]}",
-                        stacklevel=2,
-                    )
-                    wm_df = src.where(scan_where) if scan_where else src
-                    agg = wm_df.agg(
-                        F.max(watermark_col).alias("h"),
-                        F.min(watermark_col).alias("l"),
-                    ).first()
-                    lo_scan = agg["l"] if agg is not None else None
-                    new_high = agg["h"] if agg is not None else None
                 if new_high is None:
                     return 0  # nothing past the mark
                 new_kind, high_out = watermark_state(new_high)
@@ -713,55 +636,45 @@ class Database:
                         f"mark is {low_kind}, the scanned max is "
                         f"{new_kind}"
                     )
-                preds = watermark_range_predicates(
-                    watermark_col, window_low, high_out, new_kind,
-                    int(num_partitions),
-                    include_low=(high is None) or dedup_ids,
+                raw = read_jdbc_raw(
+                    self.spark, url, table, properties=properties,
+                    where=where,
+                    predicates=watermark_range_predicates(
+                        watermark_col, window_low, high_out, new_kind,
+                        int(num_partitions),
+                        include_low=(high is None) or dedup_ids,
+                    ),
                 )
-                batch = normalize_records(
-                    read_jdbc_records(
-                        self.spark, url, table,
-                        id_col=id_col, vector_col=vector_col,
-                        metadata_cols=metadata_cols, properties=properties,
-                        predicates=preds, where=where,
-                    )
-                ).persist()
-                pins.append(batch)
-            else:
-                # steady-state ONE-PULL path: read the raw window once,
-                # cache it, derive the next mark from the SAME cached
-                # frame, and map it to records off that cache — the old
-                # design pulled the window twice (a max-only scan, then
-                # the batch). Rows committing mid-read are either in the
-                # cache (covered by the mark) or re-read by the next
-                # sync's window under the monotonic-mark contract. The
-                # explicit upper bound below makes the batch
-                # DETERMINISTIC under a cache eviction/recompute: a
-                # re-pull from JDBC could otherwise pick up rows
-                # committed after the mark was fixed, which dedup_ids
-                # would absorb next sync but dedup_ids=False would
-                # ingest twice (round-13 review finding).
-                raw = (src.where(scan_where) if scan_where else src).persist()
-                pins.append(raw)
-                agg = raw.agg(F.max(watermark_col).alias("h")).first()
-                if agg is None or agg["h"] is None:
+            # ONE-PULL: the window is read once into the executor cache.
+            # Rows committing mid-read are either in the cache (covered
+            # by the mark) or re-read by the next sync's window under the
+            # monotonic-mark contract.
+            raw = raw.persist()
+            pins.append(raw)
+            if new_high is None:
+                # steady state: the next mark derives from the SAME
+                # pinned window — this agg is the action that fills it
+                new_high = _max_mark(raw, watermark_col)
+                if new_high is None:
                     return 0  # nothing past the mark
-                new_high = agg["h"]
-                new_kind, high_out = watermark_state(new_high)
-                bounded = raw.where(
-                    f"{watermark_col} <= "
-                    f"{watermark_literal(high_out, new_kind)}"
+            # the explicit upper bound makes the batch DETERMINISTIC
+            # under a cache eviction/recompute: a re-pull from JDBC
+            # could otherwise pick up rows committed after the mark was
+            # fixed, which dedup_ids would absorb next sync but
+            # dedup_ids=False would ingest twice. The row-local mapping
+            # is not persisted again; each downstream action recomputes
+            # the cheap map off the cache.
+            bounded, new_kind, high_out = _bound_at_mark(
+                raw, watermark_col, new_high
+            )
+            batch = normalize_records(
+                records_from_df(
+                    bounded, table,
+                    id_col=id_col, vector_col=vector_col,
+                    metadata_cols=metadata_cols,
+                    exclude_cols=(watermark_col,),
                 )
-                # row-local mapping over the cached window — not
-                # persisted again; each downstream action recomputes the
-                # cheap map off the cache
-                batch = normalize_records(
-                    records_from_df(
-                        bounded, table,
-                        id_col=id_col, vector_col=vector_col,
-                        metadata_cols=metadata_cols,
-                    )
-                )
+            )
             if dedup_ids:
                 # crash-replay collapse: broadcast the incoming id set
                 # only while it is provably small; a backfill-sized
@@ -795,19 +708,12 @@ class Database:
         # reconciled marker is STICKY across mark advances: rows a past
         # reconcile added ahead of the mark stay ahead until the mark
         # passes them, so the dedup_ids=False hazard never expires
-        atomic_write_text(
-            state_path,
-            _json.dumps(
-                {
-                    **stream_key,
-                    "high": high_out,
-                    "high_kind": new_kind,
-                    **({"reconciled": True} if state.get("reconciled")
-                       else {}),
-                },
-                sort_keys=True,
-            ),
-        )
+        _save_sync_state(self.dir, {
+            **stream_key,
+            "high": high_out,
+            "high_kind": new_kind,
+            **({"reconciled": True} if state.get("reconciled") else {}),
+        })
         return int(n_ingested)
 
     def reconcile_jdbc(
@@ -846,7 +752,7 @@ class Database:
         fingerprint-classify pass scans the pinned copy, and the apply
         side's semi-join re-reads the cache instead of re-executing
         the JDBC pull (the same one-pull discipline as
-        :meth:`sync_jdbc`'s steady-state window). Both sides reduce to
+        :meth:`sync_jdbc`'s window). Both sides reduce to
         row-local ``(id, 16-byte md5)`` content fingerprints
         (:func:`_content_fingerprint`, the same machinery :meth:`diff`
         uses), so the classifying full-outer join shuffles only id/fp
@@ -907,8 +813,8 @@ class Database:
         every reconcile-added row past the mark as a duplicate (the
         strict-mark contract assumes sync is the ONLY writer ahead of
         the mark). Keep ``dedup_ids=True`` (the default) on any stream
-        that reconciles — and the mix is now REFUSED, not just
-        documented: a reconcile on a tracked stream writes a sticky
+        that reconciles; the mix is REFUSED: a reconcile on a
+        tracked stream writes a sticky
         ``reconciled`` marker into ``jdbc_sync.json`` (preserved across
         later mark advances), and :meth:`sync_jdbc` raises on
         ``dedup_ids=False`` when the marker is present.
@@ -921,45 +827,32 @@ class Database:
         verb is the cheap periodic one (the WRITE cost scales with the
         changed set, not the table; the wire cost is the one full
         source transfer the fingerprint comparison inherently needs)."""
-        import json as _json
-
-        from oasysdb_spark.sources.jdbc import (
-            read_jdbc_raw,
-            read_jdbc_records,
-            records_from_df,
+        state = _load_sync_state(self.dir)
+        tracked = state.get("url") == url and state.get("table") == table
+        if tracked and state.get("where") != where:
+            raise errors.InvalidArgumentError(
+                f"jdbc sync state at {os.path.join(self.dir, _JDBC_SYNC_FILE)} "
+                f"tracks where={state.get('where')!r}; reconciling with "
+                f"where={where!r} would mass-insert or mass-delete "
+                "rows the sync stream's pre-filter scopes out — "
+                "pass the stream's filter (or delete the state "
+                "file to re-baseline deliberately)"
+            )
+        exclude = (
+            (state["watermark_col"],)
+            if tracked and state.get("watermark_col") else ()
         )
-
-        exclude: tuple[str, ...] = ()
-        sync_state: dict | None = None
-        state_path = os.path.join(self.dir, _JDBC_SYNC_FILE)
-        if os.path.exists(state_path):
-            with open(state_path, encoding="utf-8") as f:
-                state = _json.load(f)
-            if state.get("url") == url and state.get("table") == table:
-                sync_state = state
-                if state.get("where") != where:
-                    raise errors.InvalidArgumentError(
-                        f"jdbc sync state at {state_path} tracks "
-                        f"where={state.get('where')!r}; reconciling with "
-                        f"where={where!r} would mass-insert or mass-delete "
-                        "rows the sync stream's pre-filter scopes out — "
-                        "pass the stream's filter (or delete the state "
-                        "file to re-baseline deliberately)"
-                    )
-                if state.get("watermark_col"):
-                    exclude = (state["watermark_col"],)
 
         # ONE-PULL: the source crosses the wire exactly once per
         # reconcile. Without the pin, the lazy JDBC frame would execute
         # TWICE — once for the fingerprint-classify pass and again when
         # the apply side's semi-join re-evaluates it — so a large table
-        # paid two full transfers even when nothing changed (the same
-        # double-pull sync_jdbc shed in round 13). The pin also makes
-        # the classify and apply passes see the SAME rows: an uncached
-        # re-pull could observe source mutations committed mid-reconcile
-        # and insert a row the classify pass never counted (the next
-        # reconcile would still self-heal, but the returned counts would
-        # lie about what was applied).
+        # paid two full transfers even when nothing changed. The pin
+        # also makes the classify and apply passes see the SAME rows:
+        # an uncached re-pull could observe source mutations committed
+        # mid-reconcile and insert a row the classify pass never counted
+        # (the next reconcile would still self-heal, but the returned
+        # counts would lie about what was applied).
         def _read_source() -> DataFrame:
             return normalize_records(
                 read_jdbc_records(
@@ -1024,31 +917,16 @@ class Database:
                 ins_ids = delta.where(F.col("change") != "deleted").select(
                     "id"
                 )
-                def _fallback_batch():
-                    # mass-change, non-invertible id type, or a remote
-                    # that refused the pushed predicate: re-pay the
-                    # full transfer once; the footprint win (no
-                    # table-sized pin) still holds. Broadcast the tiny
-                    # id set when it fits — the full re-read must
-                    # never shuffle just to meet 50 ids
-                    right = (
-                        F.broadcast(ins_ids)
-                        if n_incoming <= int(apply_broadcast_limit)
-                        else ins_ids
+                batch = None
+                if large_source and n_incoming <= int(apply_pushdown_limit):
+                    raw = read_jdbc_raw(
+                        self.spark, url, table,
+                        properties=properties, where=where,
                     )
-                    return _read_source().join(right, "id", "left_semi")
-
-                if large_source:
-                    typed = None
-                    if n_incoming <= int(apply_pushdown_limit):
-                        raw = read_jdbc_raw(
-                            self.spark, url, table,
-                            properties=properties, where=where,
-                        )
-                        typed = _raw_id_literals(
-                            raw.schema[id_col].dataType,
-                            [row["id"] for row in ins_ids.collect()],
-                        )
+                    typed = _raw_id_literals(
+                        raw.schema[id_col].dataType,
+                        [row["id"] for row in ins_ids.collect()],
+                    )
                     if typed is not None:
                         # changed-set re-read: the In filters sit
                         # directly on the raw relation, so they compile
@@ -1083,10 +961,7 @@ class Database:
                         # changed-set scan — the insert reads the cache.
                         try:
                             batch.count()
-                            pushed_ok = True
                         except Exception as exc:  # noqa: BLE001
-                            import warnings
-
                             warnings.warn(
                                 "pushed-down changed-set re-read failed;"
                                 " retrying via a full re-scan + "
@@ -1094,51 +969,47 @@ class Database:
                                 f"{type(exc).__name__}: {str(exc)[:200]}",
                                 stacklevel=2,
                             )
-                            pushed_ok = False
-                        if pushed_ok:
-                            self.insert_batch(batch)
-                        else:
                             # the failed read wrote nothing, so the
                             # fallback is a clean first attempt — no
                             # partially-committed rows to collide with
-                            self.insert_batch(_fallback_batch())
-                    else:
-                        self.insert_batch(_fallback_batch())
-                else:
-                    if n_incoming <= int(apply_broadcast_limit):
-                        batch = source.join(
-                            F.broadcast(ins_ids), "id", "left_semi"
-                        )
-                    else:
-                        batch = source.join(ins_ids, "id", "left_semi")
-                    self.insert_batch(batch)
+                            batch = None
+                if batch is None:
+                    # the count-guarded semi-join of the source against
+                    # the changed ids. A large-source reconcile (mass
+                    # change, non-invertible id type, or a remote that
+                    # refused the pushed predicate) re-pays the full
+                    # transfer once; the footprint win (no table-sized
+                    # pin) still holds. Broadcast the id set when it
+                    # fits — a full re-read must never shuffle just to
+                    # meet 50 ids
+                    right = (
+                        F.broadcast(ins_ids)
+                        if n_incoming <= int(apply_broadcast_limit)
+                        else ins_ids
+                    )
+                    batch = (
+                        source if source is not None else _read_source()
+                    ).join(right, "id", "left_semi")
+                self.insert_batch(batch)
         finally:
             for p in pins:
                 p.unpersist()
-        if sync_state is not None:
-            # sticky reconciled marker (r14 ADVICE): reconcile inserts
-            # rows PAST the sync mark, so a later sync_jdbc with
-            # dedup_ids=False would silently re-ingest them as
-            # duplicates — the marker lets sync refuse that mix instead
-            # of documenting it away. RE-READ the state file rather
-            # than rewriting the pre-reconcile snapshot: a scheduled
-            # sync finishing mid-reconcile has advanced the mark, and
-            # writing the stale snapshot back would silently revert it
-            current: dict = {}
-            if os.path.exists(state_path):
-                with open(state_path, encoding="utf-8") as f:
-                    current = _json.load(f)
+        if tracked:
+            # sticky reconciled marker: reconcile inserts rows PAST the
+            # sync mark, so a later sync_jdbc with dedup_ids=False would
+            # silently re-ingest them as duplicates — the marker lets
+            # sync refuse that mix instead of documenting it away.
+            # RE-READ the state file rather than rewriting the
+            # pre-reconcile snapshot: a scheduled sync finishing
+            # mid-reconcile has advanced the mark, and writing the
+            # stale snapshot back would silently revert it
+            current = _load_sync_state(self.dir)
             if (
                 current.get("url") == url
                 and current.get("table") == table
                 and not current.get("reconciled")
             ):
-                atomic_write_text(
-                    state_path,
-                    _json.dumps(
-                        {**current, "reconciled": True}, sort_keys=True
-                    ),
-                )
+                _save_sync_state(self.dir, {**current, "reconciled": True})
         return result
 
     def _default_radius(self) -> float:

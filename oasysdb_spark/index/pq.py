@@ -447,6 +447,23 @@ def load_codebooks_meta(db) -> "tuple[np.ndarray, bool, np.ndarray | None] | Non
     return books, residual, rot
 
 
+def _rerank_top_k(scored: DataFrame, embs: DataFrame, qvec, rerank: int, k: int) -> DataFrame:
+    """The candidate-then-exact tail of every quantized fixture k-NN:
+    keep the best ``max(rerank, k)`` rows of ``scored`` (``vec_id``,
+    approximate ``adc`` score) — nulls last, ties by ``vec_id``; a
+    rerank under k must not shrink the result below k — join their raw
+    vectors from ``embs``, and return the top ``k`` by exact euclidean
+    distance to ``qvec``."""
+    from oasysdb_spark.functions.vectors import const_distance
+    from oasysdb_spark.operators.vectorops import round_dist
+
+    cand = scored.orderBy(F.col("adc").asc_nulls_last(), "vec_id").limit(max(rerank, k))
+    exact = cand.join(embs, "vec_id").select(
+        "vec_id", round_dist(const_distance("euclidean", qvec)).alias("distance")
+    )
+    return exact.orderBy(F.col("distance").asc(), "vec_id").limit(k)
+
+
 def load_codebooks(db) -> "np.ndarray | None":
     """Codebooks only (see :func:`load_codebooks_meta`)."""
     meta = load_codebooks_meta(db)
@@ -466,9 +483,10 @@ def pq_knn(
     codebooks: np.ndarray | None = None,
 ) -> DataFrame:
     """PQ + exact-re-rank k-NN over the embeddings fixture: ADC scores
-    every code row (JVM lookups over 4-byte codes), keeps the ``rerank``
-    best candidates, then computes exact distances for only those rows
-    and returns the top ``k`` — the memory-bounded serving path.
+    every code row (JVM lookups over 4-byte codes), keeps the best
+    ``max(rerank, k)`` candidates, then computes exact distances for
+    only those rows and returns the top ``k`` — the memory-bounded
+    serving path.
 
     Measured recall@10 vs brute force on the isotropic random fixture
     (PQ's worst case — no manifold structure for the codebooks to
@@ -479,8 +497,7 @@ def pq_knn(
 
     Pass ``codes_df``/``codebooks`` to reuse a prebuilt encode (the
     steady-state shape: encode once at ingest, query many times)."""
-    from oasysdb_spark.functions.vectors import const_distance
-    from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding, round_dist
+    from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding
 
     embs = load_embeddings(spark, sf_dir)
     if codebooks is None:
@@ -494,15 +511,8 @@ def pq_knn(
         raise InvalidArgumentError(f"query vec_id {query_vec_id} not found")
 
     table = adc_table(qvec, codebooks)
-    cand = (
-        codes_df.select("vec_id", adc_score_expr(table).alias("adc"))
-        .orderBy(F.col("adc").asc(), "vec_id")
-        .limit(rerank)
-    )
-    exact = cand.join(embs, "vec_id").select(
-        "vec_id", round_dist(const_distance("euclidean", qvec)).alias("distance")
-    )
-    return exact.orderBy(F.col("distance").asc(), "vec_id").limit(k)
+    scored = codes_df.select("vec_id", adc_score_expr(table).alias("adc"))
+    return _rerank_top_k(scored, embs, qvec, rerank, k)
 
 
 def opq_knn(
@@ -529,8 +539,7 @@ def opq_knn(
     data (the fixture is isotropic — PQ's worst case and OPQ's
     no-op case — so the recall gate reuses PQ's bar and the
     MSE-improvement gate runs on correlated synthetic data)."""
-    from oasysdb_spark.functions.vectors import const_distance
-    from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding, round_dist
+    from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding
 
     embs = load_embeddings(spark, sf_dir)
     if opq is None:
@@ -546,15 +555,8 @@ def opq_knn(
     qvec = np.asarray(_q, dtype=np.float64)
 
     table = adc_table(qvec @ rot, books)
-    cand = (
-        codes_df.select("vec_id", adc_score_expr(table).alias("adc"))
-        .orderBy(F.col("adc").asc(), "vec_id")
-        .limit(rerank)
-    )
-    exact = cand.join(embs, "vec_id").select(
-        "vec_id", round_dist(const_distance("euclidean", qvec)).alias("distance")
-    )
-    return exact.orderBy(F.col("distance").asc(), "vec_id").limit(k)
+    scored = codes_df.select("vec_id", adc_score_expr(table).alias("adc"))
+    return _rerank_top_k(scored, embs, qvec, rerank, k)
 
 
 def build_ivfpq(
@@ -638,7 +640,8 @@ def ivfpq_knn(
     residual ``q - centroid_c`` gets its own tiny lookup table, shipped
     as a ``probes``-row broadcast frame and summed by the same
     whole-stage-codegen ``aggregate(zip_with)`` as the flat PQ path —
-    then exact-re-rank the best ``rerank`` candidates from raw vectors.
+    then exact-re-rank the best ``max(rerank, k)`` candidates from raw
+    vectors.
 
     The two approximation levers compose independently: ``probes``
     bounds how much of the corpus is scanned (IO), ``rerank`` bounds
@@ -648,12 +651,7 @@ def ivfpq_knn(
     Pass ``codes_df``/``centroids``/``codebooks`` from
     :func:`build_ivfpq` to reuse a prebuilt layout (the steady-state
     serving shape)."""
-    from oasysdb_spark.functions.vectors import const_distance
-    from oasysdb_spark.operators.vectorops import (
-        load_embeddings,
-        query_embedding,
-        round_dist,
-    )
+    from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding
 
     prebuilt = (codes_df is not None, centroids is not None, codebooks is not None)
     if any(prebuilt) and not all(prebuilt):
@@ -684,7 +682,7 @@ def ivfpq_knn(
         ],
         "cluster_id int, adc_flat array<double>",
     )
-    cand = (
+    scored = (
         codes_df.where(F.col("cluster_id").isin(probe_ids))
         .join(F.broadcast(tab_df), "cluster_id")
         # stride derives from the codebooks actually in use, NOT the
@@ -696,10 +694,5 @@ def ivfpq_knn(
                 "adc"
             ),
         )
-        .orderBy(F.col("adc").asc_nulls_last(), "vec_id")
-        .limit(max(rerank, k))
     )
-    exact = cand.join(embs, "vec_id").select(
-        "vec_id", round_dist(const_distance("euclidean", qvec)).alias("distance")
-    )
-    return exact.orderBy(F.col("distance").asc(), "vec_id").limit(k)
+    return _rerank_top_k(scored, embs, qvec, rerank, k)

@@ -122,15 +122,15 @@ def sq_knn(
     model: np.ndarray | None = None,
 ) -> DataFrame:
     """SQ8 + exact-re-rank k-NN over the embeddings fixture, mirroring
-    ``pq.pq_knn``: score every code row JVM-side, keep the ``rerank``
-    best, exact distances for only those, top ``k``. SQ8 first-pass
-    scores are near-exact (per-dim error ≤ step/2), so small reranks
-    already reach full recall — gated in tests.
+    ``pq.pq_knn``: score every code row JVM-side, keep the best
+    ``max(rerank, k)``, exact distances for only those, top ``k``. SQ8
+    first-pass scores are near-exact (per-dim error ≤ step/2), so small
+    reranks already reach full recall — gated in tests.
 
     Pass ``codes_df``/``model`` to reuse a prebuilt encode (steady
     state: encode once at ingest, query many times)."""
-    from oasysdb_spark.functions.vectors import const_distance
-    from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding, round_dist
+    from oasysdb_spark.index.pq import _rerank_top_k
+    from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding
 
     embs = load_embeddings(spark, sf_dir)
     if model is None:
@@ -141,15 +141,5 @@ def sq_knn(
     if qvec is None:
         raise InvalidArgumentError(f"query vec_id {query_vec_id} not found")
 
-    cand = (
-        codes_df.select("vec_id", sq_score_expr(qvec, model).alias("adc"))
-        .orderBy(F.col("adc").asc(), "vec_id")
-        # max(rerank, k): a rerank under k must not silently shrink the
-        # result below k — same contract as pq_knn/ivfpq_knn/query
-        .limit(max(rerank, k))
-    )
-    exact = cand.join(embs, "vec_id").select(
-        "vec_id",
-        round_dist(const_distance("euclidean", qvec)).alias("distance"),
-    )
-    return exact.orderBy(F.col("distance").asc(), "vec_id").limit(k)
+    scored = codes_df.select("vec_id", sq_score_expr(qvec, model).alias("adc"))
+    return _rerank_top_k(scored, embs, qvec, rerank, k)

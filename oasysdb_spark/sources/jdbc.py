@@ -109,9 +109,9 @@ def watermark_state(value) -> tuple[str, object]:
     JSON-persistable state form in one step: ``(kind, state_value)``
     where temporal/decimal values become their string renderings (the
     kind, not the Python type, drives literal rendering on reload).
-    The single home for this pairing — sync's two paths and from_jdbc's
-    seed block all persist marks through it, so the state format cannot
-    silently diverge between them."""
+    The single home for this pairing — sync's mark and from_jdbc's seed
+    both persist through it, so the state format cannot silently
+    diverge between them."""
     kind = watermark_kind(value)  # typed refusal on exotics
     out = value if isinstance(value, (int, float, str)) else str(value)
     return kind, out
@@ -139,10 +139,10 @@ def remote_watermark_minmax(
     whole filtered window through one socket just to find its edge —
     for a backfill window that is the entire table. ``where_remote``
     must be REMOTE-dialect SQL (render marks with
-    ``watermark_literal(..., remote=True)``); callers catch remote
-    parse failures and fall back to the client-side aggregate.
-    Returns ``(min, max)`` Python values (``(None, None)`` on an empty
-    window).
+    ``watermark_literal(..., remote=True)``); :func:`watermark_bounds`
+    catches remote parse failures and falls back to the client-side
+    aggregate. Returns ``(min, max)`` Python values (``(None, None)`` on
+    an empty window).
 
     Dialect-safety note: sync's backfill passes the user's (Spark-
     dialect) pre-filter through here, which is safe FOR BOUNDS even if
@@ -165,6 +165,58 @@ def remote_watermark_minmax(
     if row is None:
         return None, None
     return row["wm_l"], row["wm_h"]
+
+
+def watermark_bounds(
+    spark: SparkSession,
+    url: str,
+    table: str,
+    column: str,
+    scan: DataFrame,
+    *,
+    properties: dict | None = None,
+    where_remote: str | None = None,
+    pushdown: bool = True,
+):
+    """``(min, max)`` of the watermark ``column`` over ``scan`` — the
+    source frame with its Spark-parsed filter — read BEFORE any load
+    read. With ``pushdown`` the one-row remote aggregate
+    (:func:`remote_watermark_minmax`, filtered by the REMOTE-dialect
+    ``where_remote``) runs first; when the remote refuses it, a warning
+    names the cause (the fallback transfers the watermark column an
+    extra time) and a column-pruned client-side aggregate over ``scan``
+    answers instead. A genuine connectivity/auth failure fails both:
+    the remote error is then chained as the cause, so its pointed
+    message survives the fallback's generic scan failure. Pass
+    ``pushdown=False`` when the filter exists only as Spark-dialect
+    text, which must not ship verbatim to a remote whose dialect could
+    silently misread it."""
+    remote_exc = None
+    if pushdown:
+        try:
+            return remote_watermark_minmax(
+                spark, url, table, column,
+                properties=properties, where_remote=where_remote,
+            )
+        except Exception as exc:  # noqa: BLE001 — dialect refusal
+            import warnings
+
+            warnings.warn(
+                "remote MIN/MAX pushdown failed; falling back to a "
+                "client-side aggregate (the watermark column transfers "
+                f"an extra time): {type(exc).__name__}: {str(exc)[:200]}",
+                stacklevel=3,
+            )
+            remote_exc = exc
+    try:
+        row = scan.agg(
+            F.min(column).alias("l"), F.max(column).alias("h")
+        ).first()
+    except Exception as fb_exc:
+        if remote_exc is not None:
+            raise fb_exc from remote_exc
+        raise
+    return row["l"], row["h"]
 
 
 def watermark_range_predicates(

@@ -684,3 +684,37 @@ def test_catalog_sync_and_reconcile_jdbc_verbs(spark, tmp_path, capsys):
 
     db = Catalog.open(spark, root).open_collection("serving")
     assert db.query_df([3.0, 9.0], k=1).collect()[0]["id"] == "r3"
+
+
+def test_jdbc_verbs_match_their_catalog_twins():
+    """Each JDBC verb and its catalog- twin take the same flags with the
+    same defaults, apart from the target (--dir versus --root/--name):
+    both declare their flags through one function per verb, and one
+    keyword builder serves both dispatch sites. No Spark needed."""
+    import argparse
+
+    from oasysdb_spark import cli
+
+    parser = cli.build_parser()
+    verbs = next(
+        a for a in parser._actions if isinstance(a, argparse._SubParsersAction)
+    ).choices
+
+    def flags(name, target):
+        out = {}
+        for a in verbs[name]._actions:
+            if a.dest in target or a.dest == "help":
+                continue
+            out[tuple(a.option_strings)] = (
+                a.dest, a.default, a.required, a.type, a.nargs, a.const,
+            )
+        return out
+
+    for verb in ("from-jdbc", "sync-jdbc", "reconcile-jdbc"):
+        own = flags(verb, {"dir"})
+        twin = flags(f"catalog-{verb}", {"root", "name"})
+        assert own and own == twin, verb
+        assert "dir" in {a.dest for a in verbs[verb]._actions}
+        assert {"root", "name"} <= {
+            a.dest for a in verbs[f"catalog-{verb}"]._actions
+        }

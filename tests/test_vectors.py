@@ -215,6 +215,18 @@ def test_pq_knn_rerank_recall(spark, sf_dir):
     recall = len(set(got) & set(brute)) / len(brute)
     assert recall >= 0.8, f"PQ rerank recall {recall}"
 
+    # rerank < k must not shrink the result below k: the candidate cut
+    # is max(rerank, k)
+    embs = vec.load_embeddings(spark, sf_dir)
+    books = pq.fit_codebooks(embs.select("embedding"), m=8, nbits=4, seed=42)
+    codes = pq.encode(embs, books).cache()
+    short = pq.pq_knn(
+        spark, sf_dir, query_vec_id=7, k=10, rerank=4,
+        codes_df=codes, codebooks=books,
+    ).collect()
+    assert len(short) == 10
+    codes.unpersist()
+
 
 def test_ivfpq_residual_beats_flat_pq_and_prunes(spark, sf_dir):
     """IVFADC gates, averaged over 5 queries so single-query coder noise
@@ -268,6 +280,20 @@ def test_ivfpq_residual_beats_flat_pq_and_prunes(spark, sf_dir):
         mean["full"] += len(set(full) & brute) / 10 / len(queries)
         mean["flat"] += len(set(flat) & brute) / 10 / len(queries)
         mean["pruned"] += len(set(pruned) & brute) / 10 / len(queries)
+
+    # rerank < k must not shrink the result below k (both tiers cut at
+    # max(rerank, k))
+    for rows in (
+        pq.ivfpq_knn(
+            spark, sf_dir, query_vec_id=7, k=10, probes=4, rerank=4,
+            codes_df=codes, centroids=cents, codebooks=books,
+        ),
+        pq.pq_knn(
+            spark, sf_dir, query_vec_id=7, k=10, rerank=4,
+            codes_df=fcodes, codebooks=fbooks,
+        ),
+    ):
+        assert len(rows.collect()) == 10
 
     assert mean["full"] >= mean["flat"] - 0.05, mean
     assert mean["full"] >= 0.5, mean
@@ -378,8 +404,9 @@ def test_sq_knn_near_exact_recall(spark, sf_dir):
     assert pre == got
     with _pytest.raises(InvalidArgumentError, match="dimension"):
         sq.sq_score_expr([1.0, 2.0], model)
-    # rerank < k must not shrink the result below k (the candidate cut
-    # is max(rerank, k), matching pq_knn/ivfpq_knn/Database.query)
+    # rerank < k must not shrink the result below k: the candidate cut
+    # is max(rerank, k), shared by pq_knn/opq_knn/ivfpq_knn through
+    # pq._rerank_top_k and matching Database.query
     short = sq.sq_knn(
         spark, sf_dir, query_vec_id=7, k=10, rerank=3,
         codes_df=codes, model=model,
@@ -534,6 +561,11 @@ def test_opq_knn_rerank_recall(spark, sf_dir):
         ).collect()
     ]
     assert again == got
+    # rerank < k must not shrink the result below k
+    short = pq.opq_knn(
+        spark, sf_dir, query_vec_id=7, k=10, rerank=4, codes_df=codes, opq=opq
+    ).collect()
+    assert len(short) == 10
 
 
 def test_query_embedding_memo_tracks_fixture_signature(spark, tmp_path):
