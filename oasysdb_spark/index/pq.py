@@ -38,7 +38,7 @@ from oasysdb_spark.index.ivf import (
     nearest_centroids,
     topk_cluster_assigner,
 )
-from oasysdb_spark.session import tiny_df
+from oasysdb_spark.session import release_pins_with, tiny_df
 
 
 def fit_codebooks(
@@ -496,7 +496,9 @@ def pq_knn(
     recall/IO lever: raw-vector reads scale with it, not with N.
 
     Pass ``codes_df``/``codebooks`` to reuse a prebuilt encode (the
-    steady-state shape: encode once at ingest, query many times)."""
+    steady-state shape: encode once at ingest, query many times); a
+    passed ``codes_df`` stays the caller's, while codes this call
+    encodes and caches itself ride the result (``release_frame``)."""
     from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding
 
     embs = load_embeddings(spark, sf_dir)
@@ -504,15 +506,17 @@ def pq_knn(
         codebooks = fit_codebooks(
             embs.select("embedding"), m=m, nbits=nbits, seed=seed
         )
+    pins = ()
     if codes_df is None:
         codes_df = encode(embs, codebooks).cache()
+        pins = (codes_df,)
     qvec = query_embedding(spark, sf_dir, query_vec_id)
     if qvec is None:
         raise InvalidArgumentError(f"query vec_id {query_vec_id} not found")
 
     table = adc_table(qvec, codebooks)
     scored = codes_df.select("vec_id", adc_score_expr(table).alias("adc"))
-    return _rerank_top_k(scored, embs, qvec, rerank, k)
+    return release_pins_with(_rerank_top_k(scored, embs, qvec, rerank, k), *pins)
 
 
 def opq_knn(
@@ -538,7 +542,8 @@ def opq_knn(
     quantization error, which buys recall-per-rerank on correlated
     data (the fixture is isotropic — PQ's worst case and OPQ's
     no-op case — so the recall gate reuses PQ's bar and the
-    MSE-improvement gate runs on correlated synthetic data)."""
+    MSE-improvement gate runs on correlated synthetic data). Codes this
+    call encodes itself ride the result, as in :func:`pq_knn`."""
     from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding
 
     embs = load_embeddings(spark, sf_dir)
@@ -547,8 +552,10 @@ def opq_knn(
             embs.select("embedding"), m=m, nbits=nbits, seed=seed, n_iter=n_iter
         )
     rot, books = opq
+    pins = ()
     if codes_df is None:
         codes_df = encode(embs, books, rotation=rot).cache()
+        pins = (codes_df,)
     _q = query_embedding(spark, sf_dir, query_vec_id)
     if _q is None:
         raise InvalidArgumentError(f"query vec_id {query_vec_id} not found")
@@ -556,7 +563,7 @@ def opq_knn(
 
     table = adc_table(qvec @ rot, books)
     scored = codes_df.select("vec_id", adc_score_expr(table).alias("adc"))
-    return _rerank_top_k(scored, embs, qvec, rerank, k)
+    return release_pins_with(_rerank_top_k(scored, embs, qvec, rerank, k), *pins)
 
 
 def build_ivfpq(
@@ -579,7 +586,8 @@ def build_ivfpq(
     ``(vec_id, cluster_id, pq_code)`` — the steady-state table an ingest
     job would persist partitioned by ``cluster_id``. The codes come back
     CACHED and materialized (the assign+encode UDF chain runs once, at
-    build time), and the intermediate residual frame is unpersisted. The residual is
+    build time) and stay the CALLER's to release; the intermediate
+    residual frame is unpersisted. The residual is
     computed JVM-side (``zip_with`` against the broadcast-joined
     centroid), so the only Python in the build is the Arrow-batched
     assign/encode pair that already powers the IVF and PQ tiers."""
@@ -650,7 +658,8 @@ def ivfpq_knn(
 
     Pass ``codes_df``/``centroids``/``codebooks`` from
     :func:`build_ivfpq` to reuse a prebuilt layout (the steady-state
-    serving shape)."""
+    serving shape); a layout this call builds itself rides the result
+    (``release_frame``)."""
     from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding
 
     prebuilt = (codes_df is not None, centroids is not None, codebooks is not None)
@@ -662,10 +671,12 @@ def ivfpq_knn(
             "pass codes_df, centroids and codebooks together (from build_ivfpq) "
             "or none of them"
         )
+    pins = ()
     if codes_df is None:
         codes_df, centroids, codebooks = build_ivfpq(
             spark, sf_dir, n_clusters=n_clusters, m=m, nbits=nbits, seed=seed
         )
+        pins = (codes_df,)
     embs = load_embeddings(spark, sf_dir)
     _q = query_embedding(spark, sf_dir, query_vec_id)
     if _q is None:
@@ -695,4 +706,4 @@ def ivfpq_knn(
             ),
         )
     )
-    return _rerank_top_k(scored, embs, qvec, rerank, k)
+    return release_pins_with(_rerank_top_k(scored, embs, qvec, rerank, k), *pins)

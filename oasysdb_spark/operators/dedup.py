@@ -23,7 +23,9 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
+from oasysdb_spark.session import release_pins, release_pins_with
 from oasysdb_spark.sources.tables import read_parquet_cached
 
 from oasysdb_spark.functions.hashing import hash64
@@ -450,6 +452,72 @@ def lsh_bands(sigs: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
     )
 
 
+def band_candidates(
+    left: DataFrame,
+    right: DataFrame,
+    names: dict[str, str],
+    self_join: bool = False,
+    broadcast: bool = False,
+) -> DataFrame:
+    """Distinct candidate pairs of two :func:`lsh_bands` frames: ONE
+    equi-join on ``(band_id, band_key)`` (never all-pairs) that carries
+    only the two doc ids. ``names`` maps each operand (``"l"``/``"r"``)
+    to its output id column, in output order. ``self_join`` keeps each
+    pair once (``l.doc_id < r.doc_id``); ``broadcast`` hints the right
+    operand (the caller's count-guarded small corpus)."""
+    lhs, rhs = left.alias("l"), right.alias("r")
+    cond = (F.col("l.band_id") == F.col("r.band_id")) & (
+        F.col("l.band_key") == F.col("r.band_key")
+    )
+    if self_join:
+        cond = cond & (F.col("l.doc_id") < F.col("r.doc_id"))
+    return (
+        lhs.join(F.broadcast(rhs) if broadcast else rhs, cond)
+        .select(*[F.col(f"{s}.doc_id").alias(n) for s, n in names.items()])
+        .distinct()
+    )
+
+
+def join_sides(
+    cand: DataFrame,
+    sides: tuple[DataFrame, DataFrame],
+    keys: tuple[str, str] = ("doc_a", "doc_b"),
+    suffixes: tuple[str, str] = ("_a", "_b"),
+    cols: tuple[str, ...] = ("sh",),
+    broadcast: bool = False,
+    sides_first: bool = False,
+) -> DataFrame:
+    """Join the carried ``cols`` of each pair side back onto the
+    candidate pairs (which carry ids only, so the arrays never transit
+    the band join and its dedup): ``sides[i]`` holds ``doc_id`` plus
+    ``cols`` and joins on ``keys[i]``, its columns renamed with
+    ``suffixes[i]``. ``broadcast`` hints the second side;
+    ``sides_first`` makes the first side the left join operand."""
+    first, second = (
+        side.select(
+            F.col("doc_id").alias(key), *[F.col(c).alias(c + sfx) for c in cols]
+        )
+        for side, key, sfx in zip(sides, keys, suffixes)
+    )
+    pairs = first.join(cand, keys[0]) if sides_first else cand.join(first, keys[0])
+    return pairs.join(F.broadcast(second) if broadcast else second, keys[1])
+
+
+def _self_pairs(sigs: DataFrame, num_hashes: int, band_size: int, cols=("sh",)):
+    """LSH candidate pairs ``doc_a < doc_b`` of one signature frame, each
+    side's ``cols`` joined back (``sh_a``/``sh_b``, ...)."""
+    bands = lsh_bands(sigs, num_hashes, band_size)
+    cand = band_candidates(bands, bands, {"l": "doc_a", "r": "doc_b"}, self_join=True)
+    return join_sides(cand, (sigs, sigs), cols=cols)
+
+
+def _jaccard_terms(a: str, b: str):
+    """``(|A∩B|, |A∪B|)`` of two distinct-set array columns — integer
+    terms, so every caller's ratio is exact before its own rounding."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter, F.size(a) + F.size(b) - inter
+
+
 def _melt_bands(banded: DataFrame, keep_cols: list[str], band_cols: list[str]):
     """(id, hash..., b0..bN) → (id, hash..., band_id, band_val): one row
     per band via a single explode — the melt that lets ONE self-join on
@@ -485,74 +553,17 @@ def banded_hamming_pairs(
     bucket_verify_threshold: int = 4096,
 ) -> DataFrame:
     """Banded hamming self-join shared by the simhash and perceptual-hash
-    tiers: candidates share one of the ``band_cols`` key columns, pairs
-    verify by exact ``bit_count(xor)``. The bands MELT into
-    ``(band_id, band_val)`` rows (an OR-of-equalities join predicate
-    would lose the equi-key and plan a nested loop; per-band joins — the
-    pre-r7 shape — cost one join stage per band), so candidate
-    generation is ONE equi-join on the compound band key whatever the
-    band count, then pair-level dedup and a deterministic
-    (hamming, a, b) cut. The hamming filter runs BEFORE the dedup so
-    only near-pairs transit the dropDuplicates shuffle. DEGENERATE
-    band buckets (≥ ``bucket_verify_threshold`` rows sharing one value
-    — a constant hash region at corpus scale) skip the join and run the
-    exact in-task engine, same as the wide variant (see
-    :func:`banded_hamming_pairs_wide` / :func:`_pairs_within_hamming`).
-    Exhaustiveness is the CALLER's contract: pigeonhole guarantees it
-    only when max_hamming < number of bands."""
-    import numpy as np
-
-    a_name, b_name = out_names
-    cached = banded.cache()
-    # eager populate — same cache-race rationale as
-    # banded_hamming_pairs_wide below.
-    cached.count()
-    melted = _melt_bands(cached, [id_col, hash_col], band_cols)
-    sizes = melted.groupBy("band_id", "band_val").agg(
-        F.count("*").alias("__bc")
-    )
-    melted = melted.join(sizes, ["band_id", "band_val"])
-    small = melted.where(F.col("__bc") < bucket_verify_threshold)
-    big = melted.where(F.col("__bc") >= bucket_verify_threshold)
-    a, b = small.alias("a"), small.alias("b")
-    join_pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias(a_name),
-            F.col(f"b.{id_col}").alias(b_name),
-            F.bit_count(
-                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-    )
-
-    mh = max_hamming
-    cap = top_n
-
-    def bucket_verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy().astype(np.int64)
-        w = pdf[hash_col].to_numpy().astype(np.int64).reshape(-1, 1).view(
-            np.uint64
-        )
-        ta, tb, th = _pairs_within_hamming(ids, w, mh, cap)
-        return pd.DataFrame({a_name: ta, b_name: tb, "hamming": th})
-
-    big_pairs = big.groupBy("band_id", "band_val").applyInPandas(
-        bucket_verify, schema=f"{a_name} long, {b_name} long, hamming long"
-    )
-
-    return (
-        join_pairs.unionByName(big_pairs)
-        .dropDuplicates([a_name, b_name])
-        .select(a_name, b_name, F.col("hamming").cast("bigint").alias("hamming"))
-        .orderBy("hamming", a_name, b_name)
-        .limit(top_n)
+    tiers over a bigint ``hash_col`` — :func:`banded_hamming_pairs_wide`
+    with a one-word hash, where the body and its contracts live."""
+    return banded_hamming_pairs_wide(
+        banded,
+        id_col,
+        hash_col,
+        band_cols,
+        max_hamming,
+        top_n,
+        out_names,
+        bucket_verify_threshold=bucket_verify_threshold,
     )
 
 
@@ -732,33 +743,40 @@ def banded_hamming_pairs_wide(
     n_words: int = 0,
     bucket_verify_threshold: int = 4096,
 ) -> DataFrame:
-    """:func:`oasysdb_spark.operators.dedup.banded_hamming_pairs` for
-    multi-word hashes: the same melt/join/dedup/cut shape with two
-    defenses a wide hash needs at scale (r7, found by the sf1 probe of
-    the flipped 256-bit default):
+    """Banded hamming self-join of the simhash and perceptual-hash tiers.
+    ``words_col`` holds the hash: a bigint (one word, the
+    :func:`banded_hamming_pairs` shape) or an ``array<bigint>`` of words;
+    candidates share one of the ``band_cols`` key columns and verify by
+    exact hamming distance.
 
-    - hamming is an UNROLLED Σ bit_count(element_at xor) over the
-      ``n_words`` words (pass it; 0 falls back to the interpreted
+    - The bands MELT into ``(band_id, band_val)`` rows, so candidate
+      generation is ONE equi-join on the compound band key whatever the
+      band count (an OR-of-equalities predicate would lose the equi-key
+      and plan a nested loop; a join per band costs a stage per band).
+      The hamming filter runs BEFORE the pair-level dedup, so only
+      near-pairs transit the dropDuplicates shuffle; the cut is a
+      deterministic (hamming, a, b) order.
+    - A word array's hamming is an UNROLLED Σ bit_count(element_at xor)
+      over ``n_words`` words (pass it; 0 falls back to the interpreted
       ``aggregate(zip_with)`` fold) — higher-order array folds run
       OUTSIDE whole-stage codegen, a ~100× per-row tax that only shows
-      up when a band bucket fans out;
+      up when a band bucket fans out.
     - DEGENERATE BUCKETS — a band value shared by ≥
       ``bucket_verify_threshold`` rows — never reach the self-join.
-      The hazard: a constant image region / boilerplate text makes one
-      band value near-universal (the fixture's zero-padded short docs
-      leave the 3 high bands all-zero on EVERY short doc), so that
-      bucket's join degenerates to all-pairs row materialization —
-      ~1.5 B joined rows at 55k docs, unbounded at corpus scale. Such
-      buckets route to a per-bucket Arrow task that computes pairwise
-      hammings as tiled numpy uint8-LUT popcounts (~1e9 pairs/s,
-      bounded tiles) and EMITS only pairs ≤ ``max_hamming`` — exact,
-      never a sampled or dropped bucket, the same
-      giant-block-verify move as ``embedding_near_pairs_ivf``. Output
-      is identical either way (both paths are exact; dropDuplicates
-      merges pairs found via several bands).
+      A constant image region / boilerplate text makes one band value
+      near-universal (the fixture's zero-padded short docs leave the 3
+      high bands all-zero on EVERY short doc), so that bucket's join
+      degenerates to all-pairs row materialization — ~1.5 B joined rows
+      at 55k docs, unbounded at corpus scale. Such buckets route to a
+      per-bucket Arrow task running the exact in-task engine
+      (:func:`_pairs_within_hamming`), which EMITS only pairs ≤
+      ``max_hamming`` — never a sampled or dropped bucket. Output is
+      identical either way (dropDuplicates merges pairs found via
+      several bands).
 
-    Exhaustiveness is still the caller's pigeonhole contract
-    (max_hamming < number of bands)."""
+    Exhaustiveness is the CALLER's contract: pigeonhole guarantees it
+    only when max_hamming < number of bands. The cached ``banded``
+    frame rides the result (``release_frame(result)`` frees it)."""
     import numpy as np
 
     a_name, b_name = out_names
@@ -777,12 +795,13 @@ def banded_hamming_pairs_wide(
     small = melted.where(F.col("__bc") < bucket_verify_threshold)
     big = melted.where(F.col("__bc") >= bucket_verify_threshold)
 
-    if n_words > 0:
+    wa, wb = F.col(f"a.{words_col}"), F.col(f"b.{words_col}")
+    if not isinstance(banded.schema[words_col].dataType, ArrayType):
+        hamming = F.bit_count(wa.bitwiseXOR(wb))
+    elif n_words > 0:
         terms = [
             F.bit_count(
-                F.element_at(F.col(f"a.{words_col}"), i + 1).bitwiseXOR(
-                    F.element_at(F.col(f"b.{words_col}"), i + 1)
-                )
+                F.element_at(wa, i + 1).bitwiseXOR(F.element_at(wb, i + 1))
             )
             for i in range(n_words)
         ]
@@ -791,11 +810,7 @@ def banded_hamming_pairs_wide(
             hamming = hamming + t
     else:
         hamming = F.aggregate(
-            F.zip_with(
-                F.col(f"a.{words_col}"),
-                F.col(f"b.{words_col}"),
-                lambda x, y: F.bit_count(x.bitwiseXOR(y)),
-            ),
+            F.zip_with(wa, wb, lambda x, y: F.bit_count(x.bitwiseXOR(y))),
             F.lit(0),
             lambda acc, v: acc + v,
         )
@@ -820,7 +835,8 @@ def banded_hamming_pairs_wide(
 
     def bucket_verify(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col].to_numpy().astype(np.int64)
-        w = np.asarray(pdf[words_col].tolist(), dtype=np.int64).view(np.uint64)
+        w = np.asarray(pdf[words_col].tolist(), dtype=np.int64)
+        w = w.reshape(len(ids), -1).view(np.uint64)
         ta, tb, th = _pairs_within_hamming(ids, w, mh, cap)
         return pd.DataFrame({a_name: ta, b_name: tb, "hamming": th})
 
@@ -828,13 +844,14 @@ def banded_hamming_pairs_wide(
         bucket_verify, schema=f"{a_name} long, {b_name} long, hamming long"
     )
 
-    return (
+    out = (
         join_pairs.unionByName(big_pairs)
         .dropDuplicates([a_name, b_name])
         .select(a_name, b_name, F.col("hamming").cast("bigint").alias("hamming"))
         .orderBy("hamming", a_name, b_name)
         .limit(top_n)
     )
+    return release_pins_with(out, cached)
 
 
 
@@ -852,52 +869,26 @@ def minhash_lsh_pairs(
     Returns the ``top_n`` most similar pairs (doc_a < doc_b) ordered by
     (jaccard desc, doc_a, doc_b) — Jaccard is a ratio of integers so it is
     bit-identical across engines, making the top-n cut deterministic.
+    The cached signature frame rides the result.
     """
     docs = load_documents(spark, sf_dir, spread=True)
     # hashed=True: the verify join ships 8-byte shingle digests, not strings
     sigs = minhash_signatures(docs, num_hashes=num_hashes, hashed=True).cache()
-
-    # Candidate generation carries ONLY (doc_id, band) — shingle arrays are
-    # joined back after the pair-level distinct. Shipping the arrays through
-    # the self-join + dedup would dominate the shuffle at scale.
-    bands = lsh_bands(sigs, num_hashes, band_size)
-
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-    shingle_sets = sigs.select("doc_id", "sh")
-    pairs = cand.join(
-        shingle_sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-        "doc_a",
-    ).join(
-        shingle_sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-        "doc_b",
-    )
-
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    out = pairs.select(
+    inter, union = _jaccard_terms("sh_a", "sh_b")
+    out = _self_pairs(sigs, num_hashes, band_size).select(
         "doc_a",
         "doc_b",
-        # scale-0 display round (r11 migration): integer ratio in 1e-6
-        # display units, rounded at scale 0, divided back
+        # scale-0 display round: integer ratio in 1e-6 display units,
+        # rounded at scale 0, divided back
         F.round(
             F.round(inter.cast("double") / union * 1e6).cast("bigint")
             / F.lit(1e6),
             6,
         ).alias("jaccard"),
     )
-    return out.orderBy(F.col("jaccard").desc(), "doc_a", "doc_b").limit(top_n)
+    return release_pins_with(
+        out.orderBy(F.col("jaccard").desc(), "doc_a", "doc_b").limit(top_n), sigs
+    )
 
 
 def minhash_candidate_edges(
@@ -907,7 +898,6 @@ def minhash_candidate_edges(
     band_size: int = 2,
     threshold: float = 0.5,
     docs: DataFrame | None = None,
-    _cache_out: list | None = None,
 ) -> DataFrame:
     """All near-duplicate edges (doc_a < doc_b) whose exact Jaccard meets
     ``threshold`` — the thresholded (not top-n) variant of
@@ -915,16 +905,16 @@ def minhash_candidate_edges(
     ``docs`` to run over any (doc_id, text) frame instead of the fixture.
 
     The signature frame is cached because the returned plan reads it
-    three times (the band self-join plus both shingle-set joins). Pass
-    ``_cache_out`` (a list) to receive that cached frame: the caller
-    that finishes consuming the edges MUST ``unpersist()`` it, or the
-    entry outlives the call in the session CacheManager. A leaked entry
-    whose lineage carries ``observe()`` metrics (the composed pipeline's
+    three times (the band self-join plus both shingle-set joins). It
+    rides the result: the caller that finishes consuming the edges MUST
+    ``release_pins(edges)`` (or ``release_frame``), or the entry
+    outlives the call in the session CacheManager. A leaked entry whose
+    lineage carries ``observe()`` metrics (the composed pipeline's
     per-stage counts) is not just memory pressure: a cached
     CollectMetrics plan makes any LATER MLlib-model action in the same
     session fail with ``NotSerializableException: ObservationManager``
     (the cache lookup canonicalizes the model's ScalaUDF, whose training
-    summary drags the SparkSession into the task closure — found r15)."""
+    summary drags the SparkSession into the task closure)."""
     if docs is None:
         docs = load_documents(spark, sf_dir, spread=True)
     sigs = minhash_signatures(docs, num_hashes=num_hashes, hashed=True).cache()
@@ -936,32 +926,12 @@ def minhash_candidate_edges(
     # fixpoint round-0 under prepare_training_corpus — the same race
     # class as the banded-pair caches, fixed the same way)
     sigs.count()
-    if _cache_out is not None:
-        _cache_out.append(sigs)
-    bands = lsh_bands(sigs, num_hashes, band_size)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    shingle_sets = sigs.select("doc_id", "sh")
-    pairs = cand.join(
-        shingle_sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-        "doc_a",
-    ).join(
-        shingle_sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-        "doc_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    inter, union = _jaccard_terms("sh_a", "sh_b")
     jac = inter.cast("double") / union
-    return pairs.where(jac >= threshold).select("doc_a", "doc_b")
+    pairs = _self_pairs(sigs, num_hashes, band_size)
+    return release_pins_with(
+        pairs.where(jac >= threshold).select("doc_a", "doc_b"), sigs
+    )
 
 
 def minhash_jaccard_calibration(
@@ -993,44 +963,15 @@ def minhash_jaccard_calibration(
     are exact integer sums divided once; ``est_jaccard`` is an integer
     ratio rounded once.
 
-    Scale shape: identical to :func:`minhash_lsh_pairs` — signatures are
-    row-local, candidates come from the banded equi-join (never
-    all-pairs), the verify join ships 8-byte shingle digests, and the
-    per-pair agreement sum is ``num_hashes`` unrolled ``element_at``
+    The per-pair agreement sum is ``num_hashes`` unrolled ``element_at``
     comparisons (codegen-friendly; no interpreted higher-order fold on
     the join hot path). The final rollup is a map-side-combined groupBy
-    on one small int — output is bounded by ``num_hashes + 1`` rows."""
+    on one small int — output is bounded by ``num_hashes + 1`` rows.
+    The cached signature frame rides the result."""
     if docs is None:
         docs = load_documents(spark, sf_dir, spread=True)
     sigs = minhash_signatures(docs, num_hashes=num_hashes, hashed=True).cache()
-    bands = lsh_bands(sigs, num_hashes, band_size)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sides = sigs.select("doc_id", "sh", "sig")
-    pairs = cand.join(
-        sides.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("sh").alias("sh_a"),
-            F.col("sig").alias("sig_a"),
-        ),
-        "doc_a",
-    ).join(
-        sides.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("sh").alias("sh_b"),
-            F.col("sig").alias("sig_b"),
-        ),
-        "doc_b",
-    )
+    pairs = _self_pairs(sigs, num_hashes, band_size, cols=("sh", "sig"))
     n_agree = sum(
         [
             F.when(
@@ -1040,15 +981,14 @@ def minhash_jaccard_calibration(
         ],
         F.lit(0),
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    inter, union = _jaccard_terms("sh_a", "sh_b")
     jm = F.round((inter.cast("double") / union) * 1e6).cast("bigint")
-    return (
+    out = (
         pairs.select(n_agree.alias("n_agree"), jm.alias("jm"))
         .groupBy("n_agree")
         .agg(
             F.count("*").cast("bigint").alias("n_pairs"),
-            # micro-unit integer mean, scale-0 display (r12 re-triage):
+            # micro-unit integer mean, scale-0 display:
             # sum(jm)/count is already in 1e-6 units, so the scale-0
             # round lands on an exact integer both engines share
             F.round(
@@ -1061,7 +1001,7 @@ def minhash_jaccard_calibration(
         .select(
             F.col("n_agree").cast("bigint").alias("n_agree"),
             "n_pairs",
-            # int/int ratio, scale-0 display (r12 re-triage)
+            # int/int ratio, scale-0 display
             F.round(
                 F.round(
                     F.col("n_agree")
@@ -1077,6 +1017,7 @@ def minhash_jaccard_calibration(
         )
         .orderBy("n_agree")
     )
+    return release_pins_with(out, sigs)
 
 
 def dedup_components(
@@ -1110,10 +1051,7 @@ def dedup_components(
         # bench's minhash_lsh_pairs path already loads spread);
         # conditional no-op at corpus scale
         docs = load_documents(spark, sf_dir, spread="rescue")
-    caches: list = []
-    edges = minhash_candidate_edges(
-        spark, sf_dir, threshold=threshold, docs=docs, _cache_out=caches
-    )
+    edges = minhash_candidate_edges(spark, sf_dir, threshold=threshold, docs=docs)
     try:
         return connected_components(
             docs.select("doc_id"), edges, "doc_a", "doc_b", max_iter=max_iter
@@ -1124,9 +1062,10 @@ def dedup_components(
         # signature cache behind the edges can never be re-read — free
         # it here instead of leaking it into the session CacheManager
         # (see minhash_candidate_edges on why a leaked observe()-lineage
-        # entry poisons later MLlib actions)
-        for frame in caches:
-            frame.unpersist()
+        # entry poisons later MLlib actions). Only the pins: release_frame
+        # would also free every checkpoint in the edges' lineage, which
+        # includes a caller's (prepare_training_corpus's exact_unique)
+        release_pins(edges)
 
 
 def connected_components(
@@ -1443,12 +1382,11 @@ def ngram_jaccard_pairs(
         F.col("a.grams").alias("ga"),
         F.col("b.grams").alias("gb"),
     )
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size("ga") + F.size("gb") - inter
+    inter, union = _jaccard_terms("ga", "gb")
     out = pairs.select(
         "doc_a",
         "doc_b",
-        # int/int ratio displayed via the scale-0 form (r10)
+        # int/int ratio displayed via the scale-0 form
         F.round(
             F.round(inter.cast("double") / union * 1e6).cast("bigint")
             / F.lit(1e6),
@@ -1871,8 +1809,7 @@ def jaccard_best_match(
     asserted output-EQUAL in tests, so this arithmetic must live once —
     a contract change applied to one copy would silently break the
     other's equality gate."""
-    inter = F.size(F.array_intersect(sh_a, sh_b))
-    union = F.size(sh_a) + F.size(sh_b) - inter
+    inter, union = _jaccard_terms(sh_a, sh_b)
     jac = F.round(inter.cast("double") / union, 6)
     scored = pairs.select(id_col, match_col, jac.alias("jaccard")).where(
         F.col("jaccard") >= threshold
@@ -1916,7 +1853,8 @@ def decontaminate_against(
     executor; set the limit to 0 to force the shuffle path.
 
     Returns ``(doc_id, eval_doc_id, jaccard)`` for flagged train docs;
-    anti-join the corpus against it to scrub."""
+    anti-join the corpus against it to scrub. Both cached signature
+    frames ride the result."""
     # cached: both sides feed TWO consumers (band explode + verify join);
     # without the cache the Arrow MinHash UDF runs twice per corpus
     t_sigs = minhash_signatures(train_docs, num_hashes=num_hashes, hashed=True).cache()
@@ -1926,33 +1864,23 @@ def decontaminate_against(
     # needed anyway; rows (not bytes) because band keys + shingle digests
     # are fixed-width per row.
     broadcast_eval = e_sigs.count() <= eval_broadcast_limit
-    maybe_bc = F.broadcast if broadcast_eval else (lambda df: df)
-
-    t = lsh_bands(t_sigs, num_hashes, band_size).alias("t")
-    e = lsh_bands(e_sigs, num_hashes, band_size).alias("e")
-    cand = (
-        t.join(
-            maybe_bc(e),
-            (F.col("t.band_id") == F.col("e.band_id"))
-            & (F.col("t.band_key") == F.col("e.band_key")),
-        )
-        .select(
-            F.col("t.doc_id").alias("doc_id"),
-            F.col("e.doc_id").alias("eval_doc_id"),
-        )
-        .distinct()
+    cand = band_candidates(
+        lsh_bands(t_sigs, num_hashes, band_size),
+        lsh_bands(e_sigs, num_hashes, band_size),
+        {"l": "doc_id", "r": "eval_doc_id"},
+        broadcast=broadcast_eval,
     )
-    pairs = cand.join(
-        t_sigs.select("doc_id", F.col("sh").alias("sh_t")), "doc_id"
-    ).join(
-        maybe_bc(
-            e_sigs.select(F.col("doc_id").alias("eval_doc_id"), F.col("sh").alias("sh_e"))
-        ),
-        "eval_doc_id",
+    pairs = join_sides(
+        cand,
+        (t_sigs, e_sigs),
+        ("doc_id", "eval_doc_id"),
+        ("_t", "_e"),
+        broadcast=broadcast_eval,
     )
-    return jaccard_best_match(
+    best = jaccard_best_match(
         pairs, "doc_id", "eval_doc_id", "sh_t", "sh_e", threshold
     )
+    return release_pins_with(best, t_sigs, e_sigs)
 
 
 def _token_ngram_hashes(
@@ -2831,28 +2759,15 @@ def simhash_band_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _containment_verify(cand: DataFrame, shingle_sets: DataFrame) -> DataFrame:
+def _containment_verify(pairs: DataFrame) -> DataFrame:
     """Exact verify shared by the two (staged, non-contract) containment
-    ops: join each candidate pair's distinct shingle-digest sets and
-    compute both ratios through the shared cross-engine display round
-    (vectorops.round_dist — no private rounding copies, the r11
-    single-home lesson). ``shingle_sets``: (doc_id, shd)."""
+    ops over candidate pairs carrying their distinct shingle-digest sets
+    (``sh_a``/``sh_b``): both ratios go through the shared cross-engine
+    display round (vectorops.round_dist — no private rounding copies)."""
     from oasysdb_spark.operators.vectorops import round_dist
 
-    pairs = cand.join(
-        shingle_sets.select(
-            F.col("doc_id").alias("doc_a"), F.col("shd").alias("sh_a")
-        ),
-        "doc_a",
-    ).join(
-        shingle_sets.select(
-            F.col("doc_id").alias("doc_b"), F.col("shd").alias("sh_b")
-        ),
-        "doc_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    inter, union = _jaccard_terms("sh_a", "sh_b")
     la, lb = F.size("sh_a"), F.size("sh_b")
-    union = la + lb - inter
     return pairs.select(
         "doc_a",
         "doc_b",
@@ -2880,47 +2795,29 @@ def containment_pairs(
     because the sizes differ. Returns the ``top_n`` pairs by
     (containment desc, jaccard desc, doc_a, doc_b) with both metrics
     and the shingle-set sizes, so a curation pass can split
-    "true near-dup" from "one-contains-the-other". STAGED r16
-    promotion candidate (pytest self-oracle; not in the driver
-    contract yet).
+    "true near-dup" from "one-contains-the-other". STAGED promotion
+    candidate (pytest self-oracle; not in ``queries()`` yet).
 
-    Candidate generation reuses the MinHash-LSH banding
-    (:func:`minhash_signatures` / :func:`lsh_bands`, unchanged — kept
-    standalone rather than refactored so the in-contract
-    ``dedup_minhash_lsh`` code is untouched this round). Honest
-    caveat: banding recall is tuned to JACCARD, so a tiny document
-    embedded in a much larger one may not band-collide; banded
-    containment is the standard first pass for the dominant
-    moderate-overlap regime, and a guaranteed-recall variant needs
-    size-stratified banding (a documented follow-up, not claimed
-    here).
-
-    Scale shape: identical to the minhash pair pipeline — candidates
-    carry only (doc_id, band); shingle DIGEST arrays (8-byte, never
-    strings) join back per candidate pair; both ratios are
-    integer-exact before the scale-0 display round."""
+    Candidates come from the MinHash-LSH banding of
+    :func:`minhash_lsh_pairs`. Honest caveat: banding recall is tuned
+    to JACCARD, so a tiny document embedded in a much larger one may
+    not band-collide; banded containment is the standard first pass
+    for the dominant moderate-overlap regime, and
+    :func:`containment_pairs_stratified` is the size-stratified
+    high-recall variant. Both ratios are integer-exact before the
+    scale-0 display round. The cached signature frame rides the
+    result."""
     docs = load_documents(spark, sf_dir, spread=True)
     sigs = minhash_signatures(docs, num_hashes=num_hashes, hashed=True).cache()
-    bands = lsh_bands(sigs, num_hashes, band_size)
+    out = _containment_verify(_self_pairs(sigs, num_hashes, band_size))
+    return release_pins_with(
+        out.orderBy(
+            F.col("containment").desc(), F.col("jaccard").desc(), "doc_a", "doc_b"
+        ).limit(top_n),
+        sigs,
+    )
 
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    out = _containment_verify(
-        cand, sigs.select("doc_id", F.col("sh").alias("shd"))
-    )
+
     return out.orderBy(
         F.col("containment").desc(), F.col("jaccard").desc(), "doc_a", "doc_b"
     ).limit(top_n)
@@ -2971,8 +2868,8 @@ def containment_pairs_stratified(
     surviving candidate exactly as in the symmetric pipeline. The
     window signatures are in-plan array expressions (the
     minhash_signatures_expr form); porting them to the Arrow UDF fast
-    path is a follow-up, not a semantic difference. STAGED r16
-    promotion candidate."""
+    path is a follow-up, not a semantic difference. STAGED promotion
+    candidate. The cached shingle-digest frame rides the result."""
     docs = load_documents(spark, sf_dir, spread=True)
     toks = tokens(F.col("text"))
     grams = F.transform(
@@ -3120,9 +3017,13 @@ def containment_pairs_stratified(
         .distinct()
     )
 
-    out = _containment_verify(cand, base.select("doc_id", "shd")).where(
+    sh = base.select("doc_id", F.col("shd").alias("sh"))
+    out = _containment_verify(join_sides(cand, (sh, sh))).where(
         F.col("containment") >= F.lit(float(min_containment))
     )
-    return out.orderBy(
-        F.col("containment").desc(), F.col("jaccard").desc(), "doc_a", "doc_b"
-    ).limit(top_n)
+    return release_pins_with(
+        out.orderBy(
+            F.col("containment").desc(), F.col("jaccard").desc(), "doc_a", "doc_b"
+        ).limit(top_n),
+        base,
+    )

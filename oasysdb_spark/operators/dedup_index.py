@@ -46,10 +46,13 @@ from pyspark.sql import functions as F
 
 from oasysdb_spark.errors import InvalidArgumentError
 from oasysdb_spark.operators.dedup import (
+    band_candidates,
     jaccard_best_match,
+    join_sides,
     lsh_bands,
     minhash_signatures,
 )
+from oasysdb_spark.session import release_pins_with
 
 _META = "_META.json"
 
@@ -138,7 +141,8 @@ def delta_near_dups(
     ``(doc_id, corpus_doc_id, jaccard)`` with each flagged batch doc's
     best corpus match (max Jaccard, tie-break min corpus id) — the same
     output contract as ``decontaminate_against`` so the two are
-    cross-checkable. Signature parameters come from the index's meta."""
+    cross-checkable. Signature parameters come from the index's meta;
+    the cached batch signature frame rides the result."""
     meta = load_index_meta(index_dir)
     num_hashes, band_size = meta["num_hashes"], meta["band_size"]
 
@@ -151,39 +155,31 @@ def delta_near_dups(
     # guard count doubles as cache materialization (rows, not bytes:
     # band keys + shingle digests are fixed-width per row)
     broadcast_batch = b_sigs.count() <= batch_broadcast_limit
-    maybe_bc = F.broadcast if broadcast_batch else (lambda df: df)
 
-    idx_bands = spark.read.parquet(os.path.join(index_dir, "bands")).alias("i")
-    b_bands = lsh_bands(b_sigs, num_hashes, band_size).alias("b")
-    cand = (
-        idx_bands.join(
-            maybe_bc(b_bands),
-            (F.col("i.band_id") == F.col("b.band_id"))
-            & (F.col("i.band_key") == F.col("b.band_key")),
-        )
-        .select(
-            F.col("b.doc_id").alias("doc_id"),
-            F.col("i.doc_id").alias("corpus_doc_id"),
-        )
-        .distinct()
+    cand = band_candidates(
+        spark.read.parquet(os.path.join(index_dir, "bands")),
+        lsh_bands(b_sigs, num_hashes, band_size),
+        {"r": "doc_id", "l": "corpus_doc_id"},
+        broadcast=broadcast_batch,
     )
-
     # cand is NOT broadcast: its size is batch_rows x per-doc corpus
     # collisions, unbounded by the batch-row guard (a template-heavy web
     # corpus can fan one batch doc out to thousands of band matches).
-    # The verify join shuffles (cand ⋈ index shingles) on corpus id —
+    # The verify join shuffles (index shingles ⋈ cand) on corpus id —
     # AQE still converts it to a broadcast join at runtime whenever cand
     # MEASURES small, which is the common case the guard can't prove.
-    idx_sh = spark.read.parquet(os.path.join(index_dir, "shingles"))
-    pairs = idx_sh.select(
-        F.col("doc_id").alias("corpus_doc_id"), F.col("sh").alias("sh_i")
-    ).join(cand, "corpus_doc_id")
-    pairs = pairs.join(
-        maybe_bc(b_sigs.select("doc_id", F.col("sh").alias("sh_b"))), "doc_id"
+    pairs = join_sides(
+        cand,
+        (spark.read.parquet(os.path.join(index_dir, "shingles")), b_sigs),
+        ("corpus_doc_id", "doc_id"),
+        ("_i", "_b"),
+        broadcast=broadcast_batch,
+        sides_first=True,
     )
-    return jaccard_best_match(
+    best = jaccard_best_match(
         pairs, "doc_id", "corpus_doc_id", "sh_i", "sh_b", threshold
     )
+    return release_pins_with(best, b_sigs)
 
 
 def extend_signature_index(

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import SparkSession
 
 _WAREHOUSE_CLEANUP_REGISTERED = False
+# the directory holding the oasysdb_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_warehouse() -> str:
@@ -82,6 +84,10 @@ def get_spark(
             # don't accumulate warehouses in /tmp.
             os.environ.get("SPARK_GRAFT_WAREHOUSE", _default_warehouse()),
         )
+        # Python workers import this package from their own sys.path,
+        # which lacks the checkout when the main script runs from
+        # another directory without PYTHONPATH; ship the package root
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -149,15 +155,16 @@ def free_local_checkpoint(df) -> None:
 
 
 def release_pins_with(result_df, *pins):
-    """Attach intermediate pinned frames (eager localCheckpoints) to the
-    RESULT frame so :func:`release_frame` on the result releases them
-    too (r16): the single-shot audit queries pin a key/vocab-bounded
-    table per call, and a long-lived serving session that wants
-    deterministic reclamation calls ``release_frame(result)`` once it
-    has consumed the result — the repo's established cleanup idiom —
-    instead of waiting for JVM GC + ContextCleaner.
+    """Attach intermediate pinned frames (eager localCheckpoints, or
+    caches the result's plan reads) to the RESULT frame so
+    :func:`release_frame` on the result releases them too: a single-shot
+    query pins a key/vocab-bounded table or caches a signature frame per
+    call, and a long-lived serving session that wants deterministic
+    reclamation calls ``release_frame(result)`` once it has consumed the
+    result — the repo's established cleanup idiom — instead of waiting
+    for JVM GC + ContextCleaner.
 
-    Deliberately NOT a GC finalizer (r16 review, CONFIRMED repro): a
+    Deliberately NOT a GC finalizer (CONFIRMED repro): a
     ``weakref.finalize`` on the result fires the moment the parent
     object's refcount drops, so an idiomatic derived chain like
     ``fn(...).limit(3).collect()`` — where the parent is collected as
@@ -173,21 +180,38 @@ def release_pins_with(result_df, *pins):
     return result_df
 
 
-def release_frame(df) -> None:
-    """Release a pipeline-stage frame whatever its retention class:
-    ``unpersist()`` for CacheManager entries (no-op on checkpoints) plus
-    :func:`free_local_checkpoint` for LogicalRDD-backed frames (no-op on
-    plain caches — they have no LogicalRDD leaves). Lets cleanup loops
-    stay uniform when a stage switches between cache and localCheckpoint
-    (r15: exact_unique moved to an eager checkpoint to truncate the
-    scoring lineage out of every downstream plan). Pins attached by
-    :func:`release_pins_with` release with their result frame."""
-    for pin in getattr(df, "_oasys_pins", ()):
-        free_local_checkpoint(pin)
+def release_pins(df) -> None:
+    """Release the frames :func:`release_pins_with` attached to ``df``,
+    each by its own retention class: a cached pin is unpersisted — never
+    checkpoint-freed, because its lineage may read a checkpoint its
+    caller still owns — and a checkpoint pin has its blocks freed.
+    ``df``'s own retention (and any checkpoint in its lineage) is left
+    alone; call this instead of :func:`release_frame` when the caller
+    still reads a frame upstream of ``df``. The pins are detached, so a
+    second release (an unpersisted cache no longer reads as cached) is a
+    no-op rather than a checkpoint free."""
+    pins = getattr(df, "_oasys_pins", ())
+    if pins:
+        df._oasys_pins = ()
+    for pin in pins:
+        if not pin.is_cached:
+            free_local_checkpoint(pin)
+            continue
         try:
             pin.unpersist()
         except Exception:
             pass
+
+
+def release_frame(df) -> None:
+    """Release a pipeline-stage frame whatever its retention class:
+    ``unpersist()`` for CacheManager entries (no-op on checkpoints) plus
+    :func:`free_local_checkpoint` for LogicalRDD-backed frames (no-op on
+    plain caches — they have no LogicalRDD leaves), so cleanup loops
+    stay uniform when a stage switches between cache and
+    localCheckpoint. Pins attached by :func:`release_pins_with` release
+    with their result frame (:func:`release_pins`)."""
+    release_pins(df)
     try:
         df.unpersist()
     except Exception:

@@ -243,3 +243,16 @@ def test_driver_window_rotation_closes_coverage():
     qs, osql = entry.queries(), entry.oracle_sql()
     assert set(qs) - set(osql) == {"text_bpe_tokenizer"}
     assert set(osql) <= set(qs)
+
+
+def test_workers_get_the_package_root_on_pythonpath(spark):
+    """get_spark ships the directory holding ``oasysdb_spark`` to the
+    Python workers, so a script run from another working directory
+    without PYTHONPATH can still run the package's UDFs."""
+    import os
+
+    import oasysdb_spark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(oasysdb_spark.__file__)))
+    paths = spark.sparkContext.environment["PYTHONPATH"].split(os.pathsep)
+    assert root in paths

@@ -588,19 +588,14 @@ def test_dedup_components_match_union_find(spark, sf_dir):
     """Label propagation must produce exactly the components a driver-side
     union-find over the same edge list produces (independent algorithm)."""
     from oasysdb_spark.operators import dedup
+    from oasysdb_spark.session import release_pins
 
-    cache_out = []
-    edges = [
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_candidate_edges(
-            spark, sf_dir, _cache_out=cache_out
-        ).collect()
-    ]
+    edges_df = dedup.minhash_candidate_edges(spark, sf_dir)
+    edges = [(r["doc_a"], r["doc_b"]) for r in edges_df.collect()]
     # release the signature cache the edge builder pinned for this call
-    # (r15 hygiene: a leaked entry can substitute InMemoryTableScan into
-    # later tests' plans and poison MLlib actions via observe() lineage)
-    for frame in cache_out:
-        frame.unpersist()
+    # (a leaked entry can substitute InMemoryTableScan into later tests'
+    # plans and poison MLlib actions via observe() lineage)
+    release_pins(edges_df)
     docs = [
         r["doc_id"]
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()

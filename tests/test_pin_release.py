@@ -44,6 +44,25 @@ def _persistent_rdd_ids(spark):
         lambda sp, sf: __import__(
             "oasysdb_spark.operators.textops", fromlist=["x"]
         ).domain_mixture_sample(sp, sf),
+        lambda sp, sf: __import__(
+            "oasysdb_spark.operators.dedup", fromlist=["x"]
+        ).minhash_lsh_pairs(sp, sf),
+        lambda sp, sf: __import__(
+            "oasysdb_spark.operators.dedup", fromlist=["x"]
+        ).minhash_jaccard_calibration(sp, sf),
+        lambda sp, sf: __import__(
+            "oasysdb_spark.operators.dedup", fromlist=["x"]
+        ).containment_pairs(sp, sf),
+        lambda sp, sf: __import__("__spark_entry__")._decontaminate(sp, sf),
+        lambda sp, sf: __import__(
+            "oasysdb_spark.operators.dedup", fromlist=["x"]
+        ).simhash_wide_pairs(sp, sf),
+        lambda sp, sf: __import__(
+            "oasysdb_spark.operators.multimodal", fromlist=["x"]
+        ).multimodal_dhash_near_pairs(sp, sf),
+        lambda sp, sf: __import__(
+            "oasysdb_spark.index.pq", fromlist=["x"]
+        ).pq_knn(sp, sf),
     ],
     ids=[
         "join_key_skew_stats",
@@ -54,11 +73,22 @@ def _persistent_rdd_ids(spark):
         "source_length_drift",
         "source_vocab_overlap_matrix",
         "domain_mixture_sample",
+        "minhash_lsh_pairs",
+        "minhash_jaccard_calibration",
+        "containment_pairs",
+        "decontaminate_against",
+        "simhash_wide_pairs",
+        "multimodal_dhash_near_pairs",
+        "pq_knn",
     ],
 )
 def test_single_shot_pins_release_via_release_frame(spark, sf_dir, call):
     from oasysdb_spark.session import release_frame
 
+    # an earlier unreleased call of the same query in this session leaves
+    # its identical plan cached, and caching an already-cached plan adds
+    # no persisted RDD — start from an empty CacheManager
+    spark.catalog.clearCache()
     before = _persistent_rdd_ids(spark)
     df = call(spark, sf_dir)
     df.write.mode("overwrite").format("noop").save()
