@@ -61,6 +61,32 @@ def harmonic_mean_expr(c: Column | str) -> Column:
     return F.count(col) / F.sum(F.lit(1.0) / col)
 
 
+def to_micro(x: Column) -> Column:
+    """``x`` quantized to integer micro-units (bigint), the step before a
+    sum: an integer sum is exact and independent of partition order."""
+    return F.round(x * 1e6).cast("bigint")
+
+
+def from_micro(m: Column) -> Column:
+    """Display a micro-unit value (integer or fractional: an integer
+    mean ``sum(u) / count(*)``, a percentile over micro-units, cents
+    scaled by 1e4) in units, rounded to 6 decimals.
+
+    Rounding an unscaled double at scale 6 is engine-divergent at exact
+    decimal boundaries: Spark rounds the double's binary expansion,
+    DuckDB re-rounds through a ×10^6 multiply, so the last digit flips
+    for about one value in 1e6. Both engines agree on the value in
+    display units rounded AT SCALE 0 (the same double, half away from
+    zero), cast to bigint and divided back, so every oracle twin spells
+    this same expression."""
+    return F.round(F.round(m).cast("bigint") / F.lit(1e6), 6)
+
+
+def round6(x: Column) -> Column:
+    """``x`` display-rounded to 6 decimals (see ``from_micro``)."""
+    return from_micro(x * 1e6)
+
+
 def misra_gries_update(counters: dict, x, k: int) -> None:
     """One Misra-Gries step: bounded-state frequency sketch over a
     stream (at most ``k`` live counters). Guarantee: after n items,

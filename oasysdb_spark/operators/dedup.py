@@ -29,6 +29,7 @@ from oasysdb_spark.session import release_pins, release_pins_with
 from oasysdb_spark.sources.tables import read_parquet_cached
 
 from oasysdb_spark.functions.hashing import hash64
+from oasysdb_spark.functions.stats import from_micro, round6, to_micro
 from oasysdb_spark.functions.text import char_shingles, simhash32, tokens, word_shingles
 
 
@@ -878,13 +879,7 @@ def minhash_lsh_pairs(
     out = _self_pairs(sigs, num_hashes, band_size).select(
         "doc_a",
         "doc_b",
-        # scale-0 display round: integer ratio in 1e-6 display units,
-        # rounded at scale 0, divided back
-        F.round(
-            F.round(inter.cast("double") / union * 1e6).cast("bigint")
-            / F.lit(1e6),
-            6,
-        ).alias("jaccard"),
+        round6(inter.cast("double") / union).alias("jaccard"),
     )
     return release_pins_with(
         out.orderBy(F.col("jaccard").desc(), "doc_a", "doc_b").limit(top_n), sigs
@@ -957,11 +952,9 @@ def minhash_jaccard_calibration(
     LSH candidates share ≥ 1 full band, so ``n_agree ≥ band_size``
     always.
 
-    Float discipline: per-pair exact Jaccard is quantized to 1e-6 units
-    (``round(inter/union · 1e6)`` as bigint — the same HALF_UP-on-ratio
-    rounding every other Jaccard op uses) BEFORE aggregation, so means
-    are exact integer sums divided once; ``est_jaccard`` is an integer
-    ratio rounded once.
+    Per-pair exact Jaccard is quantized to micro-units BEFORE
+    aggregation, so means are exact integer sums divided once;
+    ``est_jaccard`` is an integer ratio.
 
     The per-pair agreement sum is ``num_hashes`` unrolled ``element_at``
     comparisons (codegen-friendly; no interpreted higher-order fold on
@@ -982,34 +975,21 @@ def minhash_jaccard_calibration(
         F.lit(0),
     )
     inter, union = _jaccard_terms("sh_a", "sh_b")
-    jm = F.round((inter.cast("double") / union) * 1e6).cast("bigint")
+    jm = to_micro(inter.cast("double") / union)
     out = (
         pairs.select(n_agree.alias("n_agree"), jm.alias("jm"))
         .groupBy("n_agree")
         .agg(
             F.count("*").cast("bigint").alias("n_pairs"),
-            # micro-unit integer mean, scale-0 display:
-            # sum(jm)/count is already in 1e-6 units, so the scale-0
-            # round lands on an exact integer both engines share
-            F.round(
-                F.round(F.sum("jm") / F.count("*")).cast("bigint") / F.lit(1e6),
-                6,
-            ).alias("mean_exact_jaccard"),
+            from_micro(F.sum("jm") / F.count("*")).alias("mean_exact_jaccard"),
             F.round(F.min("jm") / 1e6, 6).alias("min_exact_jaccard"),
             F.round(F.max("jm") / 1e6, 6).alias("max_exact_jaccard"),
         )
         .select(
             F.col("n_agree").cast("bigint").alias("n_agree"),
             "n_pairs",
-            # int/int ratio, scale-0 display
-            F.round(
-                F.round(
-                    F.col("n_agree")
-                    / F.lit(num_hashes).cast("double")
-                    * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.col("n_agree") / F.lit(num_hashes).cast("double")
             ).alias("est_jaccard"),
             "mean_exact_jaccard",
             "min_exact_jaccard",
@@ -1386,12 +1366,7 @@ def ngram_jaccard_pairs(
     out = pairs.select(
         "doc_a",
         "doc_b",
-        # int/int ratio displayed via the scale-0 form
-        F.round(
-            F.round(inter.cast("double") / union * 1e6).cast("bigint")
-            / F.lit(1e6),
-            6,
-        ).alias("jaccard"),
+        round6(inter.cast("double") / union).alias("jaccard"),
     )
     return out.orderBy(F.col("jaccard").desc(), "doc_a", "doc_b").limit(top_n)
 
@@ -1971,7 +1946,7 @@ def ngram_overlap_flags(
         .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("n_hit_positions"))
     )
-    return (
+    return release_pins_with(
         tr.select("doc_id", "n_grams")
         .join(hits, "doc_id", "left")
         .select(
@@ -1990,7 +1965,9 @@ def ngram_overlap_flags(
             )
             .otherwise(F.lit(0.0))
             .alias("hit_frac"),
-        )
+        ),
+        ev,
+        tr,
     )
 
 
@@ -2067,6 +2044,7 @@ def ngram_contamination_report(
     matched = (
         tr_pos.join(maybe_bc(ev_set), "h").select("h", "train_doc_id").distinct().cache()
     )
+    pins = (ev, ev_set, matched)
 
     if max_train_df is not None:
         # GPT-3-style frequent-gram exclusion — also the skew guard:
@@ -2098,7 +2076,7 @@ def ngram_contamination_report(
         .groupBy("eval_doc_id")
         .agg(F.countDistinct("train_doc_id").cast("bigint").alias("n_train_docs"))
     )
-    return (
+    return release_pins_with(
         ev.select("doc_id", F.size("gh").alias("n_grams"))
         .join(dirty, ev.doc_id == dirty.eval_doc_id, "left")
         .drop("eval_doc_id")
@@ -2121,7 +2099,8 @@ def ngram_contamination_report(
             .otherwise(F.lit(0.0))
             .alias("dirty_frac"),
             F.coalesce("n_train_docs", F.lit(0)).cast("bigint").alias("n_train_docs"),
-        )
+        ),
+        *pins,
     )
 
 
@@ -2252,7 +2231,7 @@ def bloom_overlap_flags(
         .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("n_hit_positions"))
     )
-    return (
+    return release_pins_with(
         tr.select("doc_id", "n_grams")
         .join(hits, "doc_id", "left")
         .select(
@@ -2271,7 +2250,9 @@ def bloom_overlap_flags(
             )
             .otherwise(F.lit(0.0))
             .alias("hit_frac"),
-        )
+        ),
+        ev,
+        tr,
     )
 
 
@@ -2683,15 +2664,8 @@ def dedup_saturation_curve(
             "shard",
             "n_docs",
             "n_dup_prior",
-            # int/int ratio, scale-0 display (r12 ledger re-triage)
-            F.round(
-                F.round(
-                    F.col("n_dup_prior")
-                    / F.col("n_docs").cast("double")
-                    * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.col("n_dup_prior") / F.col("n_docs").cast("double")
             ).alias("dup_frac"),
         )
         .orderBy("shard")

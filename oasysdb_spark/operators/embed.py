@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from oasysdb_spark.sources.tables import read_parquet_cached, prepared
 
 from oasysdb_spark.functions.hashing import hash64
+from oasysdb_spark.functions.stats import from_micro, round6, to_micro
 from oasysdb_spark.functions.text import tokens
 
 SIGN_BIT = 40  # sign bit far above any bucket bit (bucket = h % dim, dim < 2^40)
@@ -235,11 +236,10 @@ def chunk_retrieval_topk(
     byte-identical Python twin (the query doc's own chunks are
     excluded). Returns ``(rank, doc_id, chunk_id, cos_sim)``.
 
-    Float discipline: embeddings are INTEGER vectors, so the dot
-    product and both squared norms are exact integer aggregations —
-    partition order cannot move them; the only floating step is ONE
-    ``dot / sqrt(nq·nc)`` division and ONE round(6) at the end,
-    identical in the oracle. Zero-norm chunks (signs cancelled) are
+    Embeddings are INTEGER vectors, so the dot product and both squared
+    norms are exact integer aggregations (partition order cannot move
+    them); the only floating step is ONE ``dot / sqrt(nq·nc)``
+    division, identical in the oracle. Zero-norm chunks (signs cancelled) are
     excluded on both sides before ranking, and ties break on
     (doc_id, chunk_id).
 
@@ -347,16 +347,8 @@ def chunk_retrieval_topk(
         .select(
             "doc_id",
             "chunk_id",
-            # scale-0 display round (r11 migration): the int/sqrt(int)
-            # double pre-scales to 1e-6 units and rounds at scale 0
-            F.round(
-                F.round(
-                    F.col("dot")
-                    / F.sqrt((F.col("nc") * F.lit(int(nq))).cast("double"))
-                    * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.col("dot") / F.sqrt((F.col("nc") * F.lit(int(nq))).cast("double"))
             ).alias("cos_sim"),
         )
     )
@@ -467,10 +459,8 @@ def _exact_label_centroids(embs: DataFrame) -> DataFrame:
     """(label, cvec): per-label mean vector with cross-engine-exact
     arithmetic — each component is an integer micro-sum
     (``round(val·1e8)`` per element, accumulated as bigint so partition
-    order can't perturb it), divided once and displayed through the
-    scale-0 form (r12 review: the old ``round(s/n/1e8, 6)`` rounded an
-    unscaled double at scale 6 — the exact class the display-round
-    discipline bans, and this helper feeds two driver-window entries).
+    order can't perturb it), divided once and displayed with
+    ``from_micro``.
     The shuffle carries only ``(label, pos)`` pairs; reduce state is
     O(labels × dim)."""
     v = F.col("embedding").cast("array<double>")
@@ -484,11 +474,7 @@ def _exact_label_centroids(embs: DataFrame) -> DataFrame:
         .select(
             "label",
             "pos",
-            F.round(
-                F.round(F.col("s") / F.col("n") / F.lit(100.0)).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("cv"),
+            from_micro(F.col("s") / F.col("n") / F.lit(100.0)).alias("cv"),
         )
         .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pc"))
@@ -513,12 +499,12 @@ def embedding_outlier_stats(
     Returns ``(label, n_vecs, mean_cos, p10_cos, n_outliers,
     outlier_frac)`` — one row per label.
 
-    Float discipline (cross-engine oracle): centroid components are
-    exact integer micro-sums (``round(val·1e8)`` per element, summed as
-    bigint, divided once) so the centroid doubles are bit-identical in
-    Spark and DuckDB regardless of partition order; per-row cosines are
-    quantized to 1e-6 units before aggregation, so the mean is an exact
-    integer sum and the percentile interpolates exact integers.
+    Centroid components are exact integer sums (``round(val·1e8)`` per
+    element, summed as bigint, divided once) so the centroid doubles are
+    bit-identical in Spark and DuckDB regardless of partition order;
+    per-row cosines are quantized to micro-units before aggregation, so
+    the mean is an exact integer sum and the percentile interpolates
+    exact integers.
 
     Scale shape: the centroid pass shuffles only ``(label, pos)`` pairs
     (reduce state O(labels × dim), same as ``label_centroids``); the
@@ -539,7 +525,7 @@ def embedding_outlier_stats(
             "cos_sim"
         ),
     )
-    cm = F.round(F.col("cos_sim") * 1e6).cast("bigint")
+    cm = to_micro(F.col("cos_sim"))
     cut = int(round(min_cos * 1_000_000))
     return (
         joined.where(F.col("cos_sim").isNotNull())
@@ -547,19 +533,8 @@ def embedding_outlier_stats(
         .groupBy("label")
         .agg(
             F.count("*").cast("bigint").alias("n_vecs"),
-            # micro-unit integer mean / percentile, scale-0 displays
-            # (migrated at r12 promotion): sum(cm)/count and the
-            # interpolated percentile are already in 1e-6 units, so the
-            # scale-0 round lands on an exact integer both engines share
-            F.round(
-                F.round(F.sum("cm") / F.count("*")).cast("bigint") / F.lit(1e6),
-                6,
-            ).alias("mean_cos"),
-            F.round(
-                F.round(F.percentile(F.col("cm"), F.lit(0.1))).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("p10_cos"),
+            from_micro(F.sum("cm") / F.count("*")).alias("mean_cos"),
+            from_micro(F.percentile(F.col("cm"), F.lit(0.1))).alias("p10_cos"),
             F.sum(F.when(F.col("cm") < cut, 1).otherwise(0))
             .cast("bigint")
             .alias("n_outliers"),
@@ -570,13 +545,8 @@ def embedding_outlier_stats(
             "mean_cos",
             "p10_cos",
             "n_outliers",
-            # int/int ratio, scale-0 display (r12 promotion migration)
-            F.round(
-                F.round(
-                    F.col("n_outliers") / F.col("n_vecs").cast("double") * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.col("n_outliers") / F.col("n_vecs").cast("double")
             ).alias("outlier_frac"),
         )
     )
@@ -598,10 +568,9 @@ def label_centroid_similarity(
     Returns ``(label_a, label_b, n_a, n_b, cos_sim)`` for every
     unordered label pair (``label_a < label_b``), ordered by pair.
 
-    Float discipline: centroids via :func:`_exact_label_centroids`
-    (integer micro-sums — bit-identical cross-engine); the pair cosine
-    is one dot/norm evaluation over the 6-dp centroid components,
-    rounded once to 6 dp.
+    Centroids come from :func:`_exact_label_centroids` (integer
+    micro-sums, bit-identical cross-engine); the pair cosine is one
+    dot/norm evaluation over the 6-dp centroid components.
 
     Scale shape: one (label, pos) shuffle builds the centroid table
     (O(labels × dim) reduce state); the pair matrix is a broadcast
@@ -636,18 +605,12 @@ def label_centroid_similarity(
             "label_b",
             "n_a",
             "n_b",
-            # deterministic centroid doubles through one IEEE dot/divide,
-            # scale-0 display (r12 ledger re-triage)
-            F.round(
-                F.round(
-                    F.when(
-                        denom != 0.0,
-                        dot_product(F.col("cvec_a"), F.col("cvec_b")) / denom,
-                    )
-                    * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            # deterministic centroid doubles through one IEEE dot/divide
+            round6(
+                F.when(
+                    denom != 0.0,
+                    dot_product(F.col("cvec_a"), F.col("cvec_b")) / denom,
+                )
             ).alias("cos_sim"),
         )
         .orderBy("label_a", "label_b")
@@ -667,7 +630,7 @@ def embedding_norm_stats(
     Returns ``(label, n_vecs, mean_norm, p10_norm, p90_norm, min_norm,
     max_norm)`` ordered by label.
 
-    Float discipline: the norm is the expression-side sequential fold
+    The norm is the expression-side sequential fold
     (``sqrt(Σx²)`` == ``sqrt(list_sum(...))``), quantized to 1e-6 units
     before aggregation — mean is an exact integer sum divided once,
     percentiles interpolate exact integers (Spark exact ``percentile``
@@ -681,35 +644,17 @@ def embedding_norm_stats(
     if embs is None:
         embs = load_embeddings(spark, sf_dir)
     v = F.col("embedding").cast("array<double>")
-    nm = F.round(l2_norm(v) * 1e6).cast("bigint")
+    nm = to_micro(l2_norm(v))
     return (
         embs.select("label", nm.alias("nm"))
         .groupBy("label")
         .agg(
             F.count("*").cast("bigint").alias("n_vecs"),
-            # mean and percentiles land on FRACTIONAL micro-units
-            # (integer mean / interpolated quantile), so the display
-            # rounds at SCALE 0 of the micro-unit value before the /1e6
-            # (the r9 qpf lesson — /1e6 first puts the round at an
-            # unrepresentable 7th-decimal boundary); min/max are exact
-            # integers, where /1e6 + round(,6) is the no-op-safe form
-            F.round(
-                F.round(F.sum("nm") / F.count("*")).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("mean_norm"),
-            F.round(
-                F.round(F.percentile(F.col("nm"), F.lit(0.1)))
-                .cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("p10_norm"),
-            F.round(
-                F.round(F.percentile(F.col("nm"), F.lit(0.9)))
-                .cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("p90_norm"),
+            # mean and percentiles land on FRACTIONAL micro-units;
+            # min/max are exact integers
+            from_micro(F.sum("nm") / F.count("*")).alias("mean_norm"),
+            from_micro(F.percentile(F.col("nm"), F.lit(0.1))).alias("p10_norm"),
+            from_micro(F.percentile(F.col("nm"), F.lit(0.9))).alias("p90_norm"),
             F.round(F.min("nm") / 1e6, 6).alias("min_norm"),
             F.round(F.max("nm") / 1e6, 6).alias("max_norm"),
         )
@@ -953,10 +898,9 @@ def hybrid_search_rrf(
     ``k`` best; a doc absent from one leg's pool carries a NULL rank
     there and contributes only the other leg's term.
 
-    Float discipline: leg ranks are integers derived from ALREADY
-    ROUNDED leg scores with doc_id tie-breaks (both engines rank the
-    identical rounded values), and the fused score is a two-term sum of
-    exact reciprocals rounded ONCE — cross-engine bit-stable.
+    Leg ranks are integers derived from ALREADY ROUNDED leg scores with
+    doc_id tie-breaks (both engines rank the identical rounded values),
+    and the fused score is a two-term sum of exact reciprocals.
 
     Scale shape: each leg is the already-audited operator (BM25's only
     corpus shuffle is the query-term-filtered tf; the embedding leg is
@@ -1023,16 +967,8 @@ def hybrid_search_rrf(
         .where(F.col("nc") > 0)
         .select(
             "doc_id",
-            # ratio of exact integers, displayed through the scale-0 form
-            # (r12 migration of the round(double, 6) boundary class)
-            F.round(
-                F.round(
-                    F.col("dot")
-                    / F.sqrt((F.col("nc") * F.lit(int(nq))).cast("double"))
-                    * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.col("dot") / F.sqrt((F.col("nc") * F.lit(int(nq))).cast("double"))
             ).alias("cos_sim"),
         )
     )
@@ -1046,21 +982,9 @@ def hybrid_search_rrf(
         "doc_id",
         "bm25_rank",
         "cos_rank",
-        # two-term sum of exact reciprocals, scale-0 display (r12)
-        F.round(
-            F.round(
-                (
-                    F.coalesce(
-                        1.0 / (F.lit(rrf_k) + F.col("bm25_rank")), F.lit(0.0)
-                    )
-                    + F.coalesce(
-                        1.0 / (F.lit(rrf_k) + F.col("cos_rank")), F.lit(0.0)
-                    )
-                )
-                * F.lit(1e6)
-            ).cast("bigint")
-            / F.lit(1e6),
-            6,
+        round6(
+            F.coalesce(1.0 / (F.lit(rrf_k) + F.col("bm25_rank")), F.lit(0.0))
+            + F.coalesce(1.0 / (F.lit(rrf_k) + F.col("cos_rank")), F.lit(0.0))
         ).alias("rrf_score"),
     )
     out_w = Window.orderBy(F.desc("rrf_score"), F.asc("doc_id"))

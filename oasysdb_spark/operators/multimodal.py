@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oasysdb_spark.sources.tables import read_parquet_cached, prepared
+from oasysdb_spark.functions.stats import round6
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -662,22 +663,13 @@ def extract_features(media: DataFrame) -> DataFrame:
     # rounding happens JVM-side, never in the worker: python's round()
     # is half-EVEN, and a dyadic-rational byte_mean landing exactly on
     # the 6dp boundary (93.7265625 at sf0.1) rounded DOWN here while
-    # DuckDB rounded up (r9 third-scale sweep find). The oracle-compared
-    # byte_mean additionally micro-quantizes at SCALE 0 (×1e6, round,
-    # /1e6) — both engines round the identical pre-scaled double, where
-    # scale-6 rounding of the unscaled value can disagree at decimal
-    # boundaries (Spark rounds the exact binary expansion, DuckDB
-    # re-rounds through its own ×1e6 multiply)
+    # DuckDB rounded up. The oracle-compared byte_mean takes round6.
     raw = media.mapInPandas(_extract, schema=FEATURE_SCHEMA)
     return raw.select(
         "media_id",
         "media_type",
         "n_bytes",
-        F.round(
-            F.round(F.col("byte_mean") * F.lit(1e6)).cast("bigint")
-            / F.lit(1e6),
-            6,
-        ).alias("byte_mean"),
+        round6(F.col("byte_mean")).alias("byte_mean"),
         F.round("byte_std", 6).alias("byte_std"),
         F.round("entropy8", 6).alias("entropy8"),
     )
@@ -778,20 +770,16 @@ def multimodal_pixel_stats(spark, sf_dir: str) -> DataFrame:
     pass."""
     media = synthesize_ppm_media_from_documents(spark, sf_dir)
     feats = extract_pixel_features(media)
-    # each mean is an int-sum/count double from the decoder; displays
-    # use the scale-0 rounding form JVM-side (r10 migration — never
-    # round in python workers, python round() is half-even)
-    def _disp6(c):
-        return F.round(F.round(F.col(c) * 1e6).cast("bigint") / F.lit(1e6), 6)
-
+    # each mean is an int-sum/count double from the decoder; display
+    # rounds run JVM-side (python round() is half-even)
     return feats.select(
         F.col("media_id").cast("bigint").alias("media_id"),
         "width",
         "height",
-        _disp6("pix_mean").alias("pix_mean"),
-        _disp6("mean_r").alias("mean_r"),
-        _disp6("mean_g").alias("mean_g"),
-        _disp6("mean_b").alias("mean_b"),
+        round6(F.col("pix_mean")).alias("pix_mean"),
+        round6(F.col("mean_r")).alias("mean_r"),
+        round6(F.col("mean_g")).alias("mean_g"),
+        round6(F.col("mean_b")).alias("mean_b"),
     )
 
 
@@ -1496,16 +1484,12 @@ def multimodal_video_stats(spark, sf_dir: str, every_n: int = 2) -> DataFrame:
     constant), so an oracle can recompute every value from the text."""
     media = synthesize_y4m_media_from_documents(spark, sf_dir)
     feats = extract_video_features(media, every_n=every_n)
-    # scale-0 display rounds JVM-side (r10 migration)
-    def _disp6(c):
-        return F.round(F.round(F.col(c) * 1e6).cast("bigint") / F.lit(1e6), 6)
-
     return feats.select(
         F.col("media_id").cast("bigint").alias("media_id"),
         "width",
         "height",
         "n_frames",
         "n_sampled",
-        _disp6("luma_mean").alias("luma_mean"),
-        _disp6("motion").alias("motion"),
+        round6(F.col("luma_mean")).alias("luma_mean"),
+        round6(F.col("motion")).alias("motion"),
     )

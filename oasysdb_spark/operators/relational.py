@@ -24,6 +24,7 @@ from oasysdb_spark.sources.tables import prepared
 from oasysdb_spark.session import tiny_df, release_pins_with
 
 from oasysdb_spark.functions.time import epoch_ms
+from oasysdb_spark.functions.stats import from_micro, round6, to_micro
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -131,14 +132,12 @@ def _q1_pricing_summary_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-heavy agg with map-side partial aggregation;
     the parquet scan reads only the 7 referenced columns.
 
-    r12 float-discipline migration: every money/quantity sum accumulates
-    as exact integer units in decimal(38,0) (quantity/price in cents,
-    disc_price in 1e-4 units, charge in 1e-6 units — each lossless for
-    the fixtures' finite-decimal inputs) and the averages divide exact
-    integer sums, displayed through the scale-0 rounding form. The
-    legacy round(sum-of-double, k) flips last digits between engines at
-    exact decimal boundaries and loses cents past 2^53 (~sf50 group
-    sums); Q1's four whole-table groups are the first place that bites."""
+    Every money/quantity sum accumulates as exact integer units in
+    decimal(38,0) (quantity/price in cents, disc_price in 1e-4 units,
+    charge in 1e-6 units — each lossless for the fixtures'
+    finite-decimal inputs) and the averages divide exact integer sums.
+    A sum of doubles loses cents past 2^53 (~sf50 group sums); Q1's
+    four whole-table groups are the first place that bites."""
     li = _t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
@@ -155,13 +154,9 @@ def _q1_pricing_summary_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             _money_disp(disc_price).alias("sum_disc_price"),
             _money_disp(charge, 1000000).alias("sum_charge"),
             # integral quantities / 2dp discounts: avg of an exact integer
-            # sum, pre-scaled to 1e-6 display units and rounded at scale 0
-            F.round(
-                F.round(F.avg(qty_int) * F.lit(1e6)).cast("bigint") / F.lit(1e6), 6
-            ).alias("avg_qty"),
-            F.round(
-                F.round(F.avg(disc_c2) * F.lit(1e4)).cast("bigint") / F.lit(1e6), 6
-            ).alias("avg_disc"),
+            # sum
+            round6(F.avg(qty_int)).alias("avg_qty"),
+            from_micro(F.avg(disc_c2) * F.lit(1e4)).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
     )
@@ -429,10 +424,8 @@ def json_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_events"),
             F.sum("k").cast("bigint").alias("sum_k"),
-            # integer mean + exact-cents sum, scale-0 displays (r10)
-            F.round(
-                F.round(F.avg("k") * 1e6).cast("bigint") / F.lit(1e6), 6
-            ).alias("avg_k"),
+            # integer mean + exact-cents sum
+            round6(F.avg("k")).alias("avg_k"),
             F.round(
                 F.sum(F.round(F.col("value") * 100).cast("bigint"))
                 / F.lit(100.0),
@@ -556,14 +549,7 @@ def event_funnel(
         "n_users",
         F.when(
             first_n > 0,
-            # int/int ratio displayed via the scale-0 form (r10)
-            F.round(
-                F.round(
-                    F.col("n_users").cast("double") / first_n * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ),
+            round6(F.col("n_users").cast("double") / first_n),
         )
         .otherwise(F.lit(0.0))
         .alias("conversion_frac"),
@@ -574,46 +560,22 @@ def math_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math-function suite: sqrt/pow/ln/abs/ceil/floor over lineitem
     aggregates per returnflag."""
     li = _t(spark, sf_dir, "lineitem")
-    # r10 float discipline: exact integer accumulation wherever the
-    # input has finite decimal precision (quantity integral, discount²
-    # an exact 4-decimal), per-row 1e-6 micro-quantization for the
-    # transcendental ln term (the DSIR pattern — double sums are
-    # partition-order nondeterministic), and every display round is
-    # the scale-0 form
+    # exact integer accumulation wherever the input has finite decimal
+    # precision (quantity integral, discount² an exact 4-decimal), and
+    # per-row micro-quantization for the transcendental ln term (double
+    # sums are partition-order nondeterministic)
     qty_sum = F.sum(F.round(F.col("l_quantity")).cast("bigint"))
     dsq_u4 = F.round(F.pow(F.col("l_discount"), 2) * 10000).cast("bigint")
-    ln_u6 = F.round(
-        F.log(F.col("l_extendedprice") + 1) * 1e6
-    ).cast("bigint")
+    ln_u6 = to_micro(F.log(F.col("l_extendedprice") + 1))
     return (
         li.groupBy("l_returnflag")
         .agg(
-            F.round(
-                F.round(
-                    F.sqrt(qty_sum / F.count("*")) * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("sqrt_avg_qty"),
-            F.round(
-                F.round(F.sum(dsq_u4) / F.count("*") * 100).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("avg_disc_sq"),
-            F.round(
-                F.round(F.sum(ln_u6) / F.count("*")).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("avg_ln_price"),
+            round6(F.sqrt(qty_sum / F.count("*"))).alias("sqrt_avg_qty"),
+            from_micro(F.sum(dsq_u4) / F.count("*") * 100).alias("avg_disc_sq"),
+            from_micro(F.sum(ln_u6) / F.count("*")).alias("avg_ln_price"),
             F.sum(F.ceil("l_quantity")).cast("bigint").alias("sum_ceil_qty"),
             F.sum(F.floor("l_quantity")).cast("bigint").alias("sum_floor_qty"),
-            F.round(
-                F.round(
-                    F.max(F.abs(F.col("l_discount") - 0.05)) * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("max_abs_disc_dev"),
+            round6(F.max(F.abs(F.col("l_discount") - 0.05))).alias("max_abs_disc_dev"),
         )
         .orderBy("l_returnflag")
     )
@@ -643,11 +605,7 @@ def window_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(100.0),
             2,
         ).alias("next_price"),
-        F.round(
-            F.round(F.percent_rank().over(w) * 1e6).cast("bigint")
-            / F.lit(1e6),
-            6,
-        ).alias("pct_rank"),
+        round6(F.percent_rank().over(w)).alias("pct_rank"),
     )
 
 
@@ -741,10 +699,10 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = _t(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    # exact 1e-4-unit integers (r12 migration): the share is a ratio of
-    # two exact decimal sums — cast each to double once (round-to-nearest
-    # in both engines), divide, and display through the scale-0 form;
-    # total_revenue converts u4→cents in integer math
+    # exact 1e-4-unit integers: the share is a ratio of two exact
+    # decimal sums — cast each to double once (round-to-nearest in both
+    # engines) and divide; total_revenue converts u4→cents in integer
+    # math
     rev_u4 = F.round(rev * 10000).cast("bigint").cast("decimal(38,0)")
     promo_u4 = F.when(F.col("p_type") == "ECONOMY", rev_u4).otherwise(
         F.lit(0).cast("decimal(38,0)")
@@ -752,14 +710,10 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .agg(
-            F.round(
-                F.round(
-                    F.sum(promo_u4).cast("double")
-                    / F.sum(rev_u4).cast("double")
-                    * F.lit(1e8)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            from_micro(
+                F.sum(promo_u4).cast("double")
+                / F.sum(rev_u4).cast("double")
+                * F.lit(1e8)
             ).alias("promo_share"),
             _cents_disp(_dec_units_to_cents(F.sum(rev_u4), 100)).alias(
                 "total_revenue"
@@ -1013,17 +967,11 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, one partkey exchange of the filtered rows only."""
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#1")
-    # the cut is an avg over INTEGRAL quantities (exact bigint sum →
-    # one double divide), pre-scaled ×0.2×1e6 and rounded at scale 0 so
-    # both engines cut bit-identically (r12 migration of the legacy
-    # round(avg(double)*0.2, 6) form)
+    # the cut is 0.2 × an avg over INTEGRAL quantities (exact bigint
+    # sum → one double divide), so both engines cut bit-identically
     qty_int = F.round(F.col("l_quantity")).cast("bigint")
     w_part = Window.partitionBy("l_partkey")
-    qty_cut = F.round(
-        F.round(F.avg(qty_int).over(w_part) * F.lit(2e5)).cast("bigint")
-        / F.lit(1e6),
-        6,
-    )
+    qty_cut = from_micro(F.avg(qty_int).over(w_part) * F.lit(2e5))
     cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -1081,14 +1029,11 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     nation = _t(spark, sf_dir, "nation")
-    # exact-cents mean (acctbal is 2dp): bigint-cent avg → pre-scale to
-    # 1e-6 display units → scale-0 round, so the threshold is the same
-    # double on both engines (r12 migration)
+    # exact-cents mean (acctbal is 2dp), so the threshold is the same
+    # double on both engines
     bal_c = F.round(F.col("c_acctbal") * 100).cast("bigint")
     avg_bal = cust.where(F.col("c_acctbal") > 0).agg(
-        F.round(
-            F.round(F.avg(bal_c) * F.lit(1e4)).cast("bigint") / F.lit(1e6), 6
-        ).alias("avg_bal")
+        from_micro(F.avg(bal_c) * F.lit(1e4)).alias("avg_bal")
     )
     return (
         cust.join(F.broadcast(avg_bal))
@@ -1174,10 +1119,8 @@ def percentile_stats(
     directly."""
     li = _t(spark, sf_dir, "lineitem")
     # percentiles interpolate INTEGER cents (o/l prices are 2dp), so
-    # midpoints land on exactly-representable halves; display divides
-    # back through the scale-0 form (the r9 qpf lesson: interpolating
-    # 2dp doubles lands on unrepresentable boundaries, and scale-6
-    # rounds of unscaled doubles flip last digits between engines)
+    # midpoints land on exactly-representable halves (interpolating 2dp
+    # doubles lands on unrepresentable boundaries)
     _pfn = "percentile" if approx_accuracy is None else "percentile_approx"
     _acc = "" if approx_accuracy is None else f", {int(approx_accuracy)}"
     pcts = F.expr(
@@ -1185,28 +1128,18 @@ def percentile_stats(
         f"array(0.5, 0.9, 0.99){_acc})"
     )
 
-    def _cents_disp(c):
-        return F.round(
-            F.round(c * 10000).cast("bigint") / F.lit(1e6), 6
-        )
-
     pct = li.groupBy("l_returnflag").agg(
-        _cents_disp(pcts[0]).alias("price_med"),
-        _cents_disp(pcts[1]).alias("price_p90"),
-        _cents_disp(pcts[2]).alias("price_p99"),
+        from_micro(pcts[0] * 10000).alias("price_med"),
+        from_micro(pcts[1] * 10000).alias("price_p90"),
+        from_micro(pcts[2] * 10000).alias("price_p99"),
         # quantities are integral: the median carries at most one
-        # decimal digit (a .5 midpoint) — pre-scale + scale-0 round
-        F.round(
-            F.round(
-                F.expr(
-                    "median(l_quantity)"
-                    if approx_accuracy is None
-                    else f"percentile_approx(l_quantity, 0.5{_acc})"
-                )
-                * 1e6
-            ).cast("bigint")
-            / F.lit(1e6),
-            6,
+        # decimal digit (a .5 midpoint)
+        round6(
+            F.expr(
+                "median(l_quantity)"
+                if approx_accuracy is None
+                else f"percentile_approx(l_quantity, 0.5{_acc})"
+            )
         ).alias("qty_med"),
     )
     nd = (
@@ -1242,13 +1175,10 @@ def skew_salted_user_join(spark: SparkSession, sf_dir: str, salts: int = 8) -> D
     counts = events.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("user_events")
     ).localCheckpoint(eager=True)
-    # mean of exact integer counts, displayed via the scale-0 form —
-    # also the heavy/light THRESHOLD, so both engines must agree on it
+    # mean of exact integer counts — also the heavy/light THRESHOLD, so
+    # both engines must agree on it
     avg_events = counts.agg(
-        F.round(
-            F.round(F.avg("user_events") * 1e6).cast("bigint") / F.lit(1e6),
-            6,
-        ).alias("avg_events")
+        round6(F.avg("user_events")).alias("avg_events")
     )
     dim = counts.join(F.broadcast(avg_events)).withColumn(
         "tier",
@@ -1299,15 +1229,11 @@ def join_key_skew_stats(
     bound ``log2(n_keys)`` — the gap between the two IS the skew; a
     hot-key-dominated table reads several bits under uniform).
 
-    Float discipline: the per-key entropy term ``c·log2(c)`` quantizes
-    to 1e-6-unit BIGINTs before the sum (exact integer accumulation —
-    the DSIR partition-order-flake fix), one divide + round at the end;
-    p50/p99 are Spark's exact ``percentile`` == DuckDB
-    ``quantile_cont`` bit-for-bit, displayed through the scale-0 form
-    (p99 interpolates at frac(0.99·(n−1)) — an arbitrary fraction, so
-    the interpolated double is NOT guaranteed representable and the
-    plain scale-6 round is the cross-engine last-digit hazard; r10
-    ADVICE).
+    The per-key entropy term ``c·log2(c)`` quantizes to micro-units
+    before the sum (exact integer accumulation); p50/p99 are Spark's
+    exact ``percentile`` == DuckDB ``quantile_cont`` bit-for-bit (p99
+    interpolates at frac(0.99·(n−1)), an arbitrary fraction, so the
+    interpolated double is NOT guaranteed representable).
 
     ``approx_accuracy`` swaps the exact percentiles for the mergeable
     ``percentile_approx`` sketch (O(accuracy) state instead of the
@@ -1332,7 +1258,7 @@ def join_key_skew_stats(
         F.count("*").cast("bigint").alias("key_rows")
     ).localCheckpoint(eager=True)
     c = F.col("key_rows").cast("double")
-    em = F.round(c * F.log2(c) * 1e6).cast("bigint")
+    em = to_micro(c * F.log2(c))
     stats = per_key.agg(
         F.sum("key_rows").cast("bigint").alias("n_rows"),
         F.count("*").cast("bigint").alias("n_keys"),
@@ -1356,36 +1282,13 @@ def join_key_skew_stats(
         "n_rows",
         "n_keys",
         "max_key_rows",
-        # scale-0 display round (r10 ADVICE): p99's interpolation
-        # fraction is arbitrary, so pre-scale + scale-0 + divide back
-        F.round(
-            F.round(F.col("__p50") * 1e6).cast("bigint") / F.lit(1e6), 6
-        ).alias("p50_key_rows"),
-        F.round(
-            F.round(F.col("__p99") * 1e6).cast("bigint") / F.lit(1e6), 6
-        ).alias("p99_key_rows"),
-        # entropy/uniform display values micro-quantize at SCALE 0 of
-        # the identically-computed pre-scaled double (the r9 rounding
-        # rule: scale-6 rounds of unscaled doubles flip last digits
-        # between engines at exact decimal boundaries)
-        F.round(
-            F.round(
-                (
-                    F.log2(F.col("n_rows").cast("double"))
-                    - (F.col("__sm") / 1e6) / F.col("n_rows")
-                )
-                * 1e6
-            ).cast("bigint")
-            / 1e6,
-            6,
+        round6(F.col("__p50")).alias("p50_key_rows"),
+        round6(F.col("__p99")).alias("p99_key_rows"),
+        round6(
+            F.log2(F.col("n_rows").cast("double"))
+            - (F.col("__sm") / 1e6) / F.col("n_rows")
         ).alias("entropy_bits"),
-        F.round(
-            F.round(F.log2(F.col("n_keys").cast("double")) * 1e6).cast(
-                "bigint"
-            )
-            / 1e6,
-            6,
-        ).alias("uniform_bits"),
+        round6(F.log2(F.col("n_keys").cast("double"))).alias("uniform_bits"),
     )
     top = per_key.orderBy(F.desc("key_rows"), F.asc(key)).limit(top_k)
     w = Window.orderBy(F.desc("key_rows"), F.asc(key))
@@ -1400,13 +1303,7 @@ def join_key_skew_stats(
                 # under ANSI mode / silently nulls on non-numeric keys
                 F.col(key).cast("string").alias("key_value"),
                 "key_rows",
-                F.round(
-                    F.round(
-                        F.col("key_rows") / F.col("n_rows") * 1e6
-                    ).cast("bigint")
-                    / 1e6,
-                    6,
-                ).alias("key_frac"),
+                round6(F.col("key_rows") / F.col("n_rows")).alias("key_frac"),
                 "n_rows",
                 "n_keys",
                 "max_key_rows",
@@ -1447,7 +1344,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     # volumes accumulate as exact 1e-4-unit integers; the share is a
-    # ratio of two exact integers displayed via the scale-0 form (r10)
+    # ratio of two exact integers
     vol_u4 = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
     ).cast("bigint")
@@ -1458,18 +1355,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .groupBy(F.year("o_orderdate").cast("integer").alias("o_year"))
         .agg(
-            F.round(
-                F.round(
-                    F.sum(
-                        F.when(
-                            F.col("supp_nation") == "NATION_1", vol_u4
-                        ).otherwise(F.lit(0).cast("bigint"))
+            round6(
+                F.sum(
+                    F.when(F.col("supp_nation") == "NATION_1", vol_u4).otherwise(
+                        F.lit(0).cast("bigint")
                     )
-                    / F.sum(vol_u4)
-                    * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+                )
+                / F.sum(vol_u4)
             ).alias("mkt_share")
         )
         .orderBy("o_year")
@@ -1924,15 +1816,9 @@ def lineitem_price_qty_correlation(spark: SparkSession, sf_dir: str) -> DataFram
         agg.select(
             "l_returnflag",
             F.col("n").alias("n_rows"),
-            # scale-0 display round (promoted at r11 with the migrated
-            # form): the closed-form double pre-scales to 1e-6 units
-            F.round(
-                F.round(
-                    F.when(den != 0.0, (n * sxy - sx * sy) / den) * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("corr_qty_price"),
+            round6(F.when(den != 0.0, (n * sxy - sx * sy) / den)).alias(
+                "corr_qty_price"
+            ),
         )
         .orderBy("l_returnflag")
     )
@@ -1950,12 +1836,12 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4,4,4) is the champions cell; a growing (1,4,4) cell is churning
     whales — the actionable read.
 
-    Float discipline: all three per-user metrics are exact integers
+    All three per-user metrics are exact integers
     (epoch millis, counts, cents); quartile thresholds are Spark's
     exact ``percentile`` over those integers (== ``quantile_cont``);
     bucketing is strict-greater comparison against the thresholds
     (ties fall low — deterministic, no rank ambiguity);
-    ``avg_monetary`` is an integer-cents sum divided once and rounded.
+    ``avg_monetary`` is an integer-cents sum divided once.
 
     Scale shape: one map-side-combined shuffle collapses the stream to
     |users| rows; the threshold pass is one broadcast one-row aggregate
@@ -1995,13 +1881,8 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_q", "f_q", "m_q")
         .agg(
             F.count("*").cast("bigint").alias("n_users"),
-            # mean cents is fractional: pre-scale to 1e-6 display units
-            # and round at SCALE 0 before dividing back (r10 discipline)
-            F.round(
-                F.round(F.sum("m") / F.count("*") * 1e4).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("avg_monetary"),
+            # mean cents is fractional
+            from_micro(F.sum("m") / F.count("*") * 1e4).alias("avg_monetary"),
         )
         .orderBy("r_q", "f_q", "m_q")
     )
@@ -2024,8 +1905,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     small frame. Spark-side cost: one corpus-scale shuffle + day-scale
     aggregates.
 
-    Float discipline: DAU/WAU are exact integers; stickiness is one
-    integer ratio rounded once."""
+    DAU/WAU are exact integers; stickiness is one integer ratio."""
     events = _t(spark, sf_dir, "events")
     du = (
         events.select(
@@ -2053,14 +1933,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day",
             "dau",
             "wau",
-            # int/int ratio, scale-0 display (r12 ledger re-triage)
-            F.round(
-                F.round(
-                    F.col("dau") / F.col("wau").cast("double") * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("stickiness"),
+            round6(F.col("dau") / F.col("wau").cast("double")).alias("stickiness"),
         )
         .orderBy("day")
     )

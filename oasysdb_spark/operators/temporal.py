@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from oasysdb_spark.session import tiny_df
 
 from oasysdb_spark.functions.time import epoch_ms
+from oasysdb_spark.functions.stats import round6
 from oasysdb_spark.sources.tables import load_table, prepared
 
 
@@ -387,7 +388,7 @@ def event_rate_anomalies(
     Returns ``(event_type, hour_ts, n_events, z_score)`` ordered by
     (event_type, hour_ts).
 
-    Float discipline: the z-score is formed from EXACT integers only —
+    The z-score is formed from EXACT integers only —
     with per-type n (hours), S1 = Σc, S2 = Σc², a bucket count c has
 
         z = (c·n − S1) / sqrt(n·S2 − S1²)
@@ -422,16 +423,8 @@ def event_rate_anomalies(
     num = F.col("c") * F.col("n") - F.col("s1")
     den2 = F.col("n") * F.col("s2") - F.col("s1") * F.col("s1")
     # exact integers through one IEEE sqrt+divide (identical doubles on
-    # both engines), displayed via the scale-0 form (r12 ledger
-    # re-triage: scale-6 rounds of the unscaled double can disagree —
-    # Spark rounds the binary expansion, DuckDB re-rounds through ×1e6)
-    z = F.round(
-        F.round(
-            num.cast("double") / F.sqrt(den2.cast("double")) * F.lit(1e6)
-        ).cast("bigint")
-        / F.lit(1e6),
-        6,
-    )
+    # both engines)
+    z = round6(num.cast("double") / F.sqrt(den2.cast("double")))
     return (
         hourly.where(den2 > 0)
         .select(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from oasysdb_spark.sources.tables import read_parquet_cached, prepared
 
 from oasysdb_spark.functions.hashing import hash64
+from oasysdb_spark.functions.stats import from_micro, round6, to_micro
 from oasysdb_spark.session import release_pins_with
 
 from oasysdb_spark.functions.text import (
@@ -79,19 +80,14 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/B won 1.39 -> 1.00 and its spread stays).
     docs = _docs(spark, sf_dir)
     toks = tokens(F.col("text"))
-    # every ratio is per-row int/int; displays use the scale-0 rounding
-    # form (r10 migration of the legacy round(double, 6) sites)
-    def _disp6(c):
-        return F.round(F.round(c * 1e6).cast("bigint") / F.lit(1e6), 6)
-
     return docs.select(
         "doc_id",
         F.length("text").cast("bigint").alias("n_chars_m"),
         F.size(toks).cast("bigint").alias("n_tokens"),
-        _disp6(mean_token_len(toks)).alias("mean_token_len"),
-        _disp6(punct_ratio(F.col("text"))).alias("punct_ratio"),
-        _disp6(stopword_ratio(toks)).alias("stopword_ratio"),
-        _disp6(uniq_token_ratio(toks)).alias("uniq_ratio"),
+        round6(mean_token_len(toks)).alias("mean_token_len"),
+        round6(punct_ratio(F.col("text"))).alias("punct_ratio"),
+        round6(stopword_ratio(toks)).alias("stopword_ratio"),
+        round6(uniq_token_ratio(toks)).alias("uniq_ratio"),
         quality_rules(F.col("text"), toks).cast("bigint").alias("quality"),
     )
 
@@ -111,11 +107,7 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("ws_tokens").cast("bigint").alias("total_ws_tokens"),
             F.sum("bpe_tokens").cast("bigint").alias("total_bpe_tokens"),
-            # scale-0 display round (r11 migration): the integer mean is
-            # an exact double, rounded at scale 0 in display units
-            F.round(
-                F.round(F.avg("ws_tokens") * 1e6).cast("bigint") / F.lit(1e6), 6
-            ).alias("mean_ws_tokens"),
+            round6(F.avg("ws_tokens")).alias("mean_ws_tokens"),
         )
         .orderBy("lang")
     )
@@ -340,15 +332,7 @@ def stratified_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("keep"), F.col("bpe")).otherwise(0))
             .cast("bigint")
             .alias("kept_tokens"),
-            # scale-0 display round (r11 migration): exact 0/1 integer
-            # mean, pre-scaled to 1e-6 display units, rounded at scale 0
-            F.round(
-                F.round(
-                    F.avg(F.when(F.col("keep"), 1).otherwise(0)) * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("kept_frac"),
+            round6(F.avg(F.when(F.col("keep"), 1).otherwise(0))).alias("kept_frac"),
         )
         .orderBy("lang")
     )
@@ -398,10 +382,7 @@ def pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_url").cast("bigint").alias("urls_found"),
         F.sum("n_digits").cast("bigint").alias("digit_runs_found"),
         F.sum(F.col("len_raw") - F.col("len_clean")).cast("bigint").alias("chars_removed"),
-        # scale-0 display round (r11 migration): exact integer mean
-        F.round(
-            F.round(F.avg("len_clean") * 1e6).cast("bigint") / F.lit(1e6), 6
-        ).alias("mean_clean_len"),
+        round6(F.avg("len_clean")).alias("mean_clean_len"),
     )
 
 
@@ -816,12 +797,8 @@ def bm25_search(
         ).where(F.lit(False))
 
     # per-TERM score quantized to integer micro-units before the per-doc
-    # sum (the DSIR pattern, applied r12): each term's score is computed
-    # from exact integers identically on both engines, but a double SUM
-    # over terms is partial-aggregation-order dependent — integer
-    # accumulation is order-proof, and the display is one exact /1e6.
-    # Identical arithmetic to the pre-r15 join shape: same idf/norm
-    # doubles, same per-term round — only the plan moved.
+    # sum: a double SUM over terms is partial-aggregation-order
+    # dependent, an integer sum is not
     def term_micro(i: int):
         df = float(stats[f"df_{i}"])
         idf = F.log(
@@ -830,9 +807,7 @@ def bm25_search(
         tf = F.col(f"tf_{i}")
         norm = tf + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
         score = idf * (tf * (k1 + 1.0)) / norm
-        return F.when(tf > 0, F.round(score * 1e6).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
+        return F.when(tf > 0, to_micro(score)).otherwise(F.lit(0).cast("bigint"))
 
     total_micro = term_micro(0)
     for i in range(1, len(q_terms)):
@@ -1056,13 +1031,7 @@ def _clean_corpus_pipeline_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(is_clean, F.col("n_rows")).otherwise(0)).cast("bigint").alias("n_clean"),
         F.count(F.when(is_clean, 1)).cast("bigint").alias("n_unique"),
         F.sum(F.when(is_clean, F.col("k.bpe"))).cast("bigint").alias("total_bpe_tokens"),
-        # integer mean displayed via the scale-0 form (r10)
-        F.round(
-            F.round(F.avg(F.when(is_clean, F.col("k.bpe"))) * 1e6)
-            .cast("bigint")
-            / F.lit(1e6),
-            6,
-        ).alias("mean_bpe"),
+        round6(F.avg(F.when(is_clean, F.col("k.bpe")))).alias("mean_bpe"),
     )
 
 
@@ -1201,17 +1170,14 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = docs.select("doc_id", _rep_struct_udf()(F.col("text")).alias("m"))
 
-    # scale-0 display rounds (r10 migration), applied IDENTICALLY in
-    # the expression twin so the bit-equality pin holds
-    def _disp6(c):
-        return F.round(F.round(c * 1e6).cast("bigint") / F.lit(1e6), 6)
-
+    # the expression twin rounds identically, so the bit-equality pin
+    # holds
     out = m.select(
         "doc_id",
-        _disp6(F.col("m.top2")).alias("top2_frac"),
-        _disp6(F.col("m.top3")).alias("top3_frac"),
-        _disp6(F.col("m.top4")).alias("top4_frac"),
-        _disp6(F.col("m.dup5")).alias("dup5_frac"),
+        round6(F.col("m.top2")).alias("top2_frac"),
+        round6(F.col("m.top3")).alias("top3_frac"),
+        round6(F.col("m.top4")).alias("top4_frac"),
+        round6(F.col("m.dup5")).alias("dup5_frac"),
     )
     return out.select(
         "*",
@@ -1239,16 +1205,11 @@ def repetition_stats_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[_word_ngrams(F.col("tk"), n).alias(f"g{n}") for n in (2, 3, 4, 5)],
     )
 
-    # the same scale-0 display rounds as the Arrow path (r10) — the
-    # bit-equality pin requires both engines share the exact form
-    def _disp6(c):
-        return F.round(F.round(c * 1e6).cast("bigint") / F.lit(1e6), 6)
-
     def top_frac(g):
         t = _top_gram_run(g)
         return F.when(
             (F.size(g) > 0) & (F.col("nc") > 0),
-            _disp6(
+            round6(
                 (t["best_run"] * F.length(t["best"])).cast("double")
                 / F.col("nc")
             ),
@@ -1256,7 +1217,7 @@ def repetition_stats_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dup5 = F.when(
         F.size("g5") > 0,
-        _disp6(
+        round6(
             (F.size("g5") - F.size(F.array_distinct("g5"))).cast("double")
             / F.size("g5")
         ),
@@ -1409,20 +1370,10 @@ def span_dedup_stats(
             F.coalesce("n_removed_tokens", F.lit(0)).cast("bigint").alias("n_removed_tokens"),
             F.when(
                 F.col("n_tokens") > 0,
-                # int/int ratio displayed via the scale-0 form (r10)
-                F.round(
-                    F.round(
-                        (
-                            1.0
-                            - F.coalesce(
-                                "n_removed_tokens", F.lit(0)
-                            ).cast("double")
-                            / F.col("n_tokens")
-                        )
-                        * 1e6
-                    ).cast("bigint")
-                    / F.lit(1e6),
-                    6,
+                round6(
+                    1.0
+                    - F.coalesce("n_removed_tokens", F.lit(0)).cast("double")
+                    / F.col("n_tokens")
                 ),
             )
             .otherwise(F.lit(1.0))
@@ -1547,19 +1498,10 @@ def line_dedup_stats(
             F.coalesce("kept_hash_sum", F.lit(0))
             .cast("bigint")
             .alias("kept_hash_sum"),
-            # scale-0 display round (r11 migration): the integer ratio
-            # pre-scales to 1e-6 display units, rounds at scale 0, and
-            # divides back — identical double math on both engines
             F.when(
                 F.coalesce("n_lines", F.lit(0)) > 0,
-                F.round(
-                    F.round(
-                        F.coalesce("n_kept", F.lit(0)).cast("double")
-                        / F.col("n_lines")
-                        * 1e6
-                    ).cast("bigint")
-                    / F.lit(1e6),
-                    6,
+                round6(
+                    F.coalesce("n_kept", F.lit(0)).cast("double") / F.col("n_lines")
                 ),
             )
             .otherwise(F.lit(1.0))
@@ -1746,10 +1688,7 @@ def source_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.coalesce(F.col("is_dup"), F.lit(0)))
             .cast("bigint")
             .alias("n_dup_docs"),
-            # scale-0 display round (r11 migration): exact integer mean
-            F.round(
-                F.round(F.avg("quality") * 1e6).cast("bigint") / F.lit(1e6), 6
-            ).alias("mean_quality"),
+            round6(F.avg("quality")).alias("mean_quality"),
         )
     )
 
@@ -1886,8 +1825,8 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive from the already-aggregated bigram-count table (vocab²-bounded,
     ≪ corpus) rather than a second pass over the stream; scoring is two
     hash equi-joins (bigram → c2, first-token → c1) and one (doc)
-    aggregation. Float discipline follows BM25/unigram: identical
-    integer-ratio-into-log arithmetic on both engines, round(avg, 6)."""
+    aggregation. Both engines run the same integer-ratio-into-log
+    arithmetic."""
     docs = _docs(spark, sf_dir)
     # tk is read twice (bigram build + vocab count) but both passes are
     # cheap row-local tokenization — recompute beats pinning a second
@@ -1923,23 +1862,17 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c1") + F.lit(int(vocab_size))).cast("double")
         / (F.col("c2") + F.lit(1.0))
     ) / F.log(F.lit(2.0))
-    # per-bigram surprisal quantizes to 1e-6-unit integers before the
-    # mean (the unigram/DSIR pattern, r11 migration) — exact integer
-    # sum, one divide, scale-0 display round
-    bits_u6 = F.round(bits * 1e6).cast("bigint")
-    return (
+    bits_u6 = to_micro(bits)
+    return release_pins_with(
         bigr.join(bg_counts, "bg")
         .withColumn("w1", F.split("bg", " ")[0])
         .join(ctx, "w1")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_bigrams"),
-            F.round(
-                F.round(F.sum(bits_u6) / F.count("*")).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("bits_per_bigram"),
-        )
+            from_micro(F.sum(bits_u6) / F.count("*")).alias("bits_per_bigram"),
+        ),
+        bigr,
     )
 
 
@@ -1955,9 +1888,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (term) aggregation builds the LM (map-side
     partials; vocab ≪ corpus), one equi-join scores the token stream
     (Spark auto-broadcasts a small vocab), one (doc) aggregation
-    averages. The BM25 float discipline applies: identical arithmetic
-    shape on both engines (``ln(N/tf)/ln(2)``, averaged, THEN rounded
-    to 6), so cross-engine drift stays sub-ulp and under the round."""
+    averages. Both engines run the same ``ln(N/tf)/ln(2)``."""
     docs = _docs(spark, sf_dir)
     terms = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("term")
@@ -1965,21 +1896,15 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = terms.groupBy("term").agg(F.count("*").alias("tf"))
     n_total = terms.count()
     bits = F.log(F.lit(float(n_total)) / F.col("tf")) / F.log(F.lit(2.0))
-    # per-token surprisal quantizes to 1e-6-unit integers before the
-    # mean (the DSIR pattern, r10 migration) — exact integer sum, one
-    # divide, scale-0 display round
-    bits_u6 = F.round(bits * 1e6).cast("bigint")
-    return (
+    bits_u6 = to_micro(bits)
+    return release_pins_with(
         terms.join(vocab, "term")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
-            F.round(
-                F.round(F.sum(bits_u6) / F.count("*")).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("bits_per_token"),
-        )
+            from_micro(F.sum(bits_u6) / F.count("*")).alias("bits_per_token"),
+        ),
+        terms,
     )
 
 
@@ -2001,18 +1926,13 @@ def quality_percentile_filter(
     thresholds matter because surprisal is not comparable across
     domains — a flat corpus-wide cut just deletes the rarest domain.
 
-    Float discipline: each TERM's surprisal is quantized to integer
-    micro-bits (``round(bits·10⁶)`` as bigint), so the per-doc
-    accumulation is exact integer math immune to partial-aggregation
-    summation order (the DSIR double-sum flake, fixed here too, r7);
-    the per-doc score STAYS an integer — one scale-0 round of Σbm/n
-    (identical on both engines) — and the quantile runs over those
-    integers, where midpoint interpolation is exactly representable
-    (r9: a quantile over 6dp-rounded DOUBLES flipped the last digit
-    between engines at sf0.1). The keep comparison is
-    ``bits_micro <= thr`` on the unrounded threshold, so the kept SET
-    is identical across engines; the display threshold micro-rounds at
-    scale 0 before the /1e6.
+    Each TERM's surprisal is quantized to integer micro-bits, so the
+    per-doc accumulation is exact integer math; the per-doc score STAYS
+    an integer and the quantile runs over those integers, where midpoint
+    interpolation is exactly representable (a quantile over rounded
+    DOUBLES flips the last digit between engines). The keep comparison
+    is ``bits_micro <= thr`` on the unrounded threshold, so the kept SET
+    is identical across engines.
 
     Scale shape: one (term) aggregation for the LM, one scoring join,
     one (doc) aggregation, one per-source exact percentile (each
@@ -2034,22 +1954,9 @@ def quality_percentile_filter(
     ).cache()
     vocab = terms.groupBy("term").agg(F.count("*").alias("tf"))
     n_total = terms.count()
-    # per-TERM surprisal quantized to integer micro-bits, so the per-doc
-    # accumulation is exact integer math — immune to partial-aggregation
-    # summation order (the DSIR double-sum flake, applied here r7)
-    bits_micro = (
-        F.round(
-            F.log(F.lit(float(n_total)) / F.col("tf"))
-            / F.log(F.lit(2.0))
-            * 1e6
-        )
-    ).cast("bigint")
-    # the per-doc score stays an INTEGER (micro-bits): one scale-0
-    # round of Σbm/n — identical on both engines — instead of a
-    # scale-6 round of the unscaled double, and the PERCENTILE runs
-    # over integers, where midpoint interpolation is exactly
-    # representable on both engines (r9 third-scale sweep find: the
-    # even-count median of two rounded doubles flipped the 6th digit)
+    bits_micro = to_micro(
+        F.log(F.lit(float(n_total)) / F.col("tf")) / F.log(F.lit(2.0))
+    )
     per_doc = (
         terms.join(vocab.withColumn("bm", bits_micro), "term")
         .groupBy("doc_id", "source")
@@ -2071,34 +1978,23 @@ def quality_percentile_filter(
             F.expr(f"percentile(bits_micro, {q})").alias("thr")
         )
     keep = F.col("bits_micro") <= F.col("thr")
-    return (
+    return release_pins_with(
         per_doc.join(F.broadcast(thr), "source")
         .groupBy("source")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
-            # display threshold micro-rounds at scale 0 first (an
-            # even-count median is x.5 micro-bits — exactly the 6dp
-            # half boundary the engines disagree on); the KEEP
-            # comparison above uses the unrounded thr, so the kept set
-            # is untouched
-            F.round(
-                F.round(F.max("thr")).cast("bigint") / F.lit(1e6), 6
-            ).alias("thr_bits"),
+            # an even-count median is x.5 micro-bits; the KEEP comparison
+            # above uses the unrounded thr, so the kept set is untouched
+            from_micro(F.max("thr")).alias("thr_bits"),
             F.sum(F.when(keep, 1).otherwise(0)).cast("bigint").alias("n_kept"),
-            # int/int ratio, scale-0 display (r12 ledger re-triage)
-            F.round(
-                F.round(
-                    F.sum(F.when(keep, 1).otherwise(0))
-                    / F.count("*").cast("double")
-                    * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.sum(F.when(keep, 1).otherwise(0)) / F.count("*").cast("double")
             ).alias("kept_frac"),
             F.sum(F.when(keep, F.col("n_tokens")).otherwise(0))
             .cast("bigint")
             .alias("kept_tokens"),
-        )
+        ),
+        terms,
     )
 
 
@@ -2127,14 +2023,10 @@ def dsir_importance_sample(
     ``(score_bits DESC, doc_id)`` and keep ``top_k``. Returns
     ``(rank, doc_id, source, lang, n_bigrams, score_bits)``.
 
-    Float discipline: the ratio is ONE log2 of integer products
-    (identical parenthesization in the oracle), immediately quantized
-    to integer MICRO-bits (round(lr·10⁶) as bigint) — so the per-doc
-    accumulation is EXACT integer arithmetic, immune to partial-
-    aggregation summation order (a double-sum here hash-flipped at the
-    6th decimal between runs depending on partitioning); one division
-    and one round at the end, and the rank orders by that rounded
-    score with doc_id as tiebreak.
+    The ratio is ONE log2 of integer products (identical
+    parenthesization in the oracle), immediately quantized to integer
+    micro-bits, so the per-doc accumulation is exact integer arithmetic;
+    the rank orders by the rounded score with doc_id as tiebreak.
 
     Scale shape (the 100 TB contract): bigrams form and hash
     row-locally, then ONE aggregation compresses the corpus into
@@ -2206,36 +2098,23 @@ def dsir_importance_sample(
     r_total, t_total = int(tot["r_total"]), int(tot["t_total"] or 0)
     lr = counts.select(
         "f",
-        F.round(
+        to_micro(
             F.log(
                 (F.col("t_f") + 1).cast("double")
                 * (r_total + n_buckets)
                 / ((F.col("r_f") + 1).cast("double") * (t_total + n_buckets))
             )
             / F.log(F.lit(2.0))
-            * 1e6
-        )
-        .cast("bigint")
-        .alias("lr_micro"),
+        ).alias("lr_micro"),
     )
-    # the per-doc mean stays in INTEGER micro-bits to the end: one
-    # scale-0 round of S/n (both engines round the identical double
-    # half-away-from-zero at scale 0), then one exact /1e6. Rounding
-    # the unscaled double at scale 6 instead let the engines disagree
-    # at exact-decimal boundaries — Spark rounds the double's exact
-    # binary expansion, DuckDB re-rounds through a ×1e6 multiply
-    # (r9 third-scale sweep find: S/(24·1e6) = 0.0313235 exactly)
+    # the per-doc mean stays in INTEGER micro-bits to the display
     scored = (
         feats.join(F.broadcast(lr), "f")
         .groupBy("doc_id", "source", "lang")
         .agg(
             F.sum("c").cast("bigint").alias("n_bigrams"),
-            F.round(
-                F.round(
-                    F.sum(F.col("c") * F.col("lr_micro")) / F.sum("c")
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            from_micro(
+                F.sum(F.col("c") * F.col("lr_micro")) / F.sum("c")
             ).alias("score_bits"),
         )
     )
@@ -2243,9 +2122,12 @@ def dsir_importance_sample(
     # then the rank window runs over ≤ top_k rows, not the corpus
     top = scored.orderBy(F.desc("score_bits"), F.asc("doc_id")).limit(top_k)
     win = Window.orderBy(F.desc("score_bits"), F.asc("doc_id"))
-    return top.withColumn(
-        "rank", F.row_number().over(win).cast("bigint")
-    ).select("rank", "doc_id", "source", "lang", "n_bigrams", "score_bits")
+    return release_pins_with(
+        top.withColumn("rank", F.row_number().over(win).cast("bigint")).select(
+            "rank", "doc_id", "source", "lang", "n_bigrams", "score_bits"
+        ),
+        feats,
+    )
 
 
 def trigram_backoff_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2279,9 +2161,8 @@ def trigram_backoff_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     left hash equi-joins of the position stream against those tables
     plus one doc aggregation. Tier 2 only fires when the (w2 w3) bigram
     was seen in fit, which implies w2 was too — so only the w3 lookup
-    needs the null-coalesced add-one. Float discipline: integer-count
-    ratios into ln/log2 with identical parenthesization in the DuckDB
-    oracle, round(avg, 6) once at the end."""
+    needs the null-coalesced add-one. Integer-count ratios go into
+    ln/log2 with identical parenthesization in the DuckDB oracle."""
     docs = _docs(spark, sf_dir)
     all_tk = docs.select("doc_id", tokens(F.col("text")).alias("tk"))
     tk = all_tk.where(F.col("doc_id") % 2 == 0)
@@ -2391,15 +2272,13 @@ def trigram_backoff_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     bits = -(F.log(s) / F.log(F.lit(2.0)))
-    # 1e-6-unit integer quantization before the mean (r11 migration —
-    # same recipe as unigram/bigram): exact sum, one divide, scale-0
-    bits_u6 = F.round(bits * 1e6).cast("bigint")
-    return scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_trigrams"),
-        F.round(
-            F.round(F.sum(bits_u6) / F.count("*")).cast("bigint") / F.lit(1e6),
-            6,
-        ).alias("bits_per_trigram"),
+    bits_u6 = to_micro(bits)
+    return release_pins_with(
+        scored.groupBy("doc_id").agg(
+            F.count("*").cast("bigint").alias("n_trigrams"),
+            from_micro(F.sum(bits_u6) / F.count("*")).alias("bits_per_trigram"),
+        ),
+        uni,
     )
 
 
@@ -2592,15 +2471,9 @@ def domain_mixture_sample(
             F.sum(F.when(F.col("keep"), F.col("bpe")).otherwise(0))
             .cast("bigint")
             .alias("kept_tokens"),
-            # int/int ratio displayed via the scale-0 form (r10)
-            F.round(
-                F.round(
-                    F.sum(F.when(F.col("keep"), F.col("bpe")).otherwise(0))
-                    / F.col("src_tokens").cast("double")
-                    * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.sum(F.when(F.col("keep"), F.col("bpe")).otherwise(0))
+                / F.col("src_tokens").cast("double")
             ).alias("realized_frac"),
         ),
         totals,
@@ -2664,15 +2537,8 @@ def encoding_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("repl").cast("bigint").alias("repl_chars"),
             F.sum("ctl").cast("bigint").alias("ctl_chars"),
             F.sum("non_ascii").cast("bigint").alias("non_ascii_chars"),
-            # int/int ratio displayed via the scale-0 form (r10)
-            F.round(
-                F.round(
-                    F.sum("non_ascii")
-                    / F.sum("n_chars").cast("double")
-                    * 1e6
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.sum("non_ascii") / F.sum("n_chars").cast("double")
             ).alias("non_ascii_ratio"),
         )
     )
@@ -2726,12 +2592,9 @@ def source_token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_s") * F.col("c_t")).cast("double")
         )
     )
-    # per-term KL contribution quantizes to 1e-6-unit integers before
-    # the sum (the DSIR pattern, r10 migration: a double sum is
-    # partition-order nondeterministic AND its scale-6 display round
-    # can flip between engines); /1e6 + round(,6) of the exact integer
-    # sum is the documented no-op-safe display
-    contrib_u6 = F.round(contrib * 1e6).cast("bigint")
+    # per-term KL contribution quantizes to micro-units before the sum
+    # (a double sum is partition-order nondeterministic)
+    contrib_u6 = to_micro(contrib)
     return release_pins_with(
         j.groupBy("source")
         .agg(
@@ -2831,14 +2694,8 @@ def ngram_novelty_curve(
             "n_grams",
             "n_distinct",
             "n_new",
-            # int/int ratio displayed via the scale-0 form (migrated at
-            # r12 promotion — the standing display-round discipline)
-            F.round(
-                F.round(
-                    F.col("n_new") / F.col("n_distinct").cast("double") * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            round6(
+                F.col("n_new") / F.col("n_distinct").cast("double")
             ).alias("novelty_frac"),
         )
     )
@@ -2862,10 +2719,10 @@ def tfidf_top_terms(
     vocabulary looks normal. Returns ``(source, rank, term, tf, df,
     score)`` ordered by (source, rank).
 
-    Float discipline: ``score = round(tf · ln(n_docs/df), 6)`` — an
-    integer ratio into ``ln`` then ONE multiply by an exact integer and
-    one round; no double summation anywhere. Rank ties break (score
-    desc, tf desc, term asc) so row_number is deterministic.
+    ``score = tf · ln(n_docs/df)``: an integer ratio into ``ln`` then
+    ONE multiply by an exact integer; no double summation anywhere.
+    Rank ties break (score desc, tf desc, term asc) so row_number is
+    deterministic.
 
     Scale shape: ONE corpus-scale shuffle — the (doc_id, source, term)
     pre-aggregation that collapses the token stream (map-side combine).
@@ -2939,15 +2796,9 @@ def tfidf_top_terms(
             "tf",
             "df",
             # exact integers through one IEEE log+multiply (identical
-            # doubles on both engines), scale-0 display (r12 re-triage)
-            F.round(
-                F.round(
-                    F.col("tf")
-                    * F.log(F.col("n_docs").cast("double") / F.col("df"))
-                    * F.lit(1e6)
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
+            # doubles on both engines)
+            round6(
+                F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df"))
             ).alias("score"),
         )
     )
@@ -2984,16 +2835,12 @@ def source_length_drift(
     looks normal. Returns ``(source, n_docs, ks_stat)`` ordered by
     source.
 
-    Float discipline: every CDF value is ONE division of two exact
-    integers (doc counts at or below a grid point); the decile grid is
-    Spark's exact ``percentile`` over integer lengths, which matches
-    DuckDB ``quantile_cont`` bit-for-bit. Each per-decile gap — a
-    DIFFERENCE of two such ratios, i.e. a composite double outside the
-    one-division-rounded-once safe class — quantizes to a 1e-6-unit
-    bigint FIRST (scale-0 round, the engines' shared class); the KS
-    max runs over those integers and one exact /1e6 converts back
-    (the r14 review caught the direct ``round(max(gap), 6)`` form —
-    the banned round-of-an-unscaled-double).
+    Every CDF value is ONE division of two exact integers (doc counts
+    at or below a grid point); the decile grid is Spark's exact
+    ``percentile`` over integer lengths, which matches DuckDB
+    ``quantile_cont`` bit-for-bit. Each per-decile gap (a DIFFERENCE of
+    two such ratios) quantizes to micro-units FIRST; the KS max runs
+    over those integers.
 
     Scale shape: one corpus-scale pass computes token counts row-locally
     and collapses to a (source, len) histogram in a single
@@ -3044,7 +2891,7 @@ def source_length_drift(
         F.col("le") / F.col("n_s").cast("double")
         - F.col("le_all") / F.col("n_all").cast("double")
     )
-    gap_u6 = F.round(gap * F.lit(1e6)).cast("bigint")
+    gap_u6 = to_micro(gap)
     return release_pins_with(
         per_sd.join(F.broadcast(corpus), "d")
         .groupBy("source")
@@ -3264,14 +3111,14 @@ def term_pmi_collocations(
     ``top_k`` pairs with pair count >= ``min_count``:
     ``(rank, bigram, pair_count, pmi)``.
 
-    Float discipline: with integer counts c12 (pair), c1/c2 (unigram),
-    Np (bigram positions), Nt (tokens),
+    With integer counts c12 (pair), c1/c2 (unigram), Np (bigram
+    positions), Nt (tokens),
 
         pmi = log2( (c12/Np) / ((c1/Nt)(c2/Nt)) )
 
     evaluates as ONE double expression with identical parenthesization
     in the DuckDB twin — every operand an exact integer cast once to
-    double — then takes the shared scale-0 display round. The rank
+    double. The rank
     tie-break (pmi desc at full double precision, c12 desc, bigram asc)
     is total.
 
@@ -3395,10 +3242,7 @@ def term_pmi_collocations(
             F.col("rank").cast("bigint").alias("rank"),
             F.col("bg").alias("bigram"),
             F.col("c12").cast("bigint").alias("pair_count"),
-            F.round(
-                F.round(F.col("pmi_full") * 1e6).cast("bigint") / F.lit(1e6),
-                6,
-            ).alias("pmi"),
+            round6(F.col("pmi_full")).alias("pmi"),
         )
         .orderBy("rank"),
         uni,
@@ -3419,13 +3263,12 @@ def zipf_slope(
     terms) as the distribution-level summary. Returns
     ``(source, n_terms, slope, intercept)`` ordered by source.
 
-    Float discipline: ranks and frequencies are exact integers; ln of
+    Ranks and frequencies are exact integers; ln of
     an integer is the identical double in both engines; the four OLS
     sums fold SEQUENTIALLY over the rank-sorted list (``F.aggregate``
     over ``array_sort``ed structs == DuckDB ``list_sum`` over
     ``ORDER BY``ed lists — the proven cross-engine fold), and slope/
-    intercept are single closed-form expressions of those sums, each
-    rounded once.
+    intercept are single closed-form expressions of those sums.
 
     Scale shape: the same single corpus shuffle as every vocabulary op
     (the (source, term) count with map-side combine); ranking windows
@@ -3467,18 +3310,13 @@ def zipf_slope(
     den = n * sxx - sx * sx
     slope = F.when(den != 0.0, (n * sxy - sx * sy) / den)
     # fold over an ORDER-PINNED array → identical doubles on both
-    # engines; the displays take the scale-0 form (r12 ledger re-triage)
-    def _r6(expr):
-        return F.round(
-            F.round(expr * F.lit(1e6)).cast("bigint") / F.lit(1e6), 6
-        )
-
+    # engines
     return (
         agg.select(
             "source",
             "n_terms",
-            _r6(slope).alias("slope"),
-            _r6(
+            round6(slope).alias("slope"),
+            round6(
                 F.when(den != 0.0, (sy - ((n * sxy - sx * sy) / den) * sx) / n)
             ).alias("intercept"),
         )
@@ -3503,7 +3341,7 @@ def weighted_sample_topk(
     across engines and runs because the randomness is a salted content
     hash, not an RNG. Returns ``(rank, doc_id, n_tokens, priority)``.
 
-    Float discipline: u = hash64(doc_id, salt)/2^60 is an exact-dyadic
+    u = hash64(doc_id, salt)/2^60 is an exact-dyadic
     double in (0, 1]; ``ln(u)/w`` is one log and one divide of
     identical doubles (the monotone transform of u^(1/w) — same order,
     no pow); ranking compares the rounded priority with a doc_id
@@ -3521,12 +3359,7 @@ def weighted_sample_topk(
     u = (hash64(F.col("doc_id").cast("string"), salt=salt) + 1).cast(
         "double"
     ) / F.lit(float(1 << 60))
-    # scale-0 display round (promoted at r11 with the migrated form):
-    # the ln(u)/w double pre-scales to 1e-6 units, rounds at scale 0
-    pri = F.round(
-        F.round(F.log(u) / w.cast("double") * 1e6).cast("bigint") / F.lit(1e6),
-        6,
-    )
+    pri = round6(F.log(u) / w.cast("double"))
     ranked = (
         docs.select("doc_id", w.alias("n_tokens"), pri.alias("priority"))
         .where(F.col("n_tokens") > 0)
@@ -3554,12 +3387,10 @@ def source_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     promotion candidate (pytest self-oracle; not in the driver
     contract yet).
 
-    Float discipline (the DSIR micro-bit pattern): each term's
-    contribution ``-(c/N)·log2(c/N)`` is computed as a double, rounded
-    to integer MICRO-bits (``round(v·10⁶)`` as bigint) PER TERM, then
-    exactly summed — sums of raw per-row transcendental doubles are
-    partial-agg-order nondeterministic; the micro-bit sum is exact and
-    the final ÷10⁶ + round(6) is display-only.
+    Each term's contribution ``-(c/N)·log2(c/N)`` is quantized to
+    integer micro-bits PER TERM, then exactly summed: sums of raw
+    per-row transcendental doubles are partial-agg-order
+    nondeterministic.
 
     Scale shape: one corpus-scale pass collapses to the (source, term)
     count table (map-side combined — the same single shuffle every
@@ -3577,7 +3408,7 @@ def source_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_types"),
     )
     p = F.col("c").cast("double") / F.col("n_tokens").cast("double")
-    ubits = F.round(-p * F.log2(p) * 1e6).cast("bigint")
+    ubits = to_micro(-p * F.log2(p))
     return (
         st.join(F.broadcast(totals), "source")
         .groupBy("source")

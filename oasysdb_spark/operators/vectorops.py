@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from oasysdb_spark.functions.stats import from_micro, round6, to_micro
 from oasysdb_spark.sources.tables import (
     memo,
     prepared_plan,
@@ -41,22 +42,12 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_cached(spark, f"{sf_dir}/embeddings.parquet")
 
 
-def round_dist(c, scale: int = 6):
-    """Display-round a distance at 10^-scale, cross-engine-safe.
-
-    Scale-0 form (the r9 lesson, migrated here in r11): rounding an
-    UNSCALED double at scale k is engine-divergent at exact decimal
-    boundaries (Spark rounds the double's binary expansion, DuckDB
-    re-rounds through a ×10^k multiply — last-digit flips ~1-in-1e6
-    values). Safe recipe both engines compute identically: pre-scale to
-    display units, round AT SCALE 0 (same double, half-away semantics
-    agree), cast to bigint, divide back. The trailing ``+ 0.0``
+def round_dist(c):
+    """Display-round a distance with ``round6``. The trailing ``+ 0.0``
     canonicalizes ``-0.0`` (a cosine self-match can land an ulp above
-    1.0; after the bigint round-trip the sign cannot survive, but every
-    oracle appends the same literal so the two sides stay term-for-term
-    mirrors)."""
-    unit = F.lit(float(10**scale))
-    return F.round(F.round(c * unit).cast("bigint") / unit, scale) + F.lit(0.0)
+    1.0); every oracle appends the same literal, so the two sides stay
+    term-for-term mirrors."""
+    return round6(c) + F.lit(0.0)
 
 
 def query_embedding(
@@ -298,18 +289,10 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
         )
         .groupBy("label", "pos")
-        # scale-0 display round over an exact integer mean: per-element
-        # values quantize to 1e-6 units BEFORE the sum (kills both the
-        # cross-engine last-digit flip and partition-order float drift)
+        # per-element values quantize to micro-units BEFORE the sum, so
+        # the mean is exact and partition-order free
         .agg(
-            F.round(
-                F.round(
-                    F.sum(F.round(F.col("val") * 1e6).cast("bigint"))
-                    / F.count("*")
-                ).cast("bigint")
-                / F.lit(1e6),
-                6,
-            ).alias("mean_val")
+            from_micro(F.sum(to_micro(F.col("val"))) / F.count("*")).alias("mean_val")
         )
         .select("label", F.col("pos").cast("int").alias("pos"), "mean_val")
     )
@@ -705,8 +688,8 @@ def sq_reconstruction_stats(
         F.greatest(F.lit(0), F.round((F.col("x") - F.col("lo")) * inv).cast("int")),
     )
     rec = F.col("lo") + code.cast("double") * step
-    em = F.round(F.abs(F.col("x") - rec) * 1e6).cast("bigint")
-    sm = F.round(step * 1e6).cast("bigint")
+    em = to_micro(F.abs(F.col("x") - rec))
+    sm = to_micro(step)
     return (
         elems.join(mm, "pos")
         .select("label", em.alias("em"), sm.alias("sm"))

@@ -4757,6 +4757,7 @@ def test_round6_half_up_matches_spark_round(spark):
     off a half."""
     import numpy as np
 
+    from oasysdb_spark.functions.stats import round6
     from oasysdb_spark.operators.dedup import _np_round6_half_up
     from oasysdb_spark.operators.vectorops import round_dist
 
@@ -4774,6 +4775,9 @@ def test_round6_half_up_matches_spark_round(spark):
                 df.select(round_dist(F.col("x")).alias("r")).collect()]
     for g, e, v in zip(got, expected, vals):
         assert g == e and not (g == 0.0 and str(g) == "-0.0"), (v, g, e)
+    expected6 = [r["r"] for r in df.select(round6(F.col("x")).alias("r")).collect()]
+    for g, e, v in zip(got, expected6, vals):
+        assert g == e and str(e) != "-0.0", (v, g, e)
 
 
 def test_compare_harness_detects_mismatches():

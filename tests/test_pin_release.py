@@ -17,6 +17,21 @@ def _persistent_rdd_ids(spark):
     return {int(k) for k in jmap.keySet().toArray()}
 
 
+def _entry(name):
+    return __import__("__spark_entry__").queries()[name]
+
+
+def _bloom_overlap_flags_split(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from oasysdb_spark.operators.dedup import bloom_overlap_flags, load_documents
+
+    docs = load_documents(spark, sf_dir)
+    return bloom_overlap_flags(
+        docs.where(F.col("doc_id") % 10 != 3), docs.where(F.col("doc_id") % 10 == 3)
+    )
+
+
 @pytest.mark.parametrize(
     "call",
     [
@@ -63,6 +78,13 @@ def _persistent_rdd_ids(spark):
         lambda sp, sf: __import__(
             "oasysdb_spark.index.pq", fromlist=["x"]
         ).pq_knn(sp, sf),
+        lambda sp, sf: _entry("ngram_decontaminate_stats")(sp, sf),
+        lambda sp, sf: _entry("ngram_contamination_report_stats")(sp, sf),
+        _bloom_overlap_flags_split,
+        lambda sp, sf: _entry("text_unigram_surprisal")(sp, sf),
+        lambda sp, sf: _entry("text_trigram_surprisal")(sp, sf),
+        lambda sp, sf: _entry("quality_percentile_filter")(sp, sf),
+        lambda sp, sf: _entry("dsir_importance_sample")(sp, sf),
     ],
     ids=[
         "join_key_skew_stats",
@@ -80,6 +102,13 @@ def _persistent_rdd_ids(spark):
         "simhash_wide_pairs",
         "multimodal_dhash_near_pairs",
         "pq_knn",
+        "ngram_decontaminate_stats",
+        "ngram_contamination_report_stats",
+        "bloom_overlap_flags",
+        "text_unigram_surprisal",
+        "text_trigram_surprisal",
+        "quality_percentile_filter",
+        "dsir_importance_sample",
     ],
 )
 def test_single_shot_pins_release_via_release_frame(spark, sf_dir, call):
