@@ -71,6 +71,8 @@ RECORD_SCHEMA = T.StructType(
     ]
 )
 
+_UPDATE_SCHEMA = T.StructType([RECORD_SCHEMA["id"], *RECORD_SCHEMA.fields[2:]])
+
 _PARAMS_FILE = "params.json"
 _JDBC_SYNC_FILE = "jdbc_sync.json"
 
@@ -1050,10 +1052,7 @@ class Database:
         rows describing how the records table moved from ``version`` to
         ``to_version`` (default: the current version), with ``change`` ∈
         ``{'added', 'deleted', 'updated'}``; unchanged records don't
-        appear. Note that appends land in the current version IN PLACE
-        (no pointer swap — see ``VersionedTable.append``), so rows
-        appended since the last rewrite show as 'added' relative to any
-        older snapshot.
+        appear.
 
         Scale shape: ONE full-outer equi-join on ``id`` between the two
         snapshot scans; change detection hashes a row-local md5 content
@@ -1168,14 +1167,9 @@ class Database:
         extra scans, the same in-task-guard pattern as
         ``similarity_join.typed_overlength_errors`` — and the job error
         is translated back to the typed :class:`InvalidArgumentError` at
-        this API boundary. Failure atomicity is the output committer's:
-        under Spark's default v1 FileOutputCommitter a failed append
-        job publishes NO files into the live version (task outputs stay
-        in ``_temporary`` until job commit), so a refused batch leaves
-        the table unchanged; direct-write committers (e.g. cloud-store
-        magic committers, algorithm v2) weaken that to per-task
-        atomicity — on such deployments validate the batch eagerly or
-        route bulk loads through a staging collection + swap.
+        this API boundary. A refused batch leaves the table unchanged: the
+        append builds the next version beside the current one and a
+        failed commit never moves the pointer.
         """
         df = self._with_dim_guard(normalize_records(df))
         with self._dim_guard_boundary():
@@ -1327,36 +1321,10 @@ class Database:
     def update_metadata(self, record_id: str, metadata: dict[str, Any]) -> None:
         """Replace a record's **entire** metadata map (not a merge); the
         vector is immutable (/root/reference/src/cores/storage.rs:50-70)."""
-        current = self.records_df()
-        hit = F.col("id") == F.lit(record_id)
         m_text, m_num, m_bool = split_metadata(metadata)
-
-        def _apply(df: DataFrame) -> DataFrame:
-            return (
-                df.withColumn(
-                    "m_text", F.when(hit, _map_expr(m_text, "string")).otherwise(F.col("m_text"))
-                )
-                .withColumn(
-                    "m_num", F.when(hit, _map_expr(m_num, "double")).otherwise(F.col("m_num"))
-                )
-                .withColumn(
-                    "m_bool", F.when(hit, _map_expr(m_bool, "boolean")).otherwise(F.col("m_bool"))
-                )
-            )
-
-        if self._indexed(current):
-            # locate the record's cluster and rewrite ONLY that partition
-            # (copy-on-write; every other partition is hardlinked)
-            rows = current.where(hit).select("cluster_id").take(1)
-            if not rows:
-                raise errors.NotFoundError(f"record {record_id!r} not found")
-            cluster = rows[0]["cluster_id"]
-            updated = _apply(current.where(F.col("cluster_id") == cluster))
-            self.records.rewrite_partitions(updated, "cluster_id", [cluster])
-        else:
-            if current.where(hit).isEmpty():
-                raise errors.NotFoundError(f"record {record_id!r} not found")
-            self.records.write(_apply(current))
+        self.update_metadata_batch(
+            tiny_df(self.spark, [(record_id, m_text, m_num, m_bool)], _UPDATE_SCHEMA)
+        )
 
     def update_metadata_batch(self, updates: DataFrame) -> None:
         """Bulk whole-map metadata replace: ``updates`` carries ``(id,
@@ -1832,15 +1800,3 @@ def _top(df: DataFrame, col: str, n: int, per_query: bool) -> DataFrame:
         .where(F.col("__rn") <= n)
         .drop("__rn")
     )
-
-
-def _map_expr(mapping: dict, value_type: str):
-    """Literal map column of the given value type; empty → null map (the
-    typed-map analog of an absent metadata section)."""
-    if not mapping:
-        return F.lit(None).cast(f"map<string,{value_type}>")
-    args = []
-    for k, v in mapping.items():
-        args.append(F.lit(k))
-        args.append(F.lit(v).cast(value_type))
-    return F.create_map(*args)

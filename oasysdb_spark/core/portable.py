@@ -87,10 +87,7 @@ def _fingerprint_expr():
 def _state(df: DataFrame) -> DataFrame:
     """The rsync-style signature table: ``(id, k)`` with ``k`` the
     per-row content fingerprint. ~1/1000th the record size, it is what
-    a delta export diffs against — NEVER a local table version, because
-    ``VersionedTable.append`` writes into the current version IN PLACE,
-    so a version dir recorded as 'the base' would silently absorb rows
-    appended after the hand-off."""
+    a delta export diffs against."""
     return _canonical(df).select(F.col("id"), _fingerprint_expr().alias("k"))
 
 
@@ -304,12 +301,8 @@ def export_delta(db, out_dir: str, base_snapshot_dir: str,
 
     The base is the previous snapshot directory (full or delta), whose
     ``state/`` table holds the rsync-style ``(id, fingerprint)``
-    signature of exactly what the receiver has. Diffing against THAT —
-    never against a local table version — is what makes the delta
-    sound: ``VersionedTable.append`` writes into the current version in
-    place, so any "as-of version" base would silently absorb rows
-    appended after the hand-off and the delta would miss them (found by
-    this module's own round-trip test).
+    signature of exactly what the receiver has, so the delta needs no
+    local table version to survive GC until the next hand-off.
 
     The delta carries the full NEW row for every added/updated id (one
     join of the signature tables — only (id, 8-byte fp) pairs shuffle,

@@ -22,6 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from oasysdb_spark.core.config import atomic_write_text
+from oasysdb_spark.sources.tables import memo
 
 _LATEST = "_LATEST"
 
@@ -47,7 +48,15 @@ class VersionedTable:
         return os.path.join(self.root, v)
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.current_path())
+        """The current version, resolved once per session and version: the
+        memo entry is keyed by the table root and signed by the version
+        directory, so a commit (which moves the pointer) replaces it and a
+        directory removed by GC never hits."""
+        path = self.current_path()
+        return memo(
+            spark, "table", os.path.abspath(self.root), (path,),
+            lambda: spark.read.parquet(path),
+        )
 
     def versions(self) -> list[str]:
         """All retained version names, oldest first (bounded by the
@@ -108,17 +117,8 @@ class VersionedTable:
         partition_by: list[str] | None = None,
         keep_versions: int = 2,
     ) -> str:
-        """Write df as the next version and swap the pointer atomically."""
-        os.makedirs(self.root, exist_ok=True)
-        version = self._next_version()
-        path = os.path.join(self.root, version)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        atomic_write_text(os.path.join(self.root, _LATEST), version)
-        self._gc(keep_versions)
-        return version
+        """Write df as the whole next version and swap the pointer."""
+        return self._commit(df, partition_by, lambda entry: False, keep_versions)
 
     def rewrite_partitions(
         self,
@@ -140,42 +140,24 @@ class VersionedTable:
         cluster-partitioned records layout, where a single-id delete should
         not rewrite a 100 TB table.
         """
-        cur = self.current_path()
-        version = self._next_version()
-        path = os.path.join(self.root, version)
-        os.makedirs(path, exist_ok=True)
-        affected_dirs = {f"{partition_col}={v}" for v in affected_values}
-        for entry in os.listdir(cur):
-            if not entry.startswith(f"{partition_col}="):
-                continue
-            if entry in affected_dirs:
-                continue
-            src, dst = os.path.join(cur, entry), os.path.join(path, entry)
-            os.makedirs(dst, exist_ok=True)
-            for fname in os.listdir(src):
-                try:
-                    os.link(os.path.join(src, fname), os.path.join(dst, fname))
-                except OSError:  # pragma: no cover - non-hardlink filesystem
-                    shutil.copy2(os.path.join(src, fname), os.path.join(dst, fname))
-        if not df.isEmpty():
-            df.write.mode("append").partitionBy(partition_col).parquet(path)
-        atomic_write_text(os.path.join(self.root, _LATEST), version)
-        self._gc(keep_versions)
-        return version
+        prefix = f"{partition_col}="
+        affected_dirs = {f"{prefix}{v}" for v in affected_values}
+        return self._commit(
+            df,
+            [partition_col],
+            lambda entry: entry.startswith(prefix) and entry not in affected_dirs,
+            keep_versions,
+        )
 
     def append(self, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        """Append files into the current version (no pointer change).
-
-        Parquet file writes are atomic per-file; a reader that resolved the
-        version before the append simply sees the old file set. Used for
-        micro-batch inserts; full rewrites (delete/update/index build) go
-        through :meth:`write`.
+        """Commit the current rows plus ``df`` as the next version: the
+        current files are hardlinked, so an append writes only its own
+        rows. Used for micro-batch inserts.
 
         Appends are schema-checked against the current version: a
-        mismatched frame would otherwise SILENTLY write incompatible
-        parquet files into the live directory and poison every future
-        read — the failure mode transactional formats reject at commit
-        time, rejected here before any file lands.
+        mismatched frame would otherwise write incompatible parquet files
+        and poison every future read — the failure mode transactional
+        formats reject at commit time, rejected here before any file lands.
         """
         current = self.read(df.sparkSession)
         want = {f.name: f.dataType.simpleString() for f in current.schema.fields}
@@ -185,19 +167,50 @@ class VersionedTable:
                 f"append schema mismatch for {self.root}: table has {want}, "
                 f"frame has {got}"
             )
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.current_path())
+        self._commit(df, partition_by, lambda entry: True)
+
+    def _commit(self, df, partition_by, keep, keep_versions: int = 2) -> str:
+        """The one commit protocol: build ``v{n+1}`` from the current
+        version's top-level entries that ``keep(name)`` retains (hardlinked)
+        plus ``df``, then swap the pointer and GC. A failed commit removes
+        its directory and never moves the pointer; a directory that a
+        crashed process left under the new name is deleted first. So no
+        version changes after it is published."""
+        cur = self.current_version()
+        version = self._next_version()
+        path = os.path.join(self.root, version)
+        shutil.rmtree(path, ignore_errors=True)
+        try:
+            if cur is not None:
+                src = os.path.join(self.root, cur)
+
+                def skip(d, names):  # the job commit writes its own _SUCCESS
+                    if d != src:
+                        return []
+                    return [n for n in names if n.startswith(("_", "._")) or not keep(n)]
+
+                shutil.copytree(src, path, ignore=skip, copy_function=_link)
+            writer = df.write.mode("append")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)  # never list it in versions()
+            raise
+        atomic_write_text(os.path.join(self.root, _LATEST), version)
+        self._gc(keep_versions)
+        return version
 
     def _gc(self, keep: int) -> None:
-        try:
-            versions = sorted(
-                d for d in os.listdir(self.root) if d.startswith("v") and d[1:].isdigit()
-            )
-        except FileNotFoundError:
-            return
         current = self.current_version()
-        for v in versions[:-keep] if len(versions) > keep else []:
+        for v in self.versions()[:-keep]:
             if v != current:
                 shutil.rmtree(os.path.join(self.root, v), ignore_errors=True)
+
+
+def _link(src: str, dst: str) -> None:
+    """Hardlink a file; copy where the filesystem cannot link."""
+    try:
+        os.link(src, dst)
+    except OSError:  # pragma: no cover - non-hardlink filesystem
+        shutil.copy2(src, dst)

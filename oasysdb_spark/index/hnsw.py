@@ -702,9 +702,9 @@ def resident_candidates(
 def _records_fingerprint(db) -> dict:
     """Cheap change detector for the records table: version pointer +
     row count + a wrap-safe id-hash sum (each term < 2^20, so the sum
-    stays exact far past 2^40 rows under ANSI arithmetic). Updates and
-    deletes rewrite (new version); inserts append (count/sum change) —
-    every mutation moves at least one component. Deliberately
+    stays exact far past 2^40 rows under ANSI arithmetic). Every
+    mutation commits a new version, so every mutation moves at least
+    the version component. Deliberately
     CONSERVATIVE: a metadata-only update also bumps the version and
     flags the graph stale even though its edges (which depend only on
     vectors) are still valid — the version component is what catches a
@@ -823,15 +823,7 @@ def _validated_hnsw_meta(db) -> "tuple[dict, int]":
         meta = json.load(f)
     fp = meta["fingerprint"]
     cache = getattr(db, "_hnsw_cache", None)
-    cur_version = db.records.current_version()
-    # the version-DIR mtime catches appends: insert_batch writes new
-    # files INTO the current version (no pointer move), and adding a
-    # file bumps the directory's mtime
-    try:
-        dir_stamp = os.stat(db.records.current_path()).st_mtime_ns
-    except FileNotFoundError:
-        dir_stamp = 0
-    key = (stamp, cur_version, dir_stamp)
+    key = (stamp, db.records.current_version())
     if not (isinstance(cache, tuple) and cache[0] == key):
         now = _records_fingerprint(db)
         if now != fp:

@@ -24,6 +24,7 @@ Design:
 from __future__ import annotations
 
 import os
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -34,6 +35,15 @@ from oasysdb_spark.functions.time import epoch_ms
 
 _STARTED = "_oasys_epoch_started"
 _COMMITTED = "_oasys_epoch_committed"
+
+
+def _round6(x: float) -> float:
+    """``x`` rounded to 6 decimals as the batch twins' ``F.round(x, 6)``
+    rounds a double: HALF_UP over its shortest decimal repr, not over the
+    exact binary expansion (Python's ``round`` is banker's over that)."""
+    return float(
+        Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+    )
 
 
 def _read_epoch(path: str) -> int:
@@ -63,9 +73,9 @@ def make_epoch_idempotent_ingest(
     A replay that finds ``started == epoch > committed`` is recovering
     from a crash inside step 3, so — only on that path — the batch is
     anti-joined by ``id`` against the current records table to drop
-    already-appended rows (Spark's job-commit protocol makes a crashed
-    append either invisible or file-complete, and visible rows are what
-    the anti-join removes). The happy path costs two tiny file writes and
+    already-appended rows (an append publishes its rows only at its
+    version's pointer swap, and visible rows are what the anti-join
+    removes). The happy path costs two tiny file writes and
     never touches the records table; recovery requires records to carry
     stable ``id`` values, which the ingest schema mandates.
 
@@ -423,20 +433,10 @@ def decontaminate_stream_flags(
     state_schema = "emitted boolean"
 
     def _jaccard6(sh_t, sh_e) -> float:
-        # Spark F.round is HALF_UP over the double's exact expansion —
-        # Decimal(float) reproduces it exactly (Python round is banker's)
-        from decimal import ROUND_HALF_UP, Decimal
-
         a, b = set(sh_t), set(sh_e)
         inter = len(a & b)
         union = len(a) + len(b) - inter
-        if union == 0:
-            return 0.0
-        return float(
-            Decimal(inter / union).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
+        return _round6(inter / union) if union else 0.0
 
     def _best(key, pdfs, state: GroupState):
         rows = pd.concat(list(pdfs))
@@ -525,8 +525,6 @@ def ngram_overlap_stream_flags(
     state_schema = "emitted boolean"
 
     def _flags(key, pdfs, state: GroupState):
-        from decimal import ROUND_HALF_UP, Decimal
-
         rows = pd.concat(list(pdfs))
         empty = pd.DataFrame(
             columns=["doc_id", "n_grams", "n_hit_positions", "hit_frac"]
@@ -541,14 +539,7 @@ def ngram_overlap_stream_flags(
         rows = rows.drop_duplicates(subset=["pos"])
         n_grams = int(rows["h"].notna().sum())
         n_hit = int(rows["hit"].notna().sum())
-        if n_grams > 0:
-            frac = float(
-                Decimal(n_hit / n_grams).quantize(
-                    Decimal("0.000001"), rounding=ROUND_HALF_UP
-                )
-            )
-        else:
-            frac = 0.0
+        frac = _round6(n_hit / n_grams) if n_grams else 0.0
         state.update((True,))
         yield pd.DataFrame(
             [(int(key[0]), n_grams, n_hit, frac)],

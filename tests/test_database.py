@@ -498,11 +498,9 @@ def test_snapshot_diff(spark, tmp_path, capsys):
     """db.diff(v_old[, v_new]) reports exactly the added/deleted/updated
     ids between two retained snapshots — metadata-only updates count as
     'updated', untouched rows don't appear, diff(v, v) is empty, and the
-    CLI `diff` verb emits the same delta. Appends land in the CURRENT
-    version in place (no pointer swap), so they show up as 'added' when
-    diffing an older snapshot against the current one; the default
-    retention keeps 2 versions, so diffs run against adjacent
-    snapshots (the realistic usage under GC)."""
+    CLI `diff` verb emits the same delta. The default retention keeps 2
+    versions, so diffs run against adjacent snapshots (the realistic
+    usage under GC)."""
     import json
 
     from oasysdb_spark.cli import main
@@ -527,18 +525,16 @@ def test_snapshot_diff(spark, tmp_path, capsys):
     }
     assert db.diff(v2, v2).count() == 0
 
-    db.insert([9.0, 9.0], record_id="d9")  # append INTO v3, no new version
-    assert db.records.current_version() == v3
-    assert {(r["change"], r["id"]) for r in db.diff(v2).collect()} == {
-        ("deleted", "d2"),
+    db.insert([9.0, 9.0], record_id="d9")  # append -> v4
+    assert db.records.current_version() != v3
+    assert {(r["change"], r["id"]) for r in db.diff(v3).collect()} == {
         ("added", "d9"),
     }
 
-    assert main(["diff", "--dir", d, "--from", v2]) == 0
+    assert main(["diff", "--dir", d, "--from", v3]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["changes"] == [
         {"change": "added", "id": "d9"},
-        {"change": "deleted", "id": "d2"},
     ]
 
 

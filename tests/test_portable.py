@@ -174,10 +174,8 @@ def test_portable_delta_chain_roundtrip(spark, tmp_path):
     batch metadata replace), the base-fingerprint PRECONDITION refuses
     an out-of-order apply, and the end-fingerprint POSTCONDITION proves
     each application equals a full re-export. Each hop diffs against the
-    PRIOR SNAPSHOT's state table — crucially, hop 1 includes rows
-    APPENDED after the full export (appends land in the current table
-    version IN PLACE, so an as-of-version base would absorb them and
-    silently drop them from the delta — the bug this design retired)."""
+    PRIOR SNAPSHOT's state table, and hop 1 includes rows APPENDED after
+    the full export."""
     src_dir = str(tmp_path / "src")
     db = _mk_source_db(spark, src_dir)
     out_full = str(tmp_path / "full")

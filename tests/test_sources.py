@@ -72,7 +72,6 @@ def test_versioned_table_time_travel_and_compaction(spark, tmp_path):
 
     t = VersionedTable(str(tmp_path / "vt"))
     t.write(spark.range(0, 100).withColumn("v", F.col("id") * 2))
-    v1 = t.current_version()
     for i in range(5):  # five appended micro-batches -> many small files
         t.append(spark.range(100 + i * 10, 110 + i * 10).withColumn("v", F.col("id") * 2))
     files_before = [
@@ -80,6 +79,7 @@ def test_versioned_table_time_travel_and_compaction(spark, tmp_path):
     ]
     assert len(files_before) > 4
 
+    v_pre = t.current_version()
     v2 = t.compact(spark, target_partitions=1)
     assert t.current_version() == v2
     files_after = [
@@ -90,9 +90,9 @@ def test_versioned_table_time_travel_and_compaction(spark, tmp_path):
     # the row multiset survives compaction
     assert t.read(spark).agg(F.sum("v")).first()[0] == sum(2 * i for i in range(150))
 
-    # time travel: v1 (pre-compaction, incl. its appends) is still retained
-    assert v1 in t.versions()
-    assert t.read_version(spark, v1).count() == 150  # appends went into v1
+    # time travel: the pre-compaction version (incl. the appends) is retained
+    assert v_pre in t.versions()
+    assert t.read_version(spark, v_pre).count() == 150
     import pytest as _pytest
 
     with _pytest.raises(FileNotFoundError):

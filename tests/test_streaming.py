@@ -815,6 +815,37 @@ def test_ngram_overlap_stream_matches_batch_and_survives_restart(
     assert got_shuffled == expected
 
 
+def test_ngram_overlap_stream_rounds_hit_frac_like_batch(spark, tmp_path):
+    """3 hits over 640 positions: 3/640 sits on a 6-dp half, where the
+    double's shortest repr (0.0046875) rounds up but its exact binary
+    expansion rounds down. The stream must report batch's F.round value."""
+    from oasysdb_spark.operators.dedup import ngram_overlap_flags
+    from oasysdb_spark.streaming.ingest import ngram_overlap_stream_flags
+
+    words = [f"w{i}" for i in range(647)]  # 640 8-gram positions
+    train = spark.createDataFrame([(1, " ".join(words))], "doc_id bigint, text string")
+    evals = spark.createDataFrame(
+        [(10 + j, " ".join(words[p:p + 8])) for j, p in enumerate((0, 100, 200))],
+        "doc_id bigint, text string",
+    )
+    want = [tuple(r) for r in ngram_overlap_flags(train, evals).collect()]
+    assert want == [(1, 640, 3, 0.004688)]
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    train.write.parquet(src)
+    q = (
+        ngram_overlap_stream_flags(spark.readStream.schema(train.schema).parquet(src), evals)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination(120)
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == want
+
+
 def test_line_dedup_stream_matches_batch_and_survives_restart(
     spark, sf_dir, tmp_path
 ):
