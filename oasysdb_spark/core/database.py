@@ -60,6 +60,7 @@ from oasysdb_spark.sources.jdbc import (
     watermark_range_predicates,
     watermark_state,
 )
+from oasysdb_spark.sources.tables import memo
 
 RECORD_SCHEMA = T.StructType(
     [
@@ -244,8 +245,6 @@ class Database:
         self.params = params
         self.records = VersionedTable(os.path.join(directory, "records"))
         self.centroids = VersionedTable(os.path.join(directory, "centroids"))
-        self._centroid_cache: list[tuple[int, list[float]]] | None = None
-        self._pq_cache = None  # codebooks, loaded lazily by index.pq
 
     # ------------------------------------------------------------------
     # lifecycle: configure / open / heartbeat / snapshot
@@ -1420,7 +1419,6 @@ class Database:
             return
         cents = self.centroids.read(self.spark)
         self.centroids.write(cents.where(~F.col("cluster_id").isin(cluster_ids)))
-        self._centroid_cache = None
 
     # ------------------------------------------------------------------
     # query
@@ -1508,7 +1506,7 @@ class Database:
           nodes), where the answer is exact: a selective filter degrades
           toward brute force instead of under-filling k. A graph older
           than the records is refused as stale
-          (``index.hnsw.load_hnsw_graph``)."""
+          (``index.hnsw.hnsw_serving_state``)."""
         if k <= 0:
             raise errors.InvalidArgumentError(
                 "k must be > 0 (/root/reference/src/cores/database.rs:321-325)"
@@ -1761,14 +1759,17 @@ class Database:
 
     def centroid_rows(self) -> list[tuple[int, list[float]]]:
         """``(cluster_id, centroid)`` pairs sorted by ``cluster_id`` — the
-        one centroid order, so position ties rank the same everywhere."""
-        if self._centroid_cache is None:
-            rows = self.centroids.read(self.spark).select("cluster_id", "centroid").collect()
-            self._centroid_cache = sorted((r["cluster_id"], list(r["centroid"])) for r in rows)
-        return self._centroid_cache
+        one centroid order, so position ties rank the same everywhere.
+        Held in the session memo (kind ``centroids``, keyed by the table
+        root, signed by its current version directory), so every handle
+        on this directory sees a centroid rewrite by any other."""
+        path = self.centroids.current_path()
 
-    def invalidate_centroid_cache(self) -> None:
-        self._centroid_cache = None
+        def compute():
+            rows = self.centroids.read(self.spark).select("cluster_id", "centroid").collect()
+            return sorted((r["cluster_id"], list(r["centroid"])) for r in rows)
+
+        return memo(self.spark, "centroids", os.path.abspath(self.centroids.root), (path,), compute)
 
     def _probe_cluster_ids(self, vecs: list[list[float]], probes: int) -> list[list[int]]:
         """For each query vector, the ids of its ``min(probes,

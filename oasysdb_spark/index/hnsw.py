@@ -36,7 +36,10 @@ serving op.
 from __future__ import annotations
 
 import hashlib
+import heapq
+import json
 import math
+import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -44,18 +47,22 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oasysdb_spark.sources.tables import read_parquet_cached
+from oasysdb_spark.sources.tables import memo, read_parquet_cached
 
 from oasysdb_spark.errors import InvalidArgumentError
 from oasysdb_spark.functions.hashing import hash64
 
-GRAPH_SCHEMA = (
-    "shard_id int, vec_id long, embedding array<float>, level int, "
-    "neighbors array<array<long>>"
-)
-
 HNSW_FILE = "hnsw.json"
 GRAPH_DIR = "hnsw_graph"
+_NO_LINKS = np.array([], dtype=np.int64)  # a node without neighbors
+
+
+def _graph_schema(id_type: str) -> str:
+    """The persisted graph's row schema for ``long`` or ``string`` ids."""
+    return (
+        f"shard_id int, vec_id {id_type}, embedding array<float>, "
+        f"level int, neighbors array<array<{id_type}>>"
+    )
 
 
 def node_level(vec_id, m: int) -> int:
@@ -73,6 +80,46 @@ def _select_nearest(dists, ids, m):
     the repo's deterministic tie-break."""
     order = np.lexsort((ids, dists))[:m]
     return ids[order]
+
+
+def _dist(vecs, c2, q, q2, nodes):
+    """Squared euclidean distances from ``q`` (squared norm ``q2``) to
+    ``nodes``, through the precomputed squared norms ``c2``."""
+    return c2[nodes] + q2 - 2.0 * (vecs[nodes] @ q)
+
+
+def _search_layer(vecs, c2, links, q, q2, eps, ef):
+    """The one HNSW beam search at one layer (``links``: node → neighbor
+    array) from the local entry nodes ``eps``, keeping the ``ef`` best.
+    Returns ``(dists, nodes)`` sorted by (dist, node)."""
+    eps = sorted(set(eps))
+    d0 = _dist(vecs, c2, q, q2, np.array(eps, dtype=np.int64))
+    visited = set(eps)
+    cand = [(float(d), e) for d, e in zip(d0, eps)]
+    heapq.heapify(cand)
+    res = [(-float(d), e) for d, e in zip(d0, eps)]
+    heapq.heapify(res)
+    while cand:
+        d_c, c = heapq.heappop(cand)
+        if d_c > -res[0][0] and len(res) >= ef:
+            break
+        nbs = [x for x in links.get(c, _NO_LINKS) if x not in visited]
+        if not nbs:
+            continue
+        visited.update(nbs)
+        nba = np.array(nbs, dtype=np.int64)
+        for d_nb, nb in zip(_dist(vecs, c2, q, q2, nba), nba):
+            d_nb = float(d_nb)
+            if len(res) < ef or d_nb < -res[0][0]:
+                heapq.heappush(cand, (d_nb, int(nb)))
+                heapq.heappush(res, (-d_nb, int(nb)))
+                if len(res) > ef:
+                    heapq.heappop(res)
+    out = sorted((-d, n_) for d, n_ in res)
+    return (
+        np.array([d for d, _ in out]),
+        np.array([n_ for _, n_ in out], dtype=np.int64),
+    )
 
 
 def build_hnsw_local(
@@ -96,47 +143,6 @@ def build_hnsw_local(
     levels = [node_level(i, m) for i in ids]
     max_level = max(levels)
     adj: list[dict[int, np.ndarray]] = [dict() for _ in range(max_level + 1)]
-    empty = np.array([], dtype=np.int64)
-
-    def dist_to(q, q2, nodes):
-        return c2[nodes] + q2 - 2.0 * (vecs[nodes] @ q)
-
-    def search_layer(q, q2, eps, ef, layer):
-        """Beam search at one layer; returns (dists, nodes) sorted by
-        (dist, node). eps is a list of local node indices."""
-        import heapq
-
-        eps = sorted(set(eps))
-        d0 = dist_to(q, q2, np.array(eps, dtype=np.int64))
-        visited = set(eps)
-        cand = [(float(d), e) for d, e in zip(d0, eps)]
-        heapq.heapify(cand)
-        res = [(-float(d), e) for d, e in zip(d0, eps)]
-        heapq.heapify(res)
-        while len(res) > ef:
-            heapq.heappop(res)
-        while cand:
-            d_c, c = heapq.heappop(cand)
-            if d_c > -res[0][0] and len(res) >= ef:
-                break
-            nbs = [x for x in adj[layer].get(c, empty) if x not in visited]
-            if not nbs:
-                continue
-            visited.update(nbs)
-            nba = np.array(nbs, dtype=np.int64)
-            nd = dist_to(q, q2, nba)
-            for d_nb, nb in zip(nd, nba):
-                d_nb = float(d_nb)
-                if len(res) < ef or d_nb < -res[0][0]:
-                    heapq.heappush(cand, (d_nb, int(nb)))
-                    heapq.heappush(res, (-d_nb, int(nb)))
-                    if len(res) > ef:
-                        heapq.heappop(res)
-        out = sorted((-d, n_) for d, n_ in res)
-        return (
-            np.array([d for d, _ in out]),
-            np.array([n_ for _, n_ in out], dtype=np.int64),
-        )
 
     entry, top = 0, levels[0]
     for i in range(1, n):
@@ -144,23 +150,22 @@ def build_hnsw_local(
         q, q2 = vecs[i], float(c2[i])
         ep = [entry]
         for lc in range(top, li, -1):
-            _, nodes = search_layer(q, q2, ep, 1, lc)
+            _, nodes = _search_layer(vecs, c2, adj[lc], q, q2, ep, 1)
             ep = [int(nodes[0])]
         for lc in range(min(top, li), -1, -1):
-            dists, nodes = search_layer(q, q2, ep, ef_construction, lc)
+            dists, nodes = _search_layer(
+                vecs, c2, adj[lc], q, q2, ep, ef_construction
+            )
             mmax = 2 * m if lc == 0 else m
             sel = _select_nearest(dists, nodes, m)
             adj[lc][i] = sel.copy()
             for nb in sel:
                 nb = int(nb)
-                cur = adj[lc].get(nb, empty)
-                merged = np.append(cur, i)
+                merged = np.append(adj[lc].get(nb, _NO_LINKS), i).astype(np.int64)
                 if len(merged) > mmax:
-                    md = dist_to(
-                        vecs[nb], float(c2[nb]), merged.astype(np.int64)
-                    )
-                    merged = _select_nearest(md, merged.astype(np.int64), mmax)
-                adj[lc][nb] = merged.astype(np.int64)
+                    md = _dist(vecs, c2, vecs[nb], float(c2[nb]), merged)
+                    merged = _select_nearest(md, merged, mmax)
+                adj[lc][nb] = merged
             ep = [int(x) for x in nodes]
         if li > top:
             entry, top = i, li
@@ -178,68 +183,48 @@ def search_hnsw_local(
     """Query one shard's graph: greedy descent from the global entry
     (max level, ties → min id) to layer 1, ef beam at layer 0. Returns
     (global_ids, dists) of the ef best, sorted by (dist, id)."""
-    import heapq
-
-    n = len(ids)
-    if n == 0:
+    if len(ids) == 0:
         return np.array([], dtype=np.int64), np.array([])
     c2 = (vecs**2).sum(axis=1)
+    return _search_shard((ids, vecs, c2, levels, adj), q, ef_search)
+
+
+def _search_shard(entry, q, ef_search: int):
+    """:func:`search_hnsw_local` over a decoded shard entry
+    ``(ids, vecs, c2, levels, adj)`` whose squared norms are computed."""
+    ids, vecs, c2, levels, adj = entry
     q = np.asarray(q, dtype=np.float64)
     q2 = float((q**2).sum())
-
-    def dist_to(nodes):
-        return c2[nodes] + q2 - 2.0 * (vecs[nodes] @ q)
-
     lv = np.asarray(levels)
     top = int(lv.max())
-    entry = int(np.flatnonzero(lv == top).min())
-    ep = [entry]
-    empty = np.array([], dtype=np.int64)
+    cur = int(np.flatnonzero(lv == top).min())
     for lc in range(top, 0, -1):
-        # greedy: move to the best neighbor until no improvement
-        cur = ep[0]
-        d_cur = float(dist_to(np.array([cur]))[0])
+        # greedy: move to the best neighbor until no improvement, ties
+        # on (distance, id)
+        d_cur = float(_dist(vecs, c2, q, q2, np.array([cur]))[0])
         improved = True
         while improved:
             improved = False
-            nbs = adj[lc].get(cur, empty)
+            nbs = adj[lc].get(cur, _NO_LINKS)
             if len(nbs) == 0:
                 break
-            nd = dist_to(nbs)
+            nd = _dist(vecs, c2, q, q2, nbs)
             j = int(np.lexsort((nbs, nd))[0])
             if (float(nd[j]), int(nbs[j])) < (d_cur, cur):
                 cur, d_cur = int(nbs[j]), float(nd[j])
                 improved = True
-        ep = [cur]
+    dists, loc = _search_layer(vecs, c2, adj[0], q, q2, [cur], ef_search)
+    return ids[loc], dists
 
-    # layer-0 beam (same loop as the build's search_layer, inlined so
-    # the serving path needs no closure over the build)
-    visited = set(ep)
-    d0 = dist_to(np.array(ep, dtype=np.int64))
-    cand = [(float(d), e) for d, e in zip(d0, ep)]
-    heapq.heapify(cand)
-    res = [(-float(d), e) for d, e in zip(d0, ep)]
-    heapq.heapify(res)
-    while cand:
-        d_c, c = heapq.heappop(cand)
-        if d_c > -res[0][0] and len(res) >= ef_search:
-            break
-        nbs = [x for x in adj[0].get(c, empty) if x not in visited]
-        if not nbs:
-            continue
-        visited.update(nbs)
-        nba = np.array(nbs, dtype=np.int64)
-        nd = dist_to(nba)
-        for d_nb, nb in zip(nd, nba):
-            d_nb = float(d_nb)
-            if len(res) < ef_search or d_nb < -res[0][0]:
-                heapq.heappush(cand, (d_nb, int(nb)))
-                heapq.heappush(res, (-d_nb, int(nb)))
-                if len(res) > ef_search:
-                    heapq.heappop(res)
-    out = sorted((-d, n_) for d, n_ in res)
-    loc = np.array([n_ for _, n_ in out], dtype=np.int64)
-    return ids[loc], np.array([d for d, _ in out])
+
+def _beam_rows(entry, qarr, ef_search: int) -> list:
+    """``(query_id, vec_id)`` rows of every query's beam through one
+    decoded shard — the one loop of the batched and resident paths."""
+    return [
+        (qid, g)
+        for qid, qv in qarr
+        for g in _search_shard(entry, qv, ef_search)[0].tolist()
+    ]
 
 
 def build_hnsw_shards(
@@ -293,17 +278,12 @@ def graph_from_df(
     ``id_type``)."""
     if m < 2:
         raise InvalidArgumentError(f"HNSW m must be >= 2, got {m}")
-    conv = int if id_type == "long" else str
-    schema = (
-        f"shard_id int, vec_id {id_type}, embedding array<float>, "
-        f"level int, neighbors array<array<{id_type}>>"
-    )
     sharded = df.select(
         "vec_id",
         "embedding",
         _shard_of(F.col("vec_id"), shards),
     ).repartition(shards, "shard_id")
-    return _build_shard_tasks(sharded, m, ef_construction, conv, schema)
+    return _build_shard_tasks(sharded, m, ef_construction, id_type)
 
 
 def _norm_expr(col):
@@ -354,11 +334,12 @@ def _shard_of(vec_id_col, shards: int):
     )
 
 
-def _build_shard_tasks(sharded, m, ef_construction, conv, schema):
+def _build_shard_tasks(sharded, m, ef_construction, id_type):
     """Per-shard sequential builds over a (vec_id, embedding, shard_id)
     frame — shared by the fresh build and the shard-incremental
     extension, so both produce the identical pure-function-of-content
     graph."""
+    conv = int if id_type == "long" else str
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = list(batches)
@@ -400,7 +381,7 @@ def _build_shard_tasks(sharded, m, ef_construction, conv, schema):
                 ],
             )
 
-    return sharded.mapInPandas(_build, schema=schema)
+    return sharded.mapInPandas(_build, schema=_graph_schema(id_type))
 
 
 def extend_hnsw_graph(
@@ -428,11 +409,6 @@ def extend_hnsw_graph(
     (≤ ``shards`` ints); pass-through rows never deserialize; the
     rebuild tasks are the same bounded per-shard jobs as the fresh
     build."""
-    conv = int if id_type == "long" else str
-    schema = (
-        f"shard_id int, vec_id {id_type}, embedding array<float>, "
-        f"level int, neighbors array<array<{id_type}>>"
-    )
     new_sharded = new_df.select(
         "vec_id",
         F.col("embedding").cast("array<float>").alias("embedding"),
@@ -451,7 +427,7 @@ def extend_hnsw_graph(
         .unionByName(new_sharded)
         .repartition(len(touched), "shard_id")
     )
-    rebuilt = _build_shard_tasks(union, m, ef_construction, conv, schema)
+    rebuilt = _build_shard_tasks(union, m, ef_construction, id_type)
     return keep.unionByName(rebuilt)
 
 
@@ -473,13 +449,7 @@ def batched_candidates(
     out_schema = f"query_id long, vec_id {id_type}"
 
     def _search(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"query_id": [], "vec_id": []})
-        ids, vecs, levels, adj = _decode_shard(pdf)
-        rows = []
-        for qid, qv in qarr:
-            got, _ = search_hnsw_local(ids, vecs, levels, adj, qv, ef_search)
-            rows.extend((qid, g) for g in got.tolist())
+        rows = _beam_rows(_decode_shard(pdf), qarr, ef_search) if len(pdf) else []
         return pd.DataFrame(rows, columns=["query_id", "vec_id"])
 
     return graph_df.groupBy("shard_id").applyInPandas(
@@ -492,7 +462,7 @@ def batched_candidates(
 # ---------------------------------------------------------------------------
 
 # Process-level decoded-shard cache: (graph_path, token, shard_id) →
-# (ids, vecs, levels, adj) or None for an empty shard. Lives in each
+# (ids, vecs, c2, levels, adj) or None for an empty shard. Lives in each
 # Python worker (reused across tasks — spark.python.worker.reuse, the
 # tokenizer's encode memoization precedent), so steady-state serving
 # reads the graph parquet once per (worker, shard) lifetime instead of
@@ -512,8 +482,6 @@ _RESIDENT_CACHE_BYTES: "dict[tuple, int]" = {}
 
 
 def _cache_budget_bytes() -> int:
-    import os
-
     try:
         return int(
             os.environ.get("OASYSDB_HNSW_CACHE_BYTES", 4 * 1024**3)
@@ -523,8 +491,8 @@ def _cache_budget_bytes() -> int:
 
 
 def _entry_nbytes(entry) -> int:
-    """Approximate resident size of one decoded shard: id + vector
-    arrays dominate; adjacency adds one int64 per edge. String-id
+    """Approximate resident size of one decoded shard: id, vector and
+    squared-norm arrays dominate; adjacency adds one int64 per edge. String-id
     shards (the Database serving path) decode to OBJECT-dtype id
     arrays whose ``nbytes`` is just 8 B of pointer per element — the
     Python str payloads are counted explicitly (utf-8 length + ~49 B
@@ -533,8 +501,8 @@ def _entry_nbytes(entry) -> int:
     boxed int (r8 ADVICE)."""
     if entry is None:
         return 64
-    ids, vecs, levels, adj = entry
-    n = int(vecs.nbytes) + 28 * len(levels)
+    ids, vecs, c2, levels, adj = entry
+    n = int(vecs.nbytes) + int(c2.nbytes) + 28 * len(levels)
     id_nbytes = getattr(ids, "nbytes", 8 * len(ids))
     if getattr(ids, "dtype", None) is not None and ids.dtype == object:
         id_nbytes += sum(len(str(s).encode("utf-8")) + 49 for s in ids)
@@ -547,7 +515,8 @@ def _entry_nbytes(entry) -> int:
 
 def _decode_shard(pdf: pd.DataFrame):
     """One shard's graph rows → numpy serving structures (sorted ids,
-    float64 vectors, levels, per-layer local-index adjacency)."""
+    float64 vectors, their squared norms — computed once per shard, not
+    per query — levels, per-layer local-index adjacency)."""
     pdf = pdf.sort_values("vec_id")
     ids = pdf["vec_id"].to_numpy()
     vecs = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
@@ -560,7 +529,7 @@ def _decode_shard(pdf: pd.DataFrame):
             adj[lc][i] = np.array(
                 [id_to_loc[x] for x in lst], dtype=np.int64
             )
-    return ids, vecs, levels, adj
+    return ids, vecs, (vecs**2).sum(axis=1), levels, adj
 
 
 def _resident_shard(graph_path: str, token: str, shard_id: int):
@@ -588,8 +557,6 @@ def _resident_shard(graph_path: str, token: str, shard_id: int):
     # a graph rewrite lands in a NEW version directory (pointer swap),
     # so superseded entries are keyed by the table's parent dir — same
     # table + same shard + any other (path, token) is dead weight
-    import os
-
     table_dir = os.path.dirname(str(graph_path).rstrip("/"))
     stale = [
         k
@@ -672,15 +639,7 @@ def resident_candidates(
                 entry, was_hit = _resident_shard(gpath, tok, int(s))
                 if miss_acc is not None and not was_hit:
                     miss_acc.add(1)
-                if entry is None:
-                    continue
-                ids, vecs, levels, adj = entry
-                rows = []
-                for qid, qv in qarr:
-                    got, _ = search_hnsw_local(
-                        ids, vecs, levels, adj, qv, ef
-                    )
-                    rows.extend((qid, g) for g in got.tolist())
+                rows = [] if entry is None else _beam_rows(entry, qarr, ef)
                 if rows:
                     yield pd.DataFrame(
                         rows, columns=["query_id", "vec_id"]
@@ -741,9 +700,6 @@ def build_hnsw(
     ingest re-encodes row-locally), graph edges are global state, so
     the maintenance contract is rebuild-on-mutation (the compact()
     schedule). Returns the number of graph rows."""
-    import json
-    import os
-
     from oasysdb_spark.core.config import atomic_write_text
     from oasysdb_spark.core.tables import VersionedTable
 
@@ -794,40 +750,40 @@ def build_hnsw(
             }
         ),
     )
-    db._hnsw_cache = None
     return n
 
 
-def _validated_hnsw_meta(db) -> "tuple[dict, int]":
-    """Staleness-validated ``hnsw.json`` meta plus its mtime stamp — the
-    shared gate for every serving entry point: a clean error when the
-    tier was never built or the records changed since the build (stale
-    edges would silently drop newly inserted rows from every result).
-    The freshness re-check is one count+sum aggregation, cached on the
-    handle and stamped by hnsw.json's mtime + the records version so
-    repeated queries don't re-aggregate an unchanged table."""
-    import json
-    import os
-
-    from oasysdb_spark.errors import InvalidArgumentError as _IAE
-
-    path = os.path.join(db.dir, HNSW_FILE)
+def _hnsw_meta(db, verb: str | None = None) -> dict:
+    """The one ``hnsw.json`` load: a clean error when the tier was never
+    built, phrased for serving (``verb=None``) or the maintenance verb."""
     try:
-        stamp = os.stat(path).st_mtime_ns
+        with open(os.path.join(db.dir, HNSW_FILE), encoding="utf-8") as f:
+            return json.load(f)
     except FileNotFoundError:
-        raise _IAE(
-            "HNSW tier not built: call oasysdb_spark.index.hnsw.build_hnsw "
-            "(or the build-hnsw CLI command) first"
-        ) from None
-    with open(path, encoding="utf-8") as f:
-        meta = json.load(f)
-    fp = meta["fingerprint"]
-    cache = getattr(db, "_hnsw_cache", None)
-    key = (stamp, db.records.current_version())
-    if not (isinstance(cache, tuple) and cache[0] == key):
-        now = _records_fingerprint(db)
+        how = (
+            f"call build_hnsw before {verb}"
+            if verb
+            else "call oasysdb_spark.index.hnsw.build_hnsw (or the "
+            "build-hnsw CLI command) first"
+        )
+        raise InvalidArgumentError(f"HNSW tier not built: {how}") from None
+
+
+def _validated_hnsw_meta(db) -> dict:
+    """Staleness-validated ``hnsw.json`` meta — the shared gate for every
+    serving entry point: a clean error when the tier was never built or
+    the records changed since the build (stale edges would silently drop
+    newly inserted rows from every result). The freshness re-check is
+    one count+sum aggregation, held in the session memo (kind ``hnsw``,
+    keyed by the database directory, signed by ``hnsw.json`` and the
+    records' current version directory); a stale graph raises inside the
+    compute, so nothing is stored."""
+
+    def compute():
+        meta = _hnsw_meta(db)
+        fp, now = meta["fingerprint"], _records_fingerprint(db)
         if now != fp:
-            raise _IAE(
+            raise InvalidArgumentError(
                 "HNSW graph is stale: records changed since build_hnsw "
                 f"(built at {fp}, records now {now}); for pure appends "
                 "run extend_hnsw (rebuilds only the touched shards), "
@@ -836,21 +792,10 @@ def _validated_hnsw_meta(db) -> "tuple[dict, int]":
                 "rebuild the graph (updates move global edge state no "
                 "ingest-local patch can fix)"
             )
-        db._hnsw_cache = (key,)
-    return meta, stamp
+        return meta
 
-
-def load_hnsw_graph(db) -> DataFrame:
-    """The persisted graph for serving as a DataFrame (extension and
-    equality tests); Database serving goes through
-    :func:`hnsw_serving_state` + :func:`resident_candidates` instead so
-    repeated queries stop re-scanning the table."""
-    import os
-
-    from oasysdb_spark.core.tables import VersionedTable
-
-    _validated_hnsw_meta(db)
-    return VersionedTable(os.path.join(db.dir, GRAPH_DIR)).read(db.spark)
+    sigs = (os.path.join(db.dir, HNSW_FILE), db.records.current_path())
+    return memo(db.spark, "hnsw", os.path.abspath(db.dir), sigs, compute)
 
 
 def hnsw_serving_state(db) -> "tuple[str, int, str, dict]":
@@ -866,11 +811,9 @@ def hnsw_serving_state(db) -> "tuple[str, int, str, dict]":
     a metadata refresh would force the full re-warm-up the residency
     rework exists to avoid (r8 review finding — old graphs stay
     CORRECT under tombstones, dead ids drop at the records join)."""
-    import os
-
     from oasysdb_spark.core.tables import VersionedTable
 
-    meta, _ = _validated_hnsw_meta(db)
+    meta = _validated_hnsw_meta(db)
     table = VersionedTable(os.path.join(db.dir, GRAPH_DIR))
     gpath = table.current_path()
     try:
@@ -918,6 +861,7 @@ def hnsw_knn(
     return exact.orderBy(F.col("distance").asc(), "vec_id").limit(k)
 
 
+
 def extend_hnsw(db, max_tombstones: int = 4096) -> int:
     """Shard-incremental ingest maintenance — the companion to
     :func:`build_hnsw`. ONE classification pass over (graph ⋈ records)
@@ -931,103 +875,18 @@ def extend_hnsw(db, max_tombstones: int = 4096) -> int:
       at the records join, serving widens ef by their count), bounded
       by ``max_tombstones``, so the normal ingest pattern of appends
       and deletes arriving TOGETHER needs one call, not a
-      refuse-deadlock (r8 review finding). The list is REPLACED with
-      the freshly-computed dead set each call, so a tombstoned id
-      re-inserted bit-identically (resurrection) leaves the list
-      automatically instead of accumulating toward a spurious
-      max_tombstones refusal;
+      refuse-deadlock;
     - **changed vectors** (id in both, stored vector ≠ graph vector —
       i.e. a delete + re-insert under the same id): REFUSED with the
-      rebuild error. This bit-compare is load-bearing: the previous
-      id-only check let a same-id re-insert slip through and serve
-      from its STALE graph position forever (r8 self-review). An
-      identical re-insert (streaming replay) bit-matches and is a
-      no-op, as replay safety requires.
+      rebuild error. This bit-compare is load-bearing: an id-only check
+      would let a same-id re-insert serve from its STALE graph position
+      forever. An identical re-insert (streaming replay) bit-matches
+      and is a no-op, as replay safety requires.
 
     Returns the number of new vectors indexed (0 = nothing to index;
     the fingerprint still refreshes so a metadata-only records version
     bump stops reading as stale)."""
-    import json
-    import os
-
-    from oasysdb_spark.core.config import atomic_write_text
-    from oasysdb_spark.core.tables import VersionedTable
-    from oasysdb_spark.errors import InvalidArgumentError as _IAE
-
-    path = os.path.join(db.dir, HNSW_FILE)
-    try:
-        with open(path, encoding="utf-8") as f:
-            meta = json.load(f)
-    except FileNotFoundError:
-        raise _IAE(
-            "HNSW tier not built: call build_hnsw before extend_hnsw"
-        ) from None
-    table = VersionedTable(os.path.join(db.dir, GRAPH_DIR))
-    graph = table.read(db.spark)
-    records = _graph_space_records(
-        db.records_df().select(F.col("id").alias("vec_id"), "embedding"),
-        meta.get("metric", "euclidean"),
-    )
-    # ONE persisted full-outer pass feeds every classification action
-    # below (counts, the dead-id collect, the extension input) — the
-    # unpersisted form re-ran the join per action, ~5-7 table scans
-    # per maintenance call (r8 review)
-    j = (
-        graph.select("vec_id", F.col("embedding").alias("g_emb"))
-        .join(records, "vec_id", "full_outer")
-        .persist()
-    )
-    try:
-        n_changed = j.where(
-            F.col("g_emb").isNotNull()
-            & F.col("embedding").isNotNull()
-            & (F.col("embedding").cast("array<float>") != F.col("g_emb"))
-        ).count()
-        if n_changed:
-            raise _IAE(
-                f"extend_hnsw found {n_changed} record(s) whose vector "
-                "changed since the build (delete + re-insert under the "
-                "same id) — serving them from their old graph position "
-                "would silently degrade recall: run build_hnsw to rebuild"
-            )
-        # the dead set (graph ids with no live record) IS the tombstone
-        # list — recomputing it wholesale rather than unioning onto the
-        # stored list reconciles RESURRECTIONS for free: a tombstoned id
-        # re-inserted bit-identically classifies as an unchanged
-        # survivor and simply leaves the list (r8 review — the union
-        # form let dead entries accumulate until a spurious
-        # max_tombstones rebuild refusal)
-        dead_df = j.where(F.col("embedding").isNull()).select("vec_id")
-        n_dead = dead_df.count()
-        if n_dead > max_tombstones:
-            raise _IAE(
-                f"{n_dead} tombstones exceed max_tombstones="
-                f"{max_tombstones}: the widened beams now cost more than "
-                "a rebuild amortizes — run build_hnsw"
-            )
-        tombs = sorted(r["vec_id"] for r in dead_df.collect())
-        new = j.where(F.col("g_emb").isNull()).select("vec_id", "embedding")
-        n_new = new.count()
-        if n_new:
-            extended = extend_hnsw_graph(
-                graph,
-                new,
-                shards=int(meta["shards"]),
-                m=int(meta["m"]),
-                ef_construction=int(meta["ef_construction"]),
-                id_type="string",
-            )
-            table.write(extended)
-    finally:
-        j.unpersist()
-    if tombs:
-        meta["tombstones"] = tombs
-    else:
-        meta.pop("tombstones", None)
-    meta["fingerprint"] = _records_fingerprint(db)
-    atomic_write_text(path, json.dumps(meta))
-    db._hnsw_cache = None
-    return n_new
+    return _maintain_hnsw(db, "extend_hnsw", max_tombstones)[0]
 
 
 def tombstone_hnsw(db, max_tombstones: int = 4096) -> int:
@@ -1045,86 +904,98 @@ def tombstone_hnsw(db, max_tombstones: int = 4096) -> int:
     (re-applying the build's normalization expression for cosine — an
     update would change the vector and is refused: serving a moved
     record from its old graph position silently degrades recall) or be
-    absent (a deletion). One maintenance-time join, no query-time cost
-    beyond the widened ef.
+    absent (a deletion). Records missing from the graph are refused
+    too: refreshing the fingerprint over them would disarm the
+    staleness gate, so index appends first (:func:`extend_hnsw`).
 
-    The list is REPLACED with the freshly-computed dead set each call
-    (resurrected ids leave it automatically); past ``max_tombstones``
-    the widened beams stop being "small overhead" and the call refuses
-    with the rebuild hint — that is the measured crossover to
-    build_hnsw (SURVEY §6). build_hnsw resets the list; extend_hnsw
-    maintains it in the same classification pass (its touched-shard
-    rebuilds re-index dead vectors — harmless: they stay tombstoned
-    and still drop at the join). Returns the TOTAL tombstone count now
-    in force."""
-    import json
-    import os
+    Past ``max_tombstones`` the widened beams stop being "small
+    overhead" and the call refuses with the rebuild hint — that is the
+    measured crossover to build_hnsw (SURVEY §6). build_hnsw resets the
+    list; extend_hnsw maintains it in the same classification pass (its
+    touched-shard rebuilds re-index dead vectors — harmless: they stay
+    tombstoned and still drop at the join). Returns the TOTAL tombstone
+    count now in force."""
+    return _maintain_hnsw(db, "tombstone_hnsw", max_tombstones)[1]
 
+
+def _maintain_hnsw(db, verb: str, max_tombstones: int) -> "tuple[int, int]":
+    """The one maintenance pass behind ``verb`` (``extend_hnsw`` or
+    ``tombstone_hnsw``): classify the records delta since the last
+    maintenance in one persisted full-outer join of the graph and the
+    graph-space records, refuse what the verb cannot absorb, replace the
+    tombstone list with the fresh dead set (a tombstoned id re-inserted
+    bit-identically leaves it), rebuild the shards that receive appends
+    (``extend_hnsw`` only) and write the meta with a fresh fingerprint.
+    Returns ``(appends indexed, tombstones in force)``."""
     from oasysdb_spark.core.config import atomic_write_text
     from oasysdb_spark.core.tables import VersionedTable
-    from oasysdb_spark.errors import InvalidArgumentError as _IAE
 
-    path = os.path.join(db.dir, HNSW_FILE)
-    try:
-        with open(path, encoding="utf-8") as f:
-            meta = json.load(f)
-    except FileNotFoundError:
-        raise _IAE(
-            "HNSW tier not built: call build_hnsw before tombstone_hnsw"
-        ) from None
-    graph = VersionedTable(os.path.join(db.dir, GRAPH_DIR)).read(db.spark)
+    meta = _hnsw_meta(db, verb)
+    table = VersionedTable(os.path.join(db.dir, GRAPH_DIR))
+    graph = table.read(db.spark)
     records = _graph_space_records(
         db.records_df().select(F.col("id").alias("vec_id"), "embedding"),
         meta.get("metric", "euclidean"),
     )
-    # ONE persisted full-outer pass classifies the whole delta —
-    # unindexed appends, updates, deletions — instead of a dedicated
-    # join per check (r8 review)
+    # ONE persisted pass feeds every action below (the counts, the
+    # dead-id collect, the extension input) instead of a join per action
     j = (
         graph.select("vec_id", F.col("embedding").alias("g_emb"))
         .join(records, "vec_id", "full_outer")
         .persist()
     )
     try:
-        # appended-but-unindexed records must be refused BEFORE the
-        # fingerprint refresh below: blessing them would disarm the
-        # staleness gate and those rows would silently never be served
-        # (r8 review finding) — index appends first, then tombstone
-        n_unindexed = j.where(F.col("g_emb").isNull()).count()
-        if n_unindexed:
-            raise _IAE(
-                f"tombstone_hnsw found {n_unindexed} record(s) not in "
+        new = j.where(F.col("g_emb").isNull()).select("vec_id", "embedding")
+        n_new = new.count()
+        if n_new and verb == "tombstone_hnsw":
+            raise InvalidArgumentError(
+                f"tombstone_hnsw found {n_new} record(s) not in "
                 "the graph (appended since the last build/extend): run "
                 "extend_hnsw first — refreshing the fingerprint over "
                 "un-indexed rows would silently drop them from every "
                 "result"
             )
-        # survivors must bit-match the graph's stored vector; a CHANGED
-        # vector is an update — refused
-        n_updated = j.where(
-            F.col("embedding").isNotNull()
-            & F.col("g_emb").isNotNull()
+        n_changed = j.where(
+            F.col("g_emb").isNotNull()
+            & F.col("embedding").isNotNull()
             & (F.col("embedding").cast("array<float>") != F.col("g_emb"))
         ).count()
-        if n_updated:
-            raise _IAE(
-                f"tombstone_hnsw handles pure deletes only: {n_updated} "
+        if n_changed and verb == "tombstone_hnsw":
+            raise InvalidArgumentError(
+                f"tombstone_hnsw handles pure deletes only: {n_changed} "
                 "record(s) changed their vector since the build (update "
                 "detected) — run build_hnsw to rebuild the graph"
             )
+        if n_changed:
+            raise InvalidArgumentError(
+                f"extend_hnsw found {n_changed} record(s) whose vector "
+                "changed since the build (delete + re-insert under the "
+                "same id) — serving them from their old graph position "
+                "would silently degrade recall: run build_hnsw to rebuild"
+            )
+        # bound the collect BEFORE collecting: a mass delete must refuse,
+        # not pull an unbounded id list to the driver (graph rows keep
+        # dead ids, so the dead set's count alone is the total)
         dead_df = j.where(F.col("embedding").isNull()).select("vec_id")
-        # bound the collect BEFORE collecting: a mass delete must
-        # refuse, not pull an unbounded id list to the driver (dead ⊇
-        # the already recorded tombstones — graph rows keep dead ids —
-        # so its count alone is the total)
         n_dead = dead_df.count()
         if n_dead > max_tombstones:
-            raise _IAE(
+            raise InvalidArgumentError(
                 f"{n_dead} tombstones exceed max_tombstones="
-                f"{max_tombstones}: the widened beams now cost more "
-                "than a rebuild amortizes — run build_hnsw"
+                f"{max_tombstones}: the widened beams now cost more than "
+                "a rebuild amortizes — run build_hnsw"
             )
         tombs = sorted(r["vec_id"] for r in dead_df.collect())
+        if n_new:
+            table.write(
+                extend_hnsw_graph(
+                    graph,
+                    new,
+                    shards=int(meta["shards"]),
+                    m=int(meta["m"]),
+                    ef_construction=int(meta["ef_construction"]),
+                    id_type="string",
+                )
+            )
     finally:
         j.unpersist()
     if tombs:
@@ -1132,6 +1003,5 @@ def tombstone_hnsw(db, max_tombstones: int = 4096) -> int:
     else:
         meta.pop("tombstones", None)
     meta["fingerprint"] = _records_fingerprint(db)
-    atomic_write_text(path, json.dumps(meta))
-    db._hnsw_cache = None
-    return len(tombs)
+    atomic_write_text(os.path.join(db.dir, HNSW_FILE), json.dumps(meta))
+    return n_new, len(tombs)

@@ -398,7 +398,6 @@ def _write_centroids(db, rows: list[tuple[int, list[float], int]]) -> None:
         db.spark, rows, "cluster_id int, centroid array<double>, size bigint"
     )
     db.centroids.write(df)
-    db.invalidate_centroid_cache()
 
 
 def assign_clusters(db, df: DataFrame) -> DataFrame:
@@ -436,7 +435,6 @@ def refresh_centroids(db) -> None:
         )
     )
     db.centroids.write(means)
-    db.invalidate_centroid_cache()
     # residual PQ codes quantize embedding − centroid: moving centroids
     # invalidates them, so the residual layout (if any) re-encodes here
     from oasysdb_spark.index.pq import reencode_residual_codes

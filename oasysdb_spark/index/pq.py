@@ -39,6 +39,7 @@ from oasysdb_spark.index.ivf import (
     topk_cluster_assigner,
 )
 from oasysdb_spark.session import release_pins_with, tiny_df
+from oasysdb_spark.sources.tables import memo
 
 
 def fit_codebooks(
@@ -378,7 +379,6 @@ def build_pq(
             }
         ),
     )
-    db._pq_cache = None  # next load_codebooks re-reads + stamps pq.json
     return books
 
 
@@ -418,33 +418,30 @@ def load_codebooks_meta(db) -> "tuple[np.ndarray, bool, np.ndarray | None] | Non
     is the OPQ matrix (None for plain PQ) — serving and ingest must
     honor both or scores are garbage.
 
-    Cached on the Database like the centroid rows, but STAMPED with
-    pq.json's mtime: a second handle that cached books before a
-    ``build_pq`` rebuild (different m/nbits/residual) would otherwise
-    encode new inserts with stale codebooks — wrong-length codes that
-    score NULL under ADC and silently vanish from approx queries. A stat
-    per call is the price of the invalidation, like the centroid cache's
-    invalidate-on-write."""
+    Held in the session memo (kind ``pq``, keyed and signed by
+    ``pq.json``), so every handle sees a ``build_pq`` rebuild (different
+    m/nbits/residual) by any other: stale codebooks would encode new
+    inserts into wrong-length codes that score NULL under ADC and
+    silently vanish from approx queries. An absent ``pq.json`` returns
+    None and stores nothing."""
     import json
     import os
 
     path = os.path.join(db.dir, PQ_FILE)
-    try:
-        stamp = os.stat(path).st_mtime_ns
-    except FileNotFoundError:
-        db._pq_cache = None
+    if not os.path.exists(path):
         return None
-    cached = getattr(db, "_pq_cache", None)
-    if isinstance(cached, tuple) and cached[0] == stamp:
-        return cached[1], cached[2], cached[3]
-    with open(path, encoding="utf-8") as f:
-        d = json.load(f)
-    books = np.asarray(d["codebooks"], dtype=np.float64)
-    residual = bool(d.get("residual", False))
-    raw_rot = d.get("rotation")
-    rot = None if raw_rot is None else np.asarray(raw_rot, dtype=np.float64)
-    db._pq_cache = (stamp, books, residual, rot)
-    return books, residual, rot
+
+    def compute():
+        with open(path, encoding="utf-8") as f:
+            d = json.load(f)
+        raw_rot = d.get("rotation")
+        return (
+            np.asarray(d["codebooks"], dtype=np.float64),
+            bool(d.get("residual", False)),
+            None if raw_rot is None else np.asarray(raw_rot, dtype=np.float64),
+        )
+
+    return memo(db.spark, "pq", os.path.abspath(path), (path,), compute)
 
 
 def _rerank_top_k(scored: DataFrame, embs: DataFrame, qvec, rerank: int, k: int) -> DataFrame:

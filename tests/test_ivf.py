@@ -180,6 +180,26 @@ def test_exact_tie_split_insert_probes_its_cluster(spark, tmp_path):
     assert stored == db._probe_cluster_ids([v], 1)[0][0] == ids[0]
 
 
+def test_second_handle_sees_a_rebuilt_index(spark, tmp_path):
+    """A handle that served a query before another handle rebuilt the
+    index assigns its next insert from the NEW centroids: the record is
+    stored in a live cluster, so an indexed query finds it."""
+    d = str(tmp_path / "rebuilt")
+    a = Database.configure(spark, d, dimension=4, density=8)
+    rows = [(f"r{c}-{i}", [10.0 * c + 0.1 * i] * 4, {}, {}, {})
+            for c in range(4) for i in range(8)]
+    a.insert_batch(spark.createDataFrame(rows, RECORD_SCHEMA))
+    assert build_index(a, seed=42) == 4
+    a.query([0.0] * 4, k=1)
+    b = Database.open(spark, d)
+    build_index(b, k=2, seed=42)
+    a.insert([20.0] * 4, record_id="late")
+    stored = a.records_df().where(F.col("id") == "late").first()["cluster_id"]
+    assert stored in [cid for cid, _ in b.centroid_rows()]
+    fresh = Database.open(spark, d)
+    assert [r["id"] for r in fresh.query([20.0] * 4, k=1, probes=100)] == ["late"]
+
+
 def _nearest_reference(x, cents, metric, keep):
     """Per-pair loop: Σ(c−x)² or 1 − x·c/(|x||c|), NaN last, ties by position."""
     out = []

@@ -192,3 +192,47 @@ def test_no_module_memo_outside_the_session_memo():
         for name in _module_memos(f.read_text())
     }
     assert found - _ALLOWED_MEMOS == set()
+
+
+def _cache_attributes(src: str):
+    """Names of attribute assignments (``x.foo_cache = ...``, plain,
+    annotated or augmented) whose target name ends in ``_cache``."""
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+            targets = [node.target]
+        else:
+            continue
+        for t in targets:
+            for sub in ast.walk(t):
+                if isinstance(sub, ast.Attribute) and sub.attr.endswith("_cache"):
+                    yield sub.attr
+
+
+def test_guard_detects_cache_attributes():
+    src = (
+        "class D:\n"
+        "    def __init__(self):\n"
+        "        self._centroid_cache: list | None = None\n"
+        "def f(db):\n"
+        "    db._hnsw_cache = None\n"
+        "    a, db.x_cache = 1, 2\n"
+        "    db.cache = {}\n"
+        "    _local_cache = {}\n"
+        "    return db._pq_cache\n"
+    )
+    assert sorted(_cache_attributes(src)) == ["_centroid_cache", "_hnsw_cache", "x_cache"]
+
+
+def test_no_per_handle_cache_attribute_outside_the_session_memo():
+    """Index state (centroids, PQ codebooks, the HNSW freshness check) is
+    cached only in the session memo, which every handle on a directory
+    shares and which a rewrite of the signed files invalidates."""
+    files = sorted(REPO.glob("oasysdb_spark/**/*.py")) + [REPO / "__spark_entry__.py"]
+    found = {
+        (str(f.relative_to(REPO)), name)
+        for f in files
+        for name in _cache_attributes(f.read_text())
+    }
+    assert found == set()
